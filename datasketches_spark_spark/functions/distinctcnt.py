@@ -37,21 +37,25 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from .. import conf
+from ..families import _family
+from ..sketches import ITEM_LONG, ITEM_STR
 from .udfs import (
+    _col,
+    accumulate_udf,
     combine_udf,
-    hll_acc_udf,
-    hll_direct_udf,
-    theta_acc_udf,
-    theta_direct_udf,
+    direct_udf,
     theta_est_udf,
     theta_setop_udf,
 )
 
 
-def _col(c) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+def ndv_udf(family: str, **params):
+    """GROUPED_AGG: raw values -> the family sketch's NDV estimate."""
+    return direct_udf(_family(family, **params), LongType(),
+                      lambda sk: sk.estimate())
 
 
 def _impl(impl: str | None) -> str:
@@ -78,13 +82,13 @@ def approx_count_distinct_cpc(col, lgk: int | None = None) -> Column:
     default — CPC-class accuracy on the default path (the round-2 KMV
     stand-in at k=4096 had RSE ~ 1.6%). KMV remains available as
     ``approx_count_distinct_theta`` for set algebra."""
-    return hll_direct_udf(lgk or conf.distinct_cpc_lgk())(_col(col))
+    return ndv_udf("hll", lgk=lgk or conf.distinct_cpc_lgk())(_col(col))
 
 
 def approx_count_distinct_theta(col, k: int | None = None) -> Column:
     """NDV via the engine's Theta/KMV sketch — exact below k, and the
     state family the ``approx_set_*`` algebra operates on."""
-    return theta_direct_udf(k or conf.distinct_theta_k())(_col(col))
+    return ndv_udf("theta", k=k)(_col(col))
 
 
 def approx_count_distinct_hll(col, lgk: int | None = None) -> Column:
@@ -100,8 +104,10 @@ def approx_count_distinct_accumulate(col, impl: str | None = None,
     if v == "HLL":
         return F.hll_sketch_agg(_col(col), F.lit(conf.distinct_hll_lgk()))
     if v == "CPC":
-        return hll_acc_udf(conf.distinct_cpc_lgk())(_col(col))
-    return theta_acc_udf(k or conf.distinct_theta_k())(_col(col))
+        fam = _family("hll", lgk=conf.distinct_cpc_lgk())
+    else:
+        fam = _family("theta", k=k)
+    return accumulate_udf(fam)(_col(col))
 
 
 def approx_count_distinct_accumulate_cpc(col, lgk: int | None = None,
@@ -115,11 +121,9 @@ def approx_count_distinct_accumulate_cpc(col, lgk: int | None = None,
     Python); use when the states must be readable on the reference side
     without an export step. Flows into ``approx_count_distinct_combine``
     / ``_estimate`` like any CPC state."""
-    from ..sketches import ITEM_LONG, ITEM_STR
-    from .udfs import cpc_wire_acc_udf
     it = ITEM_LONG if item_type in ("long", "int") else ITEM_STR
-    return cpc_wire_acc_udf(lgk or conf.distinct_cpc_wire_lgk(),
-                            it)(_col(col))
+    return accumulate_udf(_family("cpcwire", lgk=lgk, item_type=it))(
+        _col(col))
 
 
 def approx_count_distinct_accumulate_theta_wire(
@@ -132,10 +136,9 @@ def approx_count_distinct_accumulate_theta_wire(
     ``_accumulate_theta`` KMV stays the internal default. Flows into
     ``approx_count_distinct_combine`` / ``_estimate`` and the
     ``approx_set_*`` functions (foreign-with-foreign pairs)."""
-    from ..sketches import ITEM_LONG, ITEM_STR
-    from .udfs import theta_wire_acc_udf
     it = ITEM_LONG if item_type in ("long", "int") else ITEM_STR
-    return theta_wire_acc_udf(k or conf.distinct_theta_k(), it)(_col(col))
+    return accumulate_udf(_family("thetawire", k=k, item_type=it))(
+        _col(col))
 
 
 def approx_count_distinct_combine(col, impl: str | None = None) -> Column:

@@ -10,17 +10,13 @@ results with ``F.inline`` exactly as the reference demos (``README.md:157``).
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-from .. import conf
+from ..families import _family
 from ..sketches import ITEM_LONG, ITEM_STR
-from .udfs import combine_udf, freq_acc_udf, freq_direct_udf, freq_est_udf
+from .udfs import (_col, accumulate_udf, combine_udf, direct_udf,
+                   freq_est_udf, freq_result_type, frequent_items)
 
 _TYPES = {"string": ITEM_STR, "str": ITEM_STR, "long": ITEM_LONG, "int": ITEM_LONG}
-
-
-def _col(c) -> Column:
-    return F.col(c) if isinstance(c, str) else c
 
 
 def _item_type(item_type: str) -> str:
@@ -40,15 +36,15 @@ def approx_freqitems(col, item_type: str = "string",
                      max_map_size: int | None = None) -> Column:
     """Direct aggregate: heavy hitters as ``array<struct<item, estimated>>``."""
     t = _item_type(item_type)
-    m = max_map_size or conf.freq_max_map_size()
-    return freq_direct_udf(m, t)(_prep(col, t))
+    fam = _family("freq", item_type=t, max_map_size=max_map_size)
+    return direct_udf(fam, freq_result_type(t), frequent_items)(_prep(col, t))
 
 
 def approx_freqitems_accumulate(col, item_type: str = "string",
                                 max_map_size: int | None = None) -> Column:
     t = _item_type(item_type)
-    m = max_map_size or conf.freq_max_map_size()
-    return freq_acc_udf(m, t)(_prep(col, t))
+    fam = _family("freq", item_type=t, max_map_size=max_map_size)
+    return accumulate_udf(fam)(_prep(col, t))
 
 
 def approx_freqitems_combine(col) -> Column:

@@ -31,20 +31,17 @@ SQL surface (after ``install(spark)``): ``approx_membership_accumulate``
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-from .. import conf
+from ..families import _family
+from ..sketches import ITEM_LONG, ITEM_STR
 from .udfs import (
-    bloom_acc_udf,
+    _col,
+    accumulate_udf,
     bloom_contains_udf,
     bloom_estimate_udf,
     bloom_fpp_udf,
     combine_udf,
 )
-
-
-def _col(c) -> Column:
-    return F.col(c) if isinstance(c, str) else c
 
 
 def approx_membership_accumulate(col, expected_items: int | None = None,
@@ -56,9 +53,8 @@ def approx_membership_accumulate(col, expected_items: int | None = None,
     every partial built in one aggregation merges bit-exactly. State
     size is constant ``m/8`` bytes regardless of fill (~1.2 MB per
     million designed keys at 1%)."""
-    return bloom_acc_udf(expected_items or conf.membership_expected(),
-                         fpp if fpp is not None
-                         else conf.membership_fpp())(_col(col))
+    fam = _family("bloom", expected_items=expected_items, fpp=fpp)
+    return accumulate_udf(fam)(_col(col))
 
 
 def approx_membership_combine(state) -> Column:
@@ -90,11 +86,9 @@ def approx_membership_contains(state, col,
     probe = _col(col)
     it = None
     if item_type in ("long", "int"):
-        from ..sketches import ITEM_LONG
         it = ITEM_LONG
         probe = probe.cast("long").cast("string")
     elif item_type in ("str", "string"):
-        from ..sketches import ITEM_STR
         it = ITEM_STR
         probe = probe.cast("string")
     elif item_type is not None:
@@ -133,8 +127,6 @@ def approx_membership_accumulate_wire(col, expected_items: int | None = None,
     column is normalized JVM-side (long keys ship as cast-to-string and
     re-parse exactly in the worker), so the state bytes are independent
     of which Arrow batch a null lands in and exact above 2^53."""
-    from ..sketches import ITEM_LONG, ITEM_STR
-    from .udfs import bloomwire_acc_udf
     keys = _col(col)
     if item_type in ("long", "int", ITEM_LONG):
         it = ITEM_LONG
@@ -144,7 +136,6 @@ def approx_membership_accumulate_wire(col, expected_items: int | None = None,
         keys = keys.cast("string")
     else:
         raise ValueError(f"unknown item_type: {item_type!r}")
-    return bloomwire_acc_udf(
-        expected_items or conf.membership_expected(),
-        fpp if fpp is not None else conf.membership_fpp(),
-        seed, it)(keys)
+    fam = _family("bloomwire", expected_items=expected_items, fpp=fpp,
+                  seed=seed, item_type=it)
+    return accumulate_udf(fam)(keys)

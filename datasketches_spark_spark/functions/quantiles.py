@@ -20,34 +20,30 @@ output, and ``output_type`` always wins when passed explicitly.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType
 
 from .. import conf
+from ..families import QUANTILE_DTYPES, _family
 from .udfs import (
+    _col,
+    accumulate_udf,
     cdf_est_udf,
     combine_udf,
+    direct_udf,
     pmf_est_udf,
     rank_est_udf,
-    quantile_acc_udf,
     quantile_acc_weighted_udf,
-    quantile_direct_udf,
     quantile_est_udf,
     validate_num_splits,
     validate_percentage,
 )
 
-_DTYPES = {"KLL": np.float32, "REQ": np.float32, "MERGEABLE": np.float64}
-
 # Input types the direct aggregate casts its estimate back to — the
 # reference's createOutputConvertFunc matrix (quantileSketches.scala:196-211).
 # DECIMAL(p,s) is handled separately (precision-checked).
 _PRESERVED_TYPES = {"TINYINT", "SMALLINT", "INT", "BIGINT", "FLOAT", "DOUBLE"}
-
-
-def _col(c) -> Column:
-    return F.col(c) if isinstance(c, str) else c
 
 
 def infer_bound_type(col) -> str | None:
@@ -106,15 +102,21 @@ def _resolve(impl: str | None, k: int | None) -> tuple[str, int, type]:
         raise ValueError(f"unknown quantile sketch impl {impl}")
     if k is None:
         k = conf.quantile_k(impl)
-    return impl, int(k), _DTYPES[impl]
+    return impl, int(k), QUANTILE_DTYPES[impl]
 
 
 def _direct(col, percentage, impl: str | None, k: int | None,
             output_type=None) -> Column:
     ps, multi = validate_percentage(percentage)
-    impl, k, dtype = _resolve(impl, k)
-    udf = quantile_direct_udf(impl, k, dtype, ps, multi,
-                              rule=conf.quantile_rank_rule())
+    impl, k, _ = _resolve(impl, k)
+    rule = conf.quantile_rank_rule()
+    fam = _family("quantile", impl=impl, k=k)
+    if multi:
+        udf = direct_udf(fam, ArrayType(DoubleType(), containsNull=False),
+                         lambda sk: sk.quantiles(ps, rule=rule))
+    else:
+        udf = direct_udf(fam, DoubleType(),
+                         lambda sk: sk.quantile(ps[0], rule=rule))
     out = udf(_col(col).cast("double"))
     if output_type is not None:
         return out.cast(output_type)
@@ -148,8 +150,9 @@ def approx_percentile_mergeable(col, percentage, k: int | None = None,
 def approx_percentile_accumulate(col, impl: str | None = None,
                                  k: int | None = None) -> Column:
     """Aggregate raw values into a serialized quantile-sketch state."""
-    impl, k, dtype = _resolve(impl, k)
-    return quantile_acc_udf(impl, k, dtype)(_col(col).cast("double"))
+    impl, k, _ = _resolve(impl, k)
+    return accumulate_udf(_family("quantile", impl=impl, k=k))(
+        _col(col).cast("double"))
 
 
 def approx_percentile_accumulate_weighted(col, weight,
@@ -174,21 +177,21 @@ def approx_percentile_estimate(col, percentage) -> Column:
     """Decode a state and return quantile(s); output is always double.
     Rank rule from conf ``quantiles.rankRule`` (disc | exclusive)."""
     ps, multi = validate_percentage(percentage)
-    return quantile_est_udf(ps, multi,
-                            rule=conf.quantile_rank_rule())(_col(col))
+    lit = F.array(*map(F.lit, ps)) if multi else F.lit(ps[0])
+    return quantile_est_udf(conf.quantile_rank_rule(), multi)(_col(col), lit)
 
 
 def approx_pmf_estimate(col, num_splits: int = 9) -> Column:
     """Probability mass over ``num_splits`` equal-width bins of [min, max]."""
     validate_num_splits(num_splits)
-    return pmf_est_udf(num_splits)(_col(col))
+    return pmf_est_udf()(_col(col), F.lit(num_splits))
 
 
 def approx_rank_estimate(col, value) -> Column:
     """Rank of ``value`` (fraction of mass <= value) from a quantile state
     — the inverse of approx_percentile_estimate. Extension beyond the
     reference's surface (it has quantile + pmf only)."""
-    return rank_est_udf(float(value))(_col(col))
+    return rank_est_udf()(_col(col), F.lit(float(value)))
 
 
 def approx_cdf_estimate(col, split_points) -> Column:
@@ -197,7 +200,7 @@ def approx_cdf_estimate(col, split_points) -> Column:
     sps = [float(x) for x in split_points]
     if not sps:
         raise ValueError("split_points must be non-empty")
-    return cdf_est_udf(sps)(_col(col))
+    return cdf_est_udf()(_col(col), F.array(*map(F.lit, sps)))
 
 
 def approx_percentile_bounds(col, percentage, eps=None) -> Column:
@@ -221,5 +224,4 @@ def approx_ks_distance(col_a, col_b) -> Column:
     from states alone; the DataSketches library's kolmogorov_smirnov
     test is the same primitive over its quantile sketches."""
     from .udfs import ks_distance_udf
-    c = lambda x: F.col(x) if isinstance(x, str) else x
-    return ks_distance_udf()(c(col_a), c(col_b))
+    return ks_distance_udf()(_col(col_a), _col(col_b))

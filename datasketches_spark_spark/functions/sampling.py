@@ -11,35 +11,20 @@ sketch summary table.
 
 from __future__ import annotations
 
-import logging
-
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql.functions import col as _to_col, pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-)
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StringType
 
+from ..families import _family
 from ..sketches import (
     ITEM_DOUBLE,
     ITEM_LONG,
     ITEM_STR,
     ReservoirSketch,
     WeightedReservoirSketch,
-    deserialize_any,
 )
+from .udfs import _col, accumulate_udf, combine_udf, state_udf
 
 _SAMPLE_FAMILIES = (ReservoirSketch, WeightedReservoirSketch)
-
-log = logging.getLogger(__name__)
-
-
-def _col(c) -> Column:
-    return _to_col(c) if isinstance(c, str) else c
 
 
 def _item_type(item_type: str) -> str:
@@ -59,94 +44,25 @@ _RESULT_TYPES = {
 }
 
 
-def sample_acc_udf(k: int, item_type: str):
+def _accumulate_udf(family: str, k: int, item_type: str):
     if k <= 0:
         raise ValueError(f"sample size k must be positive, got {k}")
-
-    @pandas_udf(BinaryType())
-    def acc(v: pd.Series) -> bytes:
-        sk = ReservoirSketch(k=k, item_type=item_type)
-        vals = v.dropna()
-        if len(vals):
-            if item_type == ITEM_STR:
-                sk.update_batch(vals.astype(str).to_numpy(object))
-            elif item_type == ITEM_LONG:
-                sk.update_batch(pd.to_numeric(vals).astype("int64").to_numpy())
-            else:
-                sk.update_batch(pd.to_numeric(vals).astype("float64").to_numpy())
-        return sk.serialize() if sk.n else None
-
-    return acc
+    return accumulate_udf(_family(family, k=k, item_type=_item_type(item_type)))
 
 
-def sample_est_udf(item_type: str):
-    rt = ArrayType(_RESULT_TYPES[item_type], containsNull=False)
-
-    @pandas_udf(rt)
-    def est(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                sk = deserialize_any(bytes(blob))
-                if not isinstance(sk, _SAMPLE_FAMILIES):
-                    raise ValueError("not a reservoir sample state")
-                # empty aggregation -> null (family contract; an n=0 state
-                # can reach here via two-phase partials of an all-filtered
-                # group, e.g. every weight zero)
-                out.append(sk.items() if sk.n else None)
-            except Exception as e:  # corrupt state -> null (family contract)
-                log.warning("approx_sample_estimate: corrupt state: %s", e)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    return est
+def sample_estimate_udf(item_type: str):
+    # empty aggregation -> null (family contract; an n=0 state can reach
+    # here via two-phase partials of an all-filtered group, e.g. every
+    # weight zero)
+    suffix = {ITEM_DOUBLE: "", ITEM_LONG: "_long", ITEM_STR: "_string"}
+    return state_udf(f"approx_sample_estimate{suffix[item_type]}",
+                     ArrayType(_RESULT_TYPES[item_type], containsNull=False),
+                     _SAMPLE_FAMILIES, lambda sk: sk.items() if sk.n else None)
 
 
 def sample_size_udf():
-    @pandas_udf(LongType())
-    def size(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                sk = deserialize_any(bytes(blob))
-                if not isinstance(sk, _SAMPLE_FAMILIES):
-                    raise ValueError("not a reservoir sample state")
-                out.append(int(sk.n) if sk.n else None)
-            except Exception as e:
-                log.warning("approx_sample_stream_size: corrupt state: %s", e)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    return size
-
-
-def wsample_acc_udf(k: int, item_type: str):
-    if k <= 0:
-        raise ValueError(f"sample size k must be positive, got {k}")
-
-    @pandas_udf(BinaryType())
-    def acc(v: pd.Series, w: pd.Series) -> bytes:
-        sk = WeightedReservoirSketch(k=k, item_type=item_type)
-        weights = pd.to_numeric(w, errors="coerce").astype("float64")
-        mask = v.notna() & weights.notna()
-        vals = v[mask]
-        if len(vals):
-            if item_type == ITEM_STR:
-                items = vals.astype(str).to_numpy(object)
-            elif item_type == ITEM_LONG:
-                items = pd.to_numeric(vals).astype("int64").to_numpy()
-            else:
-                items = pd.to_numeric(vals).astype("float64").to_numpy()
-            sk.update_batch(items, weights[mask].to_numpy())
-        return sk.serialize() if sk.n else None
-
-    return acc
+    return state_udf("approx_sample_stream_size", LongType(), _SAMPLE_FAMILIES,
+                     lambda sk: int(sk.n) if sk.n else None)
 
 
 # ------------------------------------------------------------------ public
@@ -154,7 +70,7 @@ def wsample_acc_udf(k: int, item_type: str):
 def approx_sample_accumulate(col, k: int = 1024,
                              item_type: str = "double") -> Column:
     """Aggregate: column -> serialized reservoir state (k-sample)."""
-    return sample_acc_udf(k, _item_type(item_type))(_col(col))
+    return _accumulate_udf("reservoir", k, item_type)(_col(col))
 
 
 def approx_sample_weighted_accumulate(col, weight_col, k: int = 1024,
@@ -162,21 +78,20 @@ def approx_sample_weighted_accumulate(col, weight_col, k: int = 1024,
     """Aggregate: (value, weight) -> serialized A-ES weighted-reservoir
     state. Zero/negative/null weights are excluded; merge is the
     deterministic top-k over persisted keys."""
-    return wsample_acc_udf(k, _item_type(item_type))(_col(col),
-                                                     _col(weight_col))
+    return _accumulate_udf("wreservoir", k, item_type)(_col(col),
+                                                       _col(weight_col))
 
 
 def approx_sample_combine(col) -> Column:
     """Aggregate: merge reservoir states (family-agnostic kernel; the
     merged reservoir is exactly uniform over the concatenated stream)."""
-    from .udfs import combine_udf
     return combine_udf()(_col(col))
 
 
 def approx_sample_estimate(col, item_type: str = "double") -> Column:
     """Scalar: state -> the retained sample as a SORTED array (complete
     multiset while the stream stayed within k)."""
-    return sample_est_udf(_item_type(item_type))(_col(col))
+    return sample_estimate_udf(_item_type(item_type))(_col(col))
 
 
 def approx_sample_stream_size(col) -> Column:

@@ -21,20 +21,16 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .. import conf
+from ..families import _family
+from ..sketches import ITEM_LONG
 from .udfs import (
-    ITEM_LONG,
-    aod_wire_acc_udf,
+    _col,
+    accumulate_udf,
     combine_udf,
-    tuple_acc_udf,
     tuple_est_udf,
     tuple_segment_sum_udf,
     tuple_segment_udf,
 )
-
-
-def _col(c) -> Column:
-    return F.col(c) if isinstance(c, str) else c
 
 
 def approx_tuple_accumulate(key_col, value_col, k: int | None = None) -> Column:
@@ -42,8 +38,8 @@ def approx_tuple_accumulate(key_col, value_col, k: int | None = None) -> Column:
     Null-key rows are dropped; a null value counts its row with a 0.0
     contribution. For the two-phase map-side plan use
     ``operators.sketch_agg`` with family ``"tuple"``."""
-    k = k or conf.tuple_k()
-    return tuple_acc_udf(k)(_col(key_col), _col(value_col).cast("double"))
+    return accumulate_udf(_family("tuple", k=k))(
+        _col(key_col), _col(value_col).cast("double"))
 
 
 def approx_tuple_accumulate_wire(key_col, value_col,
@@ -59,10 +55,9 @@ def approx_tuple_accumulate_wire(key_col, value_col,
     like an engine tuple state. ``item_type`` picks the key hash layout
     ("string" default, "long" for integral keys — matching Java's
     ``update(long, ...)``)."""
-    k = k or conf.tuple_k()
     it = item_type or "string"
-    return aod_wire_acc_udf(k, ITEM_LONG if it == "long" else it)(
-        _col(key_col), _col(value_col).cast("double"))
+    fam = _family("aodwire", k=k, item_type=ITEM_LONG if it == "long" else it)
+    return accumulate_udf(fam)(_col(key_col), _col(value_col).cast("double"))
 
 
 def approx_tuple_combine(col) -> Column:
@@ -84,7 +79,8 @@ def approx_tuple_bounds(col, num_std: float = 2.0) -> Column:
     (the same Beyer et al. envelope as the Theta family; one shared
     ``udfs.distinct_bounds_udf`` kernel serves both)."""
     from .udfs import distinct_bounds_udf
-    return distinct_bounds_udf()(_col(col), F.lit(float(num_std)))
+    return distinct_bounds_udf("approx_tuple_bounds")(
+        _col(col), F.lit(float(num_std)))
 
 
 def approx_tuple_segment_estimate(col, min_count: int = 1,

@@ -4,8 +4,11 @@ Execution pattern (SURVEY.md §4): the reference's ``TypedImperativeAggregate``
 update/merge/serialize contract (``quantileSketches.scala:234-273``) maps to
 
 * *accumulate / direct agg*  -> ``GROUPED_AGG`` pandas UDF (Arrow-batched),
+  built by :func:`accumulate_udf` / :func:`direct_udf` from the family
+  table (``families.py``) — the same row path the two-phase operator runs;
 * *combine*                  -> ``GROUPED_AGG`` pandas UDF over binary states,
-* *estimate / pmf*           -> scalar pandas UDF over binary states.
+* *estimate / pmf*           -> scalar pandas UDF over binary states, built
+  by :func:`state_udf`.
 
 For true map-side combine at scale, see
 ``datasketches_spark_spark.operators.sketch_agg`` which pre-sketches per
@@ -27,6 +30,8 @@ import logging
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -39,15 +44,17 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..families import _wire_longs, _wire_strings
 from ..sketches import (
     ITEM_LONG,
     ITEM_STR,
     CpcUnionSketch,
     FreqItemsSketch,
     HllSketch,
+    KllSketch,
     ThetaSketch,
+    TupleSketch,
     deserialize_any,
-    deserialize_quantile,
     hash_series,
     make_quantile_sketch,
 )
@@ -56,6 +63,19 @@ log = logging.getLogger(__name__)
 
 
 # --------------------------------------------------------------------- utils
+
+def _col(c) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def _is_null(v) -> bool:
+    if v is None:
+        return True
+    try:
+        return bool(pd.isna(v))
+    except (TypeError, ValueError):  # arrays: pd.isna is elementwise
+        return False
+
 
 def validate_percentage(percentage):
     """Analysis-time validation, matching the reference's AnalysisException
@@ -89,43 +109,112 @@ def validate_num_splits(num_splits):
     return num_splits
 
 
-def _clean_numeric(v: pd.Series) -> np.ndarray:
-    arr = pd.to_numeric(v, errors="coerce").dropna().to_numpy(dtype=np.float64)
-    return arr
+def _named(name: str, validator, arg):
+    """Run ``validator(arg)`` with the failing SQL function named in the
+    error — the closest a Python UDF can get to the reference's
+    AnalysisException timing (``quantileSketches.scala:176-194``; the
+    DataFrame API and dss.sql() both validate before any job starts)."""
+    try:
+        return validator(arg)
+    except ValueError as e:
+        raise ValueError(f"{name}: {e}") from None
 
 
-def _clean_items(v: pd.Series, item_type: str):
-    """Null-free item list for the freq family. String mode renders
-    integral float batches as ints (``_wire_strings``) so a nullable
-    bigint column — float64 through Arrow when a batch holds a null —
-    yields the same items batch-independently ('17', never '17.0')."""
-    v = v.dropna()
-    if item_type == ITEM_LONG:
-        return _wire_longs(v).tolist()
-    return _wire_strings(v)
+# --------------------------------------------------------------------- builders
+
+def _group_sketch(fam, cols):
+    """The family's sketch over one group's input columns (the first
+    ``fam.ncols`` of ``cols``), or None for an empty aggregation."""
+    if fam.ncols == 1:
+        return fam.sketch_of(cols[0])
+    return fam.sketch_of(pd.concat(cols[:fam.ncols], axis=1,
+                                   keys=range(fam.ncols)))
+
+
+def accumulate_udf(fam):
+    """GROUPED_AGG: raw values (one column, or two for a two-column
+    family) -> the family's serialized state; null when the sketch
+    received no items."""
+
+    @pandas_udf(BinaryType())
+    def acc(*cols: pd.Series) -> bytes:
+        sk = _group_sketch(fam, cols)
+        return None if sk is None else sk.serialize()
+
+    return acc
+
+
+def direct_udf(fam, return_type, finish):
+    """GROUPED_AGG: raw values -> ``finish(sketch, *extra)`` directly, where
+    ``extra`` are the argument columns after the family's input columns;
+    null when the sketch received no items."""
+
+    @pandas_udf(return_type)
+    def direct(*cols: pd.Series) -> object:
+        sk = _group_sketch(fam, cols)
+        return None if sk is None else finish(sk, *cols[fam.ncols:])
+
+    return direct
+
+
+def state_udf(name: str, return_type, kinds, fn, states: int = 1, args=None):
+    """Scalar: ``states`` binary state columns, then argument columns ->
+    ``fn(*sketches, *row_args)`` per row.
+
+    A null state gives null. Each state decodes with ``deserialize_any``
+    and must be one of ``kinds``. ``args(*row_args)``, when given, runs
+    first and outside the error guard: it validates the row's arguments
+    (invalid ones raise, reference AnalysisException semantics) and
+    returns the values passed on to ``fn``, or None for a null row. A
+    decode or estimate error gives null (reference parity,
+    ``quantileSketches.scala:614-624``) and is logged once per batch,
+    naming ``name``."""
+    struct = isinstance(return_type, StructType)
+
+    @pandas_udf(return_type)
+    def est(*cols: pd.Series) -> pd.Series:
+        out, failed, first = [], 0, None
+        for row in zip(*cols):
+            blobs, extra = row[:states], row[states:]
+            if any(b is None for b in blobs):
+                out.append(None)
+                continue
+            if args is not None:
+                extra = args(*extra)
+                if extra is None:
+                    out.append(None)
+                    continue
+            try:
+                sks = [deserialize_any(bytes(b)) for b in blobs]
+                for sk in sks:
+                    if not isinstance(sk, kinds):
+                        raise TypeError(f"unexpected {type(sk).__name__} state")
+                out.append(fn(*sks, *extra))
+            except Exception as e:
+                failed += 1
+                first = e if first is None else first
+                out.append(None)
+        if failed:
+            log.warning("%s: %d corrupt state(s) -> null; first: %s",
+                        name, failed, first)
+        if struct:
+            width = len(return_type.fields)
+            return pd.DataFrame([(None,) * width if r is None else r
+                                 for r in out], columns=return_type.names)
+        return pd.Series(out, dtype=object)
+
+    return est
 
 
 # --------------------------------------------------------------------- quantile
 
-def quantile_acc_udf(impl: str, k: int, dtype):
-    """GROUPED_AGG: numeric values -> serialized KLL/REQ state (or null)."""
-
-    @pandas_udf(BinaryType())
-    def acc(v: pd.Series) -> bytes:
-        arr = _clean_numeric(v)
-        if arr.size == 0:
-            return None
-        sk = make_quantile_sketch(impl, k, dtype)
-        sk.update_batch(arr)
-        return sk.serialize()
-
-    return acc
+_QUANTILE = (KllSketch,)  # ReqSketch subclasses KllSketch
 
 
 def quantile_acc_weighted_udf(impl: str, k: int, dtype):
     """GROUPED_AGG: (value, count) pairs -> serialized quantile state.
 
-    The weight-expanded twin of :func:`quantile_acc_udf`: feeding a
+    The weight-expanded twin of the quantile accumulate: feeding a
     map-side-combined (value, count) table yields the same
     rank/cdf/quantile surfaces as accumulating the raw rows (sketch
     updates are update-order-independent in what the engine surfaces,
@@ -147,115 +236,124 @@ def quantile_acc_weighted_udf(impl: str, k: int, dtype):
     return acc
 
 
-def quantile_direct_udf(impl: str, k: int, dtype, percentages: list[float],
-                        multi: bool, rule: str = "disc"):
-    """GROUPED_AGG: numeric values -> quantile estimate(s) directly."""
-    rt = ArrayType(DoubleType(), containsNull=False) if multi else DoubleType()
-
+def percentages_arg(name: str, p, multi: bool) -> list[float]:
+    """The validated percentage list of one literal argument of the SQL
+    function ``name`` (``name_array`` takes the array form)."""
+    if _is_null(p):
+        raise ValueError(f"{name}: percentage value must not be null")
     if multi:
-        @pandas_udf(rt)
-        def direct(v: pd.Series) -> list:
-            arr = _clean_numeric(v)
-            if arr.size == 0:
-                return None
-            sk = make_quantile_sketch(impl, k, dtype)
-            sk.update_batch(arr)
-            return sk.quantiles(percentages, rule=rule)
-    else:
-        @pandas_udf(rt)
-        def direct(v: pd.Series) -> float:
-            arr = _clean_numeric(v)
-            if arr.size == 0:
-                return None
-            sk = make_quantile_sketch(impl, k, dtype)
-            sk.update_batch(arr)
-            return sk.quantile(percentages[0], rule=rule)
-
-    return direct
+        return _named(name, validate_percentage, list(p))[0]
+    if isinstance(p, (list, tuple, np.ndarray)):
+        raise ValueError(
+            f"{name}: the percentage is an array — use {name}_array "
+            "(a Python UDF registration cannot overload the scalar and "
+            "array return types under one name)")
+    return _named(name, validate_percentage, float(p))[0]
 
 
-def quantile_est_udf(percentages: list[float], multi: bool,
-                     rule: str = "disc"):
-    """Scalar: binary state -> double (or array<double>). Always double-typed,
-    matching the reference (``quantileSketches.scala:601-605``)."""
+def quantile_est_udf(rule: str, multi: bool):
+    """Scalar: (state, percentage) -> double, or (state, array of
+    percentages) -> array<double>. Always double-typed, matching the
+    reference (``quantileSketches.scala:601-605``)."""
+    name = "approx_percentile_estimate" + ("_array" if multi else "")
     rt = ArrayType(DoubleType(), containsNull=False) if multi else DoubleType()
 
-    @pandas_udf(rt)
-    def est(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                sk = deserialize_quantile(bytes(blob))
-                qs = sk.quantiles(percentages, rule=rule)
-                out.append(None if qs is None else (qs if multi else qs[0]))
-            except Exception as e:  # corrupt state -> null (reference parity)
-                log.warning("approx_percentile_estimate: corrupt state: %s", e)
-                out.append(None)
-        return pd.Series(out, dtype=object)
+    def est(sk, ps):
+        return sk.quantiles(ps, rule=rule) if multi \
+            else sk.quantile(ps[0], rule=rule)
 
-    return est
+    return state_udf(name, rt, _QUANTILE, est,
+                     args=lambda p: (percentages_arg(name, p, multi),))
 
 
-def rank_est_udf(value: float):
-    """Scalar: binary quantile state -> rank of `value` in [0,1] (the
+def rank_est_udf():
+    """Scalar: (quantile state, value) -> rank of ``value`` in [0,1] (the
     inverse of quantile(); extension beyond the reference surface)."""
-    @pandas_udf(DoubleType())
-    def rank(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                out.append(deserialize_quantile(bytes(blob)).rank(value))
-            except Exception as e:
-                log.warning("approx_rank_estimate: corrupt state: %s", e)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    return rank
+    return state_udf("approx_rank_estimate", DoubleType(), _QUANTILE,
+                     lambda sk, x: sk.rank(x),
+                     args=lambda x: None if _is_null(x) else (float(x),))
 
 
-def cdf_est_udf(split_points: list[float]):
-    """Scalar: binary quantile state -> cumulative mass at each split point
-    (+ trailing 1.0), complementing approx_pmf_estimate."""
-    @pandas_udf(ArrayType(DoubleType(), containsNull=False))
-    def cdf(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                out.append(deserialize_quantile(bytes(blob)).cdf(split_points))
-            except Exception as e:
-                log.warning("approx_cdf_estimate: corrupt state: %s", e)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    return cdf
+def cdf_est_udf():
+    """Scalar: (quantile state, split points) -> cumulative mass at each
+    split point (+ trailing 1.0), complementing approx_pmf_estimate."""
+    return state_udf(
+        "approx_cdf_estimate", ArrayType(DoubleType(), containsNull=False),
+        _QUANTILE, lambda sk, sps: sk.cdf(sps),
+        args=lambda sps: None if sps is None
+        else ([float(x) for x in sps],))
 
 
-def pmf_est_udf(num_splits: int):
-    @pandas_udf(ArrayType(DoubleType(), containsNull=False))
-    def pmf(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                sk = deserialize_quantile(bytes(blob))
-                out.append(sk.pmf(num_splits))
-            except Exception as e:
-                log.warning("approx_pmf_estimate: corrupt state: %s", e)
-                out.append(None)
-        return pd.Series(out, dtype=object)
+def pmf_est_udf():
+    """Scalar: (quantile state, num_splits) -> probability mass over
+    ``num_splits`` equal-width bins of [min, max]."""
+    def split_args(n):
+        return _named("approx_pmf_estimate", validate_num_splits,
+                      None if _is_null(n) else int(n)),
 
-    return pmf
+    return state_udf(
+        "approx_pmf_estimate", ArrayType(DoubleType(), containsNull=False),
+        _QUANTILE, lambda sk, n: sk.pmf(n), args=split_args)
+
+
+def quantile_bounds_udf(rule: str):
+    """Scalar: (state, p, eps) -> [lower, upper] quantile confidence
+    bounds — the values at ranks ``p - eps`` and ``p + eps`` (clamped to
+    [0, 1]). With ``eps`` NULL, the sketch's normalized rank-error bound
+    is used: 0 in the exact regime (bounds collapse to the point
+    estimate), else the published KLL envelope ``2.296 / k^0.9``
+    (Apache DataSketches' KLL getNormalizedRankError constant; the
+    DataSketches quantile API exposes the same capability as
+    getQuantileLowerBound/getQuantileUpperBound). The true quantile lies
+    inside the interval with ~99% probability per the KLL PAC bound."""
+
+    def bounds(sk, p, e):
+        if _is_null(e):
+            e = 0.0 if sk.is_exact() else 2.296 / (sk.k ** 0.9)
+        lo = sk.quantile(max(0.0, p - float(e)), rule=rule)
+        hi = sk.quantile(min(1.0, p + float(e)), rule=rule)
+        return None if lo is None else [lo, hi]
+
+    return state_udf(
+        "approx_percentile_bounds", ArrayType(DoubleType(), containsNull=False),
+        _QUANTILE, bounds,
+        args=lambda p, e: None if _is_null(p)
+        else (validate_percentage(float(p))[0][0], e))
+
+
+def ks_distance_udf():
+    """Scalar: two quantile (KLL-family) states -> two-sample
+    Kolmogorov-Smirnov distance, ``sup_x |F_A(x) - F_B(x)|`` over the
+    union of retained items (the sup of two step functions is attained
+    at a jump point, so evaluating at every retained value is exact for
+    the sketched distributions).
+
+    Exact-regime states retain every raw value at weight 1, so the
+    result IS the exact two-sample KS statistic; in estimation mode it
+    is the KS distance between the sketch-approximated ECDFs, with error
+    bounded by the two sketches' rank-error envelopes. The DataSketches
+    library ships the same capability for its quantile sketches
+    (kolmogorov_smirnov_test); this engine computes the distance from
+    any two persisted states — the drift-detection primitive for
+    comparing two time windows without raw rescans."""
+
+    def ks(sa, sb):
+        if sa.n == 0 or sb.n == 0:
+            return None
+        va, wa = sa._weighted_items()
+        vb, wb = sb._weighted_items()
+        xs = np.union1d(va, vb)
+
+        def ecdf(v, w):
+            cum = np.cumsum(w)
+            idx = np.searchsorted(v, xs, side="right")
+            return np.where(idx > 0, cum[np.maximum(idx - 1, 0)],
+                            0) / float(cum[-1])
+
+        return float(np.max(np.abs(ecdf(va, wa) - ecdf(vb, wb))))
+
+    return state_udf("approx_ks_distance", DoubleType(), _QUANTILE, ks,
+                     states=2)
 
 
 # --------------------------------------------------------------------- combine
@@ -292,154 +390,16 @@ def freq_result_type(item_type: str) -> ArrayType:
     ]))
 
 
-def freq_acc_udf(max_map_size: int, item_type: str):
-    @pandas_udf(BinaryType())
-    def acc(v: pd.Series) -> bytes:
-        items = _clean_items(v, item_type)
-        if not items:
-            return None
-        sk = FreqItemsSketch(max_map_size=max_map_size, item_type=item_type)
-        sk.update_batch(items)
-        return sk.serialize()
-
-    return acc
-
-
-def freq_direct_udf(max_map_size: int, item_type: str):
-    @pandas_udf(freq_result_type(item_type))
-    def direct(v: pd.Series) -> list:
-        items = _clean_items(v, item_type)
-        if not items:
-            return None
-        sk = FreqItemsSketch(max_map_size=max_map_size, item_type=item_type)
-        sk.update_batch(items)
-        return [{"item": i, "estimated": int(c)} for i, c in sk.frequent_items()]
-
-    return direct
+def frequent_items(sk) -> list:
+    """The result rows of a frequent-items sketch, estimate-descending."""
+    return [{"item": i, "estimated": int(c)} for i, c in sk.frequent_items()]
 
 
 def freq_est_udf(item_type: str):
-    @pandas_udf(freq_result_type(item_type))
-    def est(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                sk = deserialize_any(bytes(blob))  # engine or imported state
-                if not isinstance(sk, FreqItemsSketch):
-                    raise ValueError("not a frequent-items state")
-                out.append([{"item": i, "estimated": int(c)}
-                            for i, c in sk.frequent_items()])
-            except Exception as e:
-                log.warning("approx_freqitems_estimate: corrupt state: %s", e)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    return est
-
-
-def quantile_bounds_udf(rule: str):
-    """Scalar: (state, p, eps) -> [lower, upper] quantile confidence
-    bounds — the values at ranks ``p - eps`` and ``p + eps`` (clamped to
-    [0, 1]). With ``eps`` NULL, the sketch's normalized rank-error bound
-    is used: 0 in the exact regime (bounds collapse to the point
-    estimate), else the published KLL envelope ``2.296 / k^0.9``
-    (Apache DataSketches' KLL getNormalizedRankError constant; the
-    DataSketches quantile API exposes the same capability as
-    getQuantileLowerBound/getQuantileUpperBound). The true quantile lies
-    inside the interval with ~99% probability per the KLL PAC bound."""
-    from ..sketches.kll import KllSketch
-
-    @pandas_udf(ArrayType(DoubleType(), containsNull=False))
-    def bounds(states: pd.Series, p: pd.Series, eps: pd.Series) -> pd.Series:
-        out = []
-        for blob, pct, e in zip(states, p, eps):
-            if blob is None or _is_nullish(pct):
-                out.append(None)
-                continue
-            # argument validation raises (reference AnalysisException
-            # semantics); state decode problems degrade to NULL below
-            ps, _ = validate_percentage(float(pct))
-            pct = ps[0]
-            try:
-                sk = deserialize_any(bytes(blob))
-                if not isinstance(sk, KllSketch):
-                    raise TypeError("not a quantile (KLL-family) state")
-                if _is_nullish(e):
-                    e = 0.0 if sk.is_exact() else 2.296 / (sk.k ** 0.9)
-                lo = sk.quantile(max(0.0, pct - float(e)), rule=rule)
-                hi = sk.quantile(min(1.0, pct + float(e)), rule=rule)
-                out.append(None if lo is None else [lo, hi])
-            except Exception as ex:
-                log.warning("approx_percentile_bounds: corrupt state: %s", ex)
-                out.append(None)
-        return pd.Series(out, dtype="object")
-
-    return bounds
-
-
-def _is_nullish(v) -> bool:
-    if v is None:
-        return True
-    try:
-        return bool(pd.isna(v))
-    except (TypeError, ValueError):
-        return False
-
-
-def distinct_bounds_udf():
-    """Scalar: (theta state, num_std) -> [lower, upper] NDV bounds.
-
-    Exact-regime sketches (Theta with all hashes retained; HLL still in
-    its sparse coupon phase) return the exact count for both ends. In
-    estimation mode the relative standard error is ``1/sqrt(k-2)`` for
-    Theta/KMV (Beyer et al., SIGMOD'07; the constant the DataSketches
-    Theta getLowerBound/getUpperBound envelope is built on) and
-    ``1.04/sqrt(2^lgk)`` for dense HLL (Flajolet et al., 2007), so
-    bounds are ``est / (1 +/- num_std * rse)``. Empirical coverage at
-    num_std=2 measured ~98% over 60 trials per family
-    (`tests/test_accuracy_bounds.py`)."""
-    from ..sketches import HllSketch as _Hll
-    from ..sketches import ThetaSketch as _Theta
-    from ..sketches import TupleSketch as _Tuple
-
-    @pandas_udf(ArrayType(LongType(), containsNull=False))
-    def bounds(states: pd.Series, num_std: pd.Series) -> pd.Series:
-        out = []
-        for blob, ns in zip(states, num_std):
-            if blob is None:
-                out.append(None)
-                continue
-            ns = 2.0 if _is_nullish(ns) else float(ns)
-            if ns <= 0:
-                raise ValueError(
-                    "approx_count_distinct_bounds: num_std must be > 0")
-            try:
-                sk = deserialize_any(bytes(blob))
-                if isinstance(sk, (_Theta, _Tuple)):
-                    # same KMV bottom-k sample -> same Beyer RSE class
-                    exact, rse = sk.is_exact(), 1.0 / np.sqrt(sk.k - 2)
-                elif isinstance(sk, _Hll):
-                    exact = sk.is_sparse
-                    rse = 1.04 / np.sqrt(1 << sk.lgk)
-                else:
-                    raise TypeError("not a Theta, HLL or tuple state")
-                est = sk.estimate()
-                if exact:
-                    out.append([int(est), int(est)])
-                    continue
-                lo = int(np.floor(est / (1 + ns * rse)))
-                hi = int(np.ceil(est / max(1e-12, 1 - ns * rse)))
-                out.append([lo, hi])
-            except Exception as ex:
-                log.warning(
-                    "approx_count_distinct_bounds: corrupt state: %s", ex)
-                out.append(None)
-        return pd.Series(out, dtype="object")
-
-    return bounds
+    suffix = "_long" if item_type == ITEM_LONG else ""
+    return state_udf(f"approx_freqitems_estimate{suffix}",
+                     freq_result_type(item_type),
+                     FreqItemsSketch, frequent_items)
 
 
 def freq_maxerr_udf():
@@ -447,78 +407,8 @@ def freq_maxerr_udf():
     error (Misra-Gries ``max_err``): every reported count is within
     [true, true + max_err]. Zero in the exact regime — the documented
     way to ASSERT exactness of a freq-items result at read time."""
-
-    @pandas_udf(LongType())
-    def maxerr(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                sk = deserialize_any(bytes(blob))
-                if not isinstance(sk, FreqItemsSketch):
-                    raise TypeError("not a frequent-items state")
-                out.append(int(sk._max_err))
-            except Exception as ex:
-                log.warning("approx_freqitems_maxerr: corrupt state: %s", ex)
-                out.append(None)
-        return pd.Series(out, dtype="object")
-
-    return maxerr
-
-
-def ks_distance_udf():
-    """Scalar: two quantile (KLL-family) states -> two-sample
-    Kolmogorov-Smirnov distance, ``sup_x |F_A(x) - F_B(x)|`` over the
-    union of retained items (the sup of two step functions is attained
-    at a jump point, so evaluating at every retained value is exact for
-    the sketched distributions).
-
-    Exact-regime states retain every raw value at weight 1, so the
-    result IS the exact two-sample KS statistic; in estimation mode it
-    is the KS distance between the sketch-approximated ECDFs, with error
-    bounded by the two sketches' rank-error envelopes. The DataSketches
-    library ships the same capability for its quantile sketches
-    (kolmogorov_smirnov_test); this engine computes the distance from
-    any two persisted states — the drift-detection primitive for
-    comparing two time windows without raw rescans."""
-    from ..sketches.kll import KllSketch
-
-    @pandas_udf(DoubleType())
-    def ks(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for ba, bb in zip(a, b):
-            if ba is None or bb is None:
-                out.append(None)
-                continue
-            try:
-                sa = deserialize_any(bytes(ba))
-                sb = deserialize_any(bytes(bb))
-                if not (isinstance(sa, KllSketch)
-                        and isinstance(sb, KllSketch)):
-                    raise ValueError("not quantile (KLL-family) states")
-                if sa.n == 0 or sb.n == 0:
-                    out.append(None)
-                    continue
-                va, wa = sa._weighted_items()
-                vb, wb = sb._weighted_items()
-                xs = np.union1d(va, vb)
-
-                def ecdf(v, w):
-                    cum = np.cumsum(w)
-                    idx = np.searchsorted(v, xs, side="right")
-                    return np.where(idx > 0, cum[np.maximum(idx - 1, 0)],
-                                    0) / float(cum[-1])
-
-                out.append(float(np.max(np.abs(ecdf(va, wa)
-                                               - ecdf(vb, wb)))))
-            except Exception as e:
-                log.warning("approx_ks_distance: corrupt state: %s", e)
-                out.append(None)
-        return pd.Series(out, dtype="object")
-
-    return ks
+    return state_udf("approx_freqitems_maxerr", LongType(), FreqItemsSketch,
+                     lambda sk: int(sk._max_err))
 
 
 def freq_join_size_udf():
@@ -534,257 +424,86 @@ def freq_join_size_udf():
     is exactly what the sketch retains — the standard use of frequency
     sketches in join planning."""
 
-    @pandas_udf(LongType())
-    def jsize(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for ba, bb in zip(a, b):
-            if ba is None or bb is None:
-                out.append(None)
-                continue
-            try:
-                sa = deserialize_any(bytes(ba))
-                sb = deserialize_any(bytes(bb))
-                if not (isinstance(sa, FreqItemsSketch)
-                        and isinstance(sb, FreqItemsSketch)):
-                    raise ValueError("not frequent-items states")
-                if len(sa._counts) > len(sb._counts):
-                    sa, sb = sb, sa
-                out.append(sum(sa.estimate(i) * sb.estimate(i)
-                               for i in sa._counts))
-            except Exception as e:
-                log.warning("approx_join_size: corrupt state: %s", e)
-                out.append(None)
-        return pd.Series(out, dtype="object")
+    def jsize(sa, sb):
+        if len(sa._counts) > len(sb._counts):
+            sa, sb = sb, sa
+        return sum(sa.estimate(i) * sb.estimate(i) for i in sa._counts)
 
-    return jsize
-
-
-# --------------------------------------------------------------------- set ops
-
-def _theta_pair(blob_a, blob_b):
-    from ..compat.theta import ThetaWireSketch
-    a = deserialize_any(bytes(blob_a))
-    b = deserialize_any(bytes(blob_b))
-    if isinstance(a, ThetaWireSketch) and isinstance(b, ThetaWireSketch):
-        return a, b  # foreign DataSketches Theta pair: same hash space
-    if isinstance(a, ThetaWireSketch) or isinstance(b, ThetaWireSketch):
-        raise ValueError(
-            "cannot mix a DataSketches Theta state with an engine KMV "
-            "state (different hash spaces); re-accumulate one side")
-    if not isinstance(a, ThetaSketch) or not isinstance(b, ThetaSketch):
-        raise ValueError("set operations need Theta sketch states")
-    return a, b
-
-
-def theta_setop_udf(op: str):
-    """Scalar over two Theta states: 'jaccard' -> double, 'intersection' /
-    'a_not_b' -> long. Null/corrupt state -> null (estimate-side parity)."""
-    rt = DoubleType() if op == "jaccard" else LongType()
-
-    @pandas_udf(rt)
-    def setop(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = []
-        for blob_a, blob_b in zip(sa, sb):
-            if blob_a is None or blob_b is None:
-                out.append(None)
-                continue
-            try:
-                a, b = _theta_pair(blob_a, blob_b)
-                if op == "jaccard":
-                    out.append(a.jaccard_estimate(b))
-                elif op == "intersection":
-                    out.append(a.intersection_estimate(b))
-                else:
-                    out.append(a.a_not_b_estimate(b))
-            except Exception as e:
-                log.warning("theta set op %s: corrupt state: %s", op, e)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    return setop
+    return state_udf("approx_join_size", LongType(), FreqItemsSketch, jsize,
+                     states=2)
 
 
 # --------------------------------------------------------------------- distinct count
-
-def hll_acc_udf(lgk: int):
-    """Accumulate into the engine's numpy HLL (sparse->dense) state."""
-    @pandas_udf(BinaryType())
-    def acc(v: pd.Series) -> bytes:
-        v = v.dropna()
-        if v.empty:
-            return None
-        sk = HllSketch(lgk=lgk)
-        sk.update_hashes(hash_series(v))
-        return sk.serialize()
-
-    return acc
-
-
-def cpc_wire_acc_udf(lgk: int, item_type: str = ITEM_STR):
-    """Accumulate into a GENUINE Apache DataSketches CPC state (wire
-    bytes, family 16) — byte-compatible with the reference engine's
-    default accumulate states and with datasketches-java
-    (``sketches/cpc_state.py::CpcAccumulator``; hashes bit-identical to
-    ``CpcSketch.update``). The slower path vs the engine HLL (strings
-    hash per item in Python) — use when states must be readable by the
-    reference side without an export step."""
-    from ..sketches.cpc_state import CpcAccumulator
-
-    @pandas_udf(BinaryType())
-    def acc(v: pd.Series) -> bytes:
-        v = v.dropna()
-        if v.empty:
-            return None
-        sk = CpcAccumulator(lgk)
-        if item_type == ITEM_LONG:
-            sk.update_longs(_wire_longs(v))
-        else:
-            sk.update_strings(_wire_strings(v))
-        return sk.serialize()
-
-    return acc
-
-
-def theta_wire_acc_udf(k: int, item_type: str = ITEM_STR):
-    """Accumulate into a GENUINE Apache DataSketches compact Theta state
-    (wire bytes, family 3) — set-operable with sketches built by
-    datasketches-java over overlapping data (``compat/theta.py``;
-    byte-identical in the exact regime)."""
-    from ..compat.theta import ThetaWireAccumulator
-
-    @pandas_udf(BinaryType())
-    def acc(v: pd.Series) -> bytes:
-        v = v.dropna()
-        if v.empty:
-            return None
-        sk = ThetaWireAccumulator(k)
-        if item_type == ITEM_LONG:
-            sk.update_longs(_wire_longs(v))
-        else:
-            sk.update_strings(_wire_strings(v))
-        return sk.serialize()
-
-    return acc
-
-
-def hll_direct_udf(lgk: int):
-    """Direct NDV estimate via the engine's numpy HLL — exact while the
-    sketch is in its sparse phase (NDV <= 2^(lgk-3)), CPC-class RSE past
-    it. Serves the CPC name (conf.distinct_cpc_lgk)."""
-    @pandas_udf(LongType())
-    def direct(v: pd.Series) -> int:
-        v = v.dropna()
-        if v.empty:
-            return None
-        sk = HllSketch(lgk=lgk)
-        sk.update_hashes(hash_series(v))
-        return sk.estimate()
-
-    return direct
-
-
-def theta_acc_udf(k: int):
-    @pandas_udf(BinaryType())
-    def acc(v: pd.Series) -> bytes:
-        v = v.dropna()
-        if v.empty:
-            return None
-        sk = ThetaSketch(k=k)
-        sk.update_hashes(hash_series(v))
-        return sk.serialize()
-
-    return acc
-
-
-def theta_direct_udf(k: int):
-    @pandas_udf(LongType())
-    def direct(v: pd.Series) -> int:
-        v = v.dropna()
-        if v.empty:
-            return None
-        sk = ThetaSketch(k=k)
-        sk.update_hashes(hash_series(v))
-        return sk.estimate()
-
-    return direct
-
 
 def theta_est_udf():
     """Estimate for distinct-count states — accepts both Theta/KMV and the
     engine's numpy HLL states (dispatch on the state header), mirroring the
     family-agnostic combine."""
-    @pandas_udf(LongType())
-    def est(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                from ..compat.theta import ThetaWireSketch
-                sk = deserialize_any(bytes(blob))
-                if not isinstance(sk, (ThetaSketch, HllSketch,
-                                       CpcUnionSketch, ThetaWireSketch)):
-                    raise ValueError("not a distinct-count state")
-                out.append(sk.estimate())
-            except Exception as e:
-                log.warning("approx_count_distinct_estimate: corrupt state: %s", e)
-                out.append(None)
-        return pd.Series(out, dtype=object)
+    from ..compat.theta import ThetaWireSketch
+    return state_udf("approx_count_distinct_estimate", LongType(),
+                     (ThetaSketch, HllSketch, CpcUnionSketch, ThetaWireSketch),
+                     lambda sk: sk.estimate())
 
-    return est
+
+def distinct_bounds_udf(name: str = "approx_count_distinct_bounds"):
+    """Scalar: (theta state, num_std) -> [lower, upper] NDV bounds.
+
+    Exact-regime sketches (Theta with all hashes retained; HLL still in
+    its sparse coupon phase) return the exact count for both ends. In
+    estimation mode the relative standard error is ``1/sqrt(k-2)`` for
+    Theta/KMV (Beyer et al., SIGMOD'07; the constant the DataSketches
+    Theta getLowerBound/getUpperBound envelope is built on) and
+    ``1.04/sqrt(2^lgk)`` for dense HLL (Flajolet et al., 2007), so
+    bounds are ``est / (1 +/- num_std * rse)``. Empirical coverage at
+    num_std=2 measured ~98% over 60 trials per family
+    (`tests/test_accuracy_bounds.py`)."""
+
+    def std_args(ns):
+        ns = 2.0 if _is_null(ns) else float(ns)
+        if ns <= 0:
+            raise ValueError(f"{name}: num_std must be > 0")
+        return ns,
+
+    def bounds(sk, ns):
+        if isinstance(sk, HllSketch):
+            exact, rse = sk.is_sparse, 1.04 / np.sqrt(1 << sk.lgk)
+        else:  # same KMV bottom-k sample -> same Beyer RSE class
+            exact, rse = sk.is_exact(), 1.0 / np.sqrt(sk.k - 2)
+        est = sk.estimate()
+        if exact:
+            return [int(est), int(est)]
+        return [int(np.floor(est / (1 + ns * rse))),
+                int(np.ceil(est / max(1e-12, 1 - ns * rse)))]
+
+    return state_udf(name, ArrayType(LongType(), containsNull=False),
+                     (ThetaSketch, TupleSketch, HllSketch), bounds,
+                     args=std_args)
+
+
+def theta_setop_udf(op: str):
+    """Scalar over two Theta states: 'jaccard' -> double, 'intersection' /
+    'a_not_b' -> long. Null/corrupt state -> null (estimate-side parity).
+    A pair of DataSketches Theta states shares one hash space; mixing one
+    with an engine KMV state does not, and gives null."""
+    from ..compat.theta import ThetaWireSketch
+    name, method = {"jaccard": ("approx_set_jaccard", "jaccard_estimate"),
+                    "intersection": ("approx_set_intersection",
+                                     "intersection_estimate"),
+                    "a_not_b": ("approx_set_difference",
+                                "a_not_b_estimate")}[op]
+
+    def setop(a, b):
+        if isinstance(a, ThetaWireSketch) != isinstance(b, ThetaWireSketch):
+            raise ValueError(
+                "cannot mix a DataSketches Theta state with an engine KMV "
+                "state (different hash spaces); re-accumulate one side")
+        return getattr(a, method)(b)
+
+    return state_udf(name, DoubleType() if op == "jaccard" else LongType(),
+                     (ThetaSketch, ThetaWireSketch), setop, states=2)
 
 
 # --------------------------------------------------------------------- tuple
-
-def aod_wire_acc_udf(k: int, item_type: str = ITEM_STR):
-    """GROUPED_AGG: (key, value) -> a GENUINE Apache DataSketches
-    Tuple/ArrayOfDoubles compact state (wire bytes, family 9) — readable
-    by ``ArrayOfDoublesSketches.heapifySketch`` and union-able with
-    states built by datasketches-java over overlapping data
-    (``compat/aod.py``; same retained keys in the exact regime). Values
-    follow the [1.0, x] convention, so summaries are per-key (row count,
-    value sum) and the engine tuple estimators read foreign copies."""
-    from ..compat.aod import AodWireAccumulator
-
-    @pandas_udf(BinaryType())
-    def acc(key: pd.Series, value: pd.Series) -> bytes:
-        mask = key.notna()
-        if not mask.any():
-            return None
-        key = key[mask]
-        v = pd.to_numeric(value[mask], errors="coerce") \
-            .fillna(0.0).to_numpy(np.float64)
-        sk = AodWireAccumulator(k)
-        if item_type == ITEM_LONG:
-            sk.update_longs(_wire_longs(key), v)
-        else:
-            sk.update_strings(_wire_strings(key), v)
-        return sk.serialize()
-
-    return acc
-
-
-def tuple_acc_udf(k: int):
-    """GROUPED_AGG: (key, value) -> serialized tuple state. Null-key rows
-    are dropped (a null key is no key); a null value counts the row with
-    a 0.0 contribution (count(*)/sum(value) SQL semantics)."""
-    from ..sketches import TupleSketch
-
-    @pandas_udf(BinaryType())
-    def acc(key: pd.Series, value: pd.Series) -> bytes:
-        mask = key.notna()
-        if not mask.any():
-            return None
-        key = key[mask]
-        v = pd.to_numeric(value[mask], errors="coerce") \
-            .fillna(0.0).to_numpy(np.float64)
-        sk = TupleSketch(k=k)
-        sk.update_batch(hash_series(key), v)
-        return sk.serialize()
-
-    return acc
-
 
 TUPLE_EST_TYPE = StructType([
     StructField("ndv", LongType()),
@@ -798,152 +517,76 @@ TUPLE_SEGMENT_TYPE = StructType([
 ])
 
 
+def _tuple_kinds():
+    from ..compat.aod import AodWireSketch
+    return TupleSketch, AodWireSketch
+
+
 def tuple_est_udf():
     """Scalar: tuple state -> struct(ndv, rows, value_sum). Foreign
     ArrayOfDoubles (DataSketches Tuple wire, family 9) states decode too
     when they carry the two-value (count, sum) convention
     (``compat/aod.py``)."""
-    from ..compat.aod import AodWireSketch
-    from ..sketches import TupleSketch
-
-    @pandas_udf(TUPLE_EST_TYPE)
-    def est(states: pd.Series) -> pd.DataFrame:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append((None, None, None))
-                continue
-            try:
-                sk = deserialize_any(bytes(blob))
-                if not isinstance(sk, (TupleSketch, AodWireSketch)):
-                    raise ValueError("not a tuple state")
-                out.append((sk.estimate(), sk.rows_estimate(),
-                            sk.sum_estimate()))
-            except Exception as e:
-                log.warning("approx_tuple_estimate: corrupt state: %s", e)
-                out.append((None, None, None))
-        return pd.DataFrame(out, columns=["ndv", "rows", "value_sum"])
-
-    return est
+    return state_udf(
+        "approx_tuple_estimate", TUPLE_EST_TYPE, _tuple_kinds(),
+        lambda sk: (sk.estimate(), sk.rows_estimate(), sk.sum_estimate()))
 
 
 def tuple_segment_udf():
     """Scalar: (tuple state, min_count) -> struct(keys, value_sum) for
     the segment of keys with per-key row count >= min_count."""
-    from ..compat.aod import AodWireSketch
-    from ..sketches import TupleSketch
-
-    @pandas_udf(TUPLE_SEGMENT_TYPE)
-    def seg(states: pd.Series, min_count: pd.Series) -> pd.DataFrame:
-        out = []
-        for blob, mc in zip(states, min_count):
-            if blob is None:
-                out.append((None, None))
-                continue
-            try:
-                sk = deserialize_any(bytes(blob))
-                if not isinstance(sk, (TupleSketch, AodWireSketch)):
-                    raise ValueError("not a tuple state")
-                mc = 1 if _is_nullish(mc) else int(mc)
-                out.append(sk.segment_estimate(min_count=mc))
-            except Exception as e:
-                log.warning(
-                    "approx_tuple_segment_estimate: corrupt state: %s", e)
-                out.append((None, None))
-        return pd.DataFrame(out, columns=["keys", "value_sum"])
-
-    return seg
+    return state_udf(
+        "approx_tuple_segment_estimate", TUPLE_SEGMENT_TYPE, _tuple_kinds(),
+        lambda sk, mc: sk.segment_estimate(min_count=mc),
+        args=lambda mc: (1 if _is_null(mc) else int(mc),))
 
 
 def tuple_segment_sum_udf():
     """Scalar: (tuple state, min_count, min_sum) -> struct(keys,
     value_sum) for keys with per-key count >= min_count AND per-key sum
     >= min_sum (the value-weighted segment form)."""
-    from ..compat.aod import AodWireSketch
-    from ..sketches import TupleSketch
-
-    @pandas_udf(TUPLE_SEGMENT_TYPE)
-    def seg(states: pd.Series, min_count: pd.Series,
-            min_sum: pd.Series) -> pd.DataFrame:
-        out = []
-        for blob, mc, ms in zip(states, min_count, min_sum):
-            if blob is None:
-                out.append((None, None))
-                continue
-            try:
-                sk = deserialize_any(bytes(blob))
-                if not isinstance(sk, (TupleSketch, AodWireSketch)):
-                    raise ValueError("not a tuple state")
-                mc = 1 if _is_nullish(mc) else int(mc)
-                ms = float("-inf") if _is_nullish(ms) else float(ms)
-                out.append(sk.segment_estimate(min_count=mc, min_sum=ms))
-            except Exception as ex:
-                log.warning(
-                    "approx_tuple_segment_estimate: corrupt state: %s", ex)
-                out.append((None, None))
-        return pd.DataFrame(out, columns=["keys", "value_sum"])
-
-    return seg
+    return state_udf(
+        "approx_tuple_segment_estimate", TUPLE_SEGMENT_TYPE, _tuple_kinds(),
+        lambda sk, mc, ms: sk.segment_estimate(min_count=mc, min_sum=ms),
+        args=lambda mc, ms: (1 if _is_null(mc) else int(mc),
+                             float("-inf") if _is_null(ms) else float(ms)))
 
 
 # --------------------------------------------------------------------- bloom
 
 
+def _bloom_kinds():
+    from ..compat.bloomwire import DsBloomFilter
+    from ..sketches import BloomFilter
+    return BloomFilter, DsBloomFilter
+
+
+def bloom_estimate_udf():
+    """Scalar: bloom state -> distinct-key estimate (fill-ratio based,
+    Swamidass & Baldi 2007). Saturated filter -> null."""
+    def est(sk):
+        n = sk.estimate()
+        return None if n < 0 else n
+
+    return state_udf("approx_membership_estimate", LongType(),
+                     _bloom_kinds(), est)
+
+
+def bloom_fpp_udf():
+    """Scalar: bloom state -> CURRENT false-positive probability
+    (fill_fraction ** n_hashes) — the read-time error surface of the
+    membership family, like approx_count_distinct_bounds for NDV."""
+    return state_udf("approx_membership_fpp", DoubleType(), _bloom_kinds(),
+                     lambda sk: sk.current_fpp())
+
+
 def _bloom_state(blob):
     """Deserialize either membership dialect: the engine family or a
     DataSketches family-21 wire image."""
-    from ..compat.bloomwire import DsBloomFilter
-    from ..sketches import BloomFilter
     sk = deserialize_any(bytes(blob))
-    if not isinstance(sk, (BloomFilter, DsBloomFilter)):
+    if not isinstance(sk, _bloom_kinds()):
         raise ValueError("not a bloom state")
     return sk
-
-
-def _wire_longs(vals: pd.Series) -> np.ndarray:
-    """Null-free series -> int64 keys for a wire-filter long path.
-
-    Integer dtypes convert directly (lossless, incl. pandas ``Int64``).
-    Object dtypes (decimal strings / python ints) parse per element —
-    exact at any magnitude. Float dtypes must be integral-valued:
-    a nullable bigint column crosses Arrow as float64 whenever the
-    batch holds a null, so an integral float batch is an int column in
-    disguise and converts losslessly (keys above 2^53 were already
-    degraded by that Arrow conversion — plan-time ``item_type='long'``
-    in the membership API routes around it by shipping the keys as
-    cast-to-string). A genuinely fractional value under
-    ``item_type='long'`` is a caller error: silently rounding would
-    produce wrong keys with no signal, so it raises instead."""
-    if pd.api.types.is_integer_dtype(vals):
-        return vals.to_numpy(dtype=np.int64)
-    if pd.api.types.is_float_dtype(vals):
-        arr = vals.to_numpy(dtype=np.float64)
-        if arr.size and not (np.all(np.isfinite(arr))
-                             and np.all(arr == np.floor(arr))):
-            bad = arr[~(np.isfinite(arr) & (arr == np.floor(arr)))][0]
-            raise ValueError(
-                "item_type='long' requires integral keys; got a "
-                f"non-integral double value {bad!r} — cast the column "
-                "to BIGINT explicitly, or use item_type='string'")
-        return arr.astype(np.int64)
-    return np.fromiter((int(x) for x in vals), dtype=np.int64,
-                       count=len(vals))
-
-
-def _wire_strings(vals: pd.Series) -> list:
-    """Null-free series -> string keys for a wire-filter string path.
-    Integral-valued float batches render through int64 first so a
-    nullable bigint column yields '17', not '17.0' — the same logical
-    value must hash identically whether or not its Arrow batch happened
-    to contain a null."""
-    if pd.api.types.is_float_dtype(vals):
-        arr = vals.to_numpy(dtype=np.float64)
-        if arr.size and np.all(np.isfinite(arr)) \
-                and np.all(arr == np.floor(arr)):
-            return [str(x) for x in arr.astype(np.int64)]
-    elif pd.api.types.is_integer_dtype(vals):
-        return [str(x) for x in vals.to_numpy(dtype=np.int64)]
-    return vals.astype(str).tolist()
 
 
 def _bloom_probe(sk, vals: pd.Series,
@@ -985,122 +628,52 @@ def _bloom_probe(sk, vals: pd.Series,
     return sk.contains_strings(_wire_strings(vals))
 
 
-def bloom_acc_udf(expected_items: int, fpp: float):
-    """GROUPED_AGG: raw values -> serialized Bloom membership state.
-    Geometry is fixed by the (expected_items, fpp) design so every
-    partial in one aggregation merges (same rule as grouped theta k)."""
-    from ..sketches import BloomFilter
+def _probe_rows(sk, vals: pd.Series, item_type) -> np.ndarray:
+    """Per-row membership of ``vals`` in ``sk``; a null value gives null."""
+    out = np.full(len(vals), None, dtype=object)
+    ok = vals.notna().to_numpy()
+    if ok.any():
+        hits = _bloom_probe(sk, vals[ok.tolist()], item_type)
+        out[ok] = [bool(b) for b in hits]
+    return out
 
-    @pandas_udf(BinaryType())
-    def acc(v: pd.Series) -> bytes:
-        v = v.dropna()
-        if v.empty:
-            return None
-        sk = BloomFilter.design(expected_items, fpp)
-        sk.update_hashes(hash_series(v))
-        return sk.serialize()
 
-    return acc
+def _positions(values, key=lambda v: v):
+    """Yield (key, positional index array) per distinct ``key(value)`` in
+    the batch — bytes aren't hashable-groupable through pandas groupby on
+    all versions, so group positionally."""
+    groups: dict = {}
+    for i, v in enumerate(values):
+        groups.setdefault(key(v), []).append(i)
+    for k, idx in groups.items():
+        yield k, np.asarray(idx, dtype=np.int64)
 
 
 def bloom_contains_udf(item_type: str | None = None):
     """Scalar: (bloom state, value) -> boolean membership test. The
     state column is usually one broadcast literal repeated per row, so
-    the deserialized filter is cached per distinct byte payload within
-    the Arrow batch (one decode per batch in the common case).
+    rows are grouped by state payload: one decode and one vectorized
+    probe per distinct state in the Arrow batch.
     ``item_type`` pins the wire-filter hash path at plan time (see
     :func:`_bloom_probe`); None keeps the dtype heuristic."""
-    from ..sketches import BloomFilter
 
     @pandas_udf(BooleanType())
     def contains(states: pd.Series, v: pd.Series) -> pd.Series:
         out = np.full(len(v), None, dtype=object)
-        cache: dict[bytes, BloomFilter] = {}
-        # group rows by state payload; vectorize the probe per group
-        for blob, idx in _bloom_state_groups(states):
+        for blob, idx in _positions(
+                states, lambda b: None if b is None else bytes(b)):
             if blob is None:
                 continue
             try:
-                sk = cache.get(blob)
-                if sk is None:
-                    sk = _bloom_state(blob)
-                    cache[blob] = sk
+                sk = _bloom_state(blob)
             except Exception as ex:
                 log.warning(
                     "approx_membership_contains: corrupt state: %s", ex)
                 continue
-            vals = v.iloc[idx]
-            ok = vals.notna().to_numpy()
-            res = np.full(len(vals), None, dtype=object)
-            if ok.any():
-                hits = _bloom_probe(sk, vals[ok.tolist()], item_type)
-                res[ok] = [bool(b) for b in hits]
-            out[idx] = res
+            out[idx] = _probe_rows(sk, v.iloc[idx], item_type)
         return pd.Series(out, dtype=object)
 
     return contains
-
-
-def _bloom_state_groups(states: pd.Series):
-    """Yield (state_bytes_or_None, positional_index_array) per distinct
-    state payload in the batch — bytes aren't hashable-groupable through
-    pandas groupby on all versions, so group positionally."""
-    groups: dict[bytes | None, list[int]] = {}
-    for i, blob in enumerate(states):
-        key = None if blob is None else bytes(blob)
-        groups.setdefault(key, []).append(i)
-    for key, idx in groups.items():
-        yield key, np.asarray(idx, dtype=np.int64)
-
-
-def bloom_estimate_udf():
-    """Scalar: bloom state -> distinct-key estimate (fill-ratio based,
-    Swamidass & Baldi 2007). Saturated filter -> null."""
-    from ..sketches import BloomFilter
-
-    @pandas_udf(LongType())
-    def est(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                sk = _bloom_state(blob)
-                n = sk.estimate()
-                out.append(None if n < 0 else n)
-            except Exception as ex:
-                log.warning(
-                    "approx_membership_estimate: corrupt state: %s", ex)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    return est
-
-
-def bloom_fpp_udf():
-    """Scalar: bloom state -> CURRENT false-positive probability
-    (fill_fraction ** n_hashes) — the read-time error surface of the
-    membership family, like approx_count_distinct_bounds for NDV."""
-    from ..sketches import BloomFilter
-
-    @pandas_udf(DoubleType())
-    def fpp(states: pd.Series) -> pd.Series:
-        out = []
-        for blob in states:
-            if blob is None:
-                out.append(None)
-                continue
-            try:
-                sk = _bloom_state(blob)
-                out.append(sk.current_fpp())
-            except Exception as ex:
-                log.warning(
-                    "approx_membership_fpp: corrupt state: %s", ex)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    return fpp
 
 
 def bloom_contains_broadcast_udf(bc, item_type: str | None = None):
@@ -1112,22 +685,14 @@ def bloom_contains_broadcast_udf(bc, item_type: str | None = None):
     state once per executor and deserializes once per python worker.
     ``bc`` is ``sc.broadcast(state_bytes)``. ``item_type`` pins the
     wire-filter hash path at plan time (see :func:`_bloom_probe`)."""
-    from ..sketches import BloomFilter
-
-    holder: dict[int, BloomFilter] = {}
+    holder: dict = {}
 
     @pandas_udf(BooleanType())
     def contains(v: pd.Series) -> pd.Series:
         sk = holder.get(0)
         if sk is None:
-            sk = _bloom_state(bc.value)
-            holder[0] = sk
-        out = np.full(len(v), None, dtype=object)
-        ok = v.notna().to_numpy()
-        if ok.any():
-            hits = _bloom_probe(sk, v[ok.tolist()], item_type)
-            out[ok] = [bool(b) for b in hits]
-        return pd.Series(out, dtype=object)
+            sk = holder[0] = _bloom_state(bc.value)
+        return pd.Series(_probe_rows(sk, v, item_type), dtype=object)
 
     return contains
 
@@ -1139,70 +704,20 @@ def bloom_contains_keyed_udf(bc, item_type: str | None = None):
     Args: (group_key, value) -> boolean; unknown group or null -> null.
     Same rationale as :func:`bloom_contains_broadcast_udf` — the state
     must not ride a column past Arrow once per probe row."""
-    from ..sketches import BloomFilter
-
-    cache: dict[object, BloomFilter] = {}
+    cache: dict = {}
 
     @pandas_udf(BooleanType())
     def contains(key: pd.Series, v: pd.Series) -> pd.Series:
         out = np.full(len(v), None, dtype=object)
         states = bc.value
-        for kval, idx in _bloom_probe_groups(key):
-            blob = states.get(kval)
+        for kval, idx in _positions(key):
+            blob = None if kval is None else states.get(kval)
             if blob is None:
                 continue
             sk = cache.get(kval)
             if sk is None:
-                sk = _bloom_state(blob)
-                cache[kval] = sk
-            vals = v.iloc[idx]
-            ok = vals.notna().to_numpy()
-            res = np.full(len(vals), None, dtype=object)
-            if ok.any():
-                hits = _bloom_probe(sk, vals[ok.tolist()], item_type)
-                res[ok] = [bool(b) for b in hits]
-            out[idx] = res
+                sk = cache[kval] = _bloom_state(blob)
+            out[idx] = _probe_rows(sk, v.iloc[idx], item_type)
         return pd.Series(out, dtype=object)
 
     return contains
-
-
-def _bloom_probe_groups(key: pd.Series):
-    groups: dict[object, list[int]] = {}
-    for i, kv in enumerate(key):
-        if kv is None:
-            continue
-        groups.setdefault(kv, []).append(i)
-    for kv, idx in groups.items():
-        yield kv, np.asarray(idx, dtype=np.int64)
-
-
-def bloomwire_acc_udf(expected_items: int, fpp: float, seed: int,
-                      item_type: str = ITEM_STR):
-    """GROUPED_AGG: raw values -> a GENUINE DataSketches BloomFilter
-    wire image (family 21; byte-identical to datasketches-java for the
-    same update stream). ``item_type`` is resolved ONCE at plan time —
-    the Java update() overload rule is static, and dispatching on the
-    observed pandas dtype would make state content null-dependent (a
-    nullable bigint group crosses Arrow as float64 exactly when the
-    group holds a null, so the same logical data would hash as longs in
-    one group and as '1.0'-style strings in another). ``ITEM_LONG``
-    hashes 8-byte LE longs (integral float batches convert losslessly
-    below 2^53; the membership API's plan-time cast-to-string routes
-    larger keys exactly); the default hashes UTF-8 strings with
-    integral floats rendered as ints for the same null-independence."""
-    from ..compat.bloomwire import DsBloomFilter
-
-    @pandas_udf(BinaryType())
-    def acc(v: pd.Series) -> bytes:
-        v = v.dropna()
-        if v.empty:
-            return None
-        sk = DsBloomFilter.design(expected_items, fpp, seed)
-        if item_type == ITEM_LONG:
-            sk.update_longs(_wire_longs(v))
-        else:
-            sk.update_strings(_wire_strings(v))
-        return sk.serialize()
-
-    return acc

@@ -144,7 +144,8 @@ def _domain_stats_sketched(base: DataFrame, family: str,
         StructType,
     )
 
-    from .sketch_agg import _family, _iter_groups
+    from ..families import _family
+    from .sketch_agg import _iter_groups
 
     fam = (_family("theta", k=ndv_k) if family == "theta"
            else _family("hll", lgk=ndv_k))

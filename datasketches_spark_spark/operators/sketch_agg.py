@@ -29,473 +29,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BinaryType, StructField, StructType
 
-from .. import conf
+from ..families import _family
 from ..functions.udfs import combine_udf
-from ..sketches import (
-    ITEM_DOUBLE,
-    ITEM_LONG,
-    ITEM_STR,
-    FreqItemsSketch,
-    HllSketch,
-    ReservoirSketch,
-    ThetaSketch,
-    TupleSketch,
-    WeightedReservoirSketch,
-    deserialize_any,
-    hash_series,
-    make_quantile_sketch,
-)
-
-_QUANTILE_DTYPES = {"KLL": np.float32, "REQ": np.float32, "MERGEABLE": np.float64}
-
-
-# --------------------------------------------------------------------- families
-
-class _Family:
-    """Per-family kernel: ``prep`` runs ONCE per Arrow batch (vectorized
-    cleaning/hashing of the whole column), ``update`` folds a numpy
-    position slice of the prepped batch into one sketch. This split is what
-    makes many-tiny-groups workloads fast: per-group work is a numpy slice
-    + one sketch call, with no per-group pandas Series construction."""
-
-    __slots__ = ("make", "prep", "update")
-
-    def __init__(self, make, prep, update):
-        self.make = make
-        self.prep = prep
-        self.update = update
-
-    def update_series(self, sk, values: pd.Series) -> None:
-        ctx = self.prep(values)
-        self.update(sk, ctx, None)
-
-
-def _quantile_family(impl: str | None, k: int | None) -> _Family:
-    impl = (impl or conf.quantile_impl()).upper()
-    k = k or conf.quantile_k(impl)
-    dtype = _QUANTILE_DTYPES[impl]
-
-    def prep(values: pd.Series):
-        # keep NaNs in place (update_batch drops them) so positions align
-        return pd.to_numeric(values, errors="coerce").to_numpy(np.float64)
-
-    def update(sk, arr, idx):
-        sk.update_batch(arr if idx is None else arr[idx])
-
-    return _Family(lambda: make_quantile_sketch(impl, k, dtype), prep, update)
-
-
-def _freq_family(item_type: str, max_map_size: int | None) -> _Family:
-    m = max_map_size or conf.freq_max_map_size()
-
-    if item_type == ITEM_LONG:
-        def prep(values: pd.Series):
-            arr = pd.to_numeric(values, errors="coerce")
-            mask = arr.notna().to_numpy()
-            ints = arr.fillna(0).to_numpy(np.int64)
-            return ints, mask
-    else:
-        def prep(values: pd.Series):
-            # null-independent string rendering: a nullable bigint
-            # batch crosses Arrow as float64, and str() would emit
-            # '1.0'-style items in exactly the batches holding a null
-            from ..functions.udfs import _wire_strings
-            mask = values.notna().to_numpy()
-            out = np.empty(len(values), object)
-            if mask.any():
-                out[mask] = np.asarray(_wire_strings(values[mask]),
-                                       dtype=object)
-            return out, mask
-
-    def update(sk, ctx, idx):
-        vals, mask = ctx
-        if idx is not None:
-            vals, mask = vals[idx], mask[idx]
-        items = vals[mask]
-        if items.size:
-            sk.update_batch(items.tolist())
-
-    return _Family(lambda: FreqItemsSketch(max_map_size=m,
-                                           item_type=item_type), prep, update)
-
-
-def _hashed_prep(values: pd.Series):
-    """Whole-batch vectorized hashing with NaN-position mask (theta/hll)."""
-    mask = values.notna().to_numpy()
-    hashes = np.zeros(len(values), dtype=np.uint64)
-    if mask.any():
-        hashes[mask] = hash_series(values[mask])
-    return hashes, mask
-
-
-def _hashed_update(sk, ctx, idx):
-    hashes, mask = ctx
-    if idx is not None:
-        hashes, mask = hashes[idx], mask[idx]
-    h = hashes[mask]
-    if h.size:
-        sk.update_hashes(h)
-
-
-def _theta_family(k: int | None) -> _Family:
-    k = k or conf.distinct_theta_k()
-    return _Family(lambda: ThetaSketch(k=k), _hashed_prep, _hashed_update)
-
-
-def _hll_family(lgk: int | None) -> _Family:
-    lgk = lgk or conf.distinct_hll_lgk()
-    return _Family(lambda: HllSketch(lgk=lgk), _hashed_prep, _hashed_update)
-
-
-def _bloomwire_family(expected: int | None, fpp: float | None,
-                      seed: int, item_type: str) -> _Family:
-    """DataSketches BloomFilter WIRE family (compat/bloomwire.py):
-    partials are genuine family-21 images; the declared ``item_type``
-    picks the hash path (longs as 8-byte LE / strings as UTF-8 — the
-    Java update() overload rule). Rendering goes through the shared
-    wire helpers so state content is independent of which Arrow batch
-    a null lands in (a nullable bigint batch crosses as float64)."""
-    from ..compat.bloomwire import DsBloomFilter
-    from ..functions.udfs import _wire_longs, _wire_strings
-    expected = expected or conf.membership_expected()
-    fpp = fpp if fpp is not None else conf.membership_fpp()
-
-    if item_type == ITEM_LONG:
-        def prep(values: pd.Series):
-            mask = values.notna().to_numpy()
-            out = np.zeros(len(values), np.int64)
-            if mask.any():
-                out[mask] = _wire_longs(values[mask])
-            return out, mask
-
-        def update(sk, ctx, idx):
-            vals, mask = ctx
-            if idx is not None:
-                vals, mask = vals[idx], mask[idx]
-            items = vals[mask]
-            if items.size:
-                sk.update_longs(items)
-    else:
-        def prep(values: pd.Series):
-            mask = values.notna().to_numpy()
-            out = np.empty(len(values), object)
-            if mask.any():
-                out[mask] = np.asarray(_wire_strings(values[mask]),
-                                       dtype=object)
-            return out, mask
-
-        def update(sk, ctx, idx):
-            vals, mask = ctx
-            if idx is not None:
-                vals, mask = vals[idx], mask[idx]
-            items = vals[mask]
-            if items.size:
-                sk.update_strings(items.tolist())
-
-    return _Family(lambda: DsBloomFilter.design(expected, fpp, seed),
-                   prep, update)
-
-
-def _bloom_family(expected: int | None, fpp: float | None) -> _Family:
-    """Bloom membership family — same hashed kernel as theta/hll (the
-    shared 64-bit hash space); geometry fixed by the design point so
-    every partial in one aggregation merges bit-exactly."""
-    from ..sketches import BloomFilter
-    expected = expected or conf.membership_expected()
-    fpp = fpp if fpp is not None else conf.membership_fpp()
-    return _Family(lambda: BloomFilter.design(expected, fpp),
-                   _hashed_prep, _hashed_update)
-
-
-def _cpcwire_family(lgk: int | None, item_type: str) -> _Family:
-    """Genuine-CPC family: partials are CPC WIRE bytes (CpcAccumulator
-    serializes to the Apache DataSketches format), merged via the
-    family-16 byte-sniff like any foreign CPC state. Long columns hash
-    vectorized; strings hash per item once per Arrow batch."""
-    from ..sketches.cpc_state import CpcAccumulator
-    from ..sketches.murmur3 import hash128_bytes, hash128_longs
-    lgk = lgk or conf.distinct_cpc_wire_lgk()
-
-    if item_type == ITEM_LONG:
-        def prep(values: pd.Series):
-            mask = values.notna().to_numpy()
-            h1 = np.zeros(len(values), np.uint64)
-            h2 = np.zeros(len(values), np.uint64)
-            if mask.any():
-                arr = pd.to_numeric(values[mask]).to_numpy(np.int64)
-                h1[mask], h2[mask] = hash128_longs(arr)
-            return h1, h2, mask
-    else:
-        def prep(values: pd.Series):
-            from ..functions.udfs import _wire_strings
-            mask = (values.notna() & (values != "")).to_numpy()
-            h1 = np.zeros(len(values), np.uint64)
-            h2 = np.zeros(len(values), np.uint64)
-            if mask.any():
-                enc = [s.encode("utf-8")
-                       for s in _wire_strings(values[mask])]
-                h1[mask], h2[mask] = hash128_bytes(enc)
-            return h1, h2, mask
-
-    def update(sk, ctx, idx):
-        h1, h2, mask = ctx
-        if idx is not None:
-            h1, h2, mask = h1[idx], h2[idx], mask[idx]
-        if mask.any():
-            sk.update_hashes128(h1[mask], h2[mask])
-
-    return _Family(lambda: CpcAccumulator(lgk), prep, update)
-
-
-def _thetawire_family(k: int | None, item_type: str) -> _Family:
-    """Genuine DataSketches compact-Theta family: partials are family-3
-    wire bytes, merged via the byte-sniff (``compat/theta.py``)."""
-    from ..compat.theta import ThetaWireAccumulator
-    from ..sketches.murmur3 import hash128_bytes, hash128_longs
-    k = k or conf.distinct_theta_k()
-
-    if item_type == ITEM_LONG:
-        def prep(values: pd.Series):
-            mask = values.notna().to_numpy()
-            h = np.zeros(len(values), np.uint64)
-            if mask.any():
-                arr = pd.to_numeric(values[mask]).to_numpy(np.int64)
-                h[mask] = hash128_longs(arr)[0]
-            return h, mask
-    else:
-        def prep(values: pd.Series):
-            from ..functions.udfs import _wire_strings
-            mask = (values.notna() & (values != "")).to_numpy()
-            h = np.zeros(len(values), np.uint64)
-            if mask.any():
-                enc = [s.encode("utf-8")
-                       for s in _wire_strings(values[mask])]
-                h[mask] = hash128_bytes(enc)[0]
-            return h, mask
-
-    def update(sk, ctx, idx):
-        h, mask = ctx
-        if idx is not None:
-            h, mask = h[idx], mask[idx]
-        if mask.any():
-            sk._fold(h[mask].copy())
-
-    return _Family(lambda: ThetaWireAccumulator(k), prep, update)
-
-
-def _reservoir_family(k: int | None, item_type: str) -> _Family:
-    k = k or conf.sample_reservoir_k()
-
-    if item_type == ITEM_STR:
-        def prep(values: pd.Series):
-            from ..functions.udfs import _wire_strings
-            mask = values.notna().to_numpy()
-            out = np.empty(len(values), object)
-            if mask.any():
-                out[mask] = np.asarray(_wire_strings(values[mask]),
-                                       dtype=object)
-            return out, mask
-    elif item_type == ITEM_LONG:
-        def prep(values: pd.Series):
-            arr = pd.to_numeric(values, errors="coerce")
-            mask = arr.notna().to_numpy()
-            return arr.fillna(0).to_numpy(np.int64), mask
-    else:
-        def prep(values: pd.Series):
-            arr = pd.to_numeric(values, errors="coerce").to_numpy(np.float64)
-            return arr, ~np.isnan(arr)
-
-    def update(sk, ctx, idx):
-        vals, mask = ctx
-        if idx is not None:
-            vals, mask = vals[idx], mask[idx]
-        items = vals[mask]
-        if items.size:
-            sk.update_batch(items)
-
-    return _Family(lambda: ReservoirSketch(k=k, item_type=item_type),
-                   prep, update)
-
-
-def _wreservoir_family(k: int | None, item_type: str) -> _Family:
-    """Two-column family: measure col is (value_col, weight_col); prep
-    receives the two-column pandas sub-frame."""
-    k = k or conf.sample_reservoir_k()
-
-    def prep(pdf: pd.DataFrame):
-        vcol, wcol = pdf.columns[0], pdf.columns[1]
-        w = pd.to_numeric(pdf[wcol], errors="coerce").to_numpy(np.float64)
-        if item_type == ITEM_STR:
-            from ..functions.udfs import _wire_strings
-            mask = pdf[vcol].notna().to_numpy()
-            vals = np.empty(len(pdf), object)
-            if mask.any():
-                vals[mask] = np.asarray(_wire_strings(pdf[vcol][mask]),
-                                        dtype=object)
-        elif item_type == ITEM_LONG:
-            arr = pd.to_numeric(pdf[vcol], errors="coerce")
-            mask = arr.notna().to_numpy()
-            vals = arr.fillna(0).to_numpy(np.int64)
-        else:
-            vals = pd.to_numeric(pdf[vcol], errors="coerce") \
-                     .to_numpy(np.float64)
-            mask = ~np.isnan(vals)
-        return vals, w, mask
-
-    def update(sk, ctx, idx):
-        vals, w, mask = ctx
-        if idx is not None:
-            vals, w, mask = vals[idx], w[idx], mask[idx]
-        if mask.any():
-            sk.update_batch(vals[mask], w[mask])
-
-    return _Family(lambda: WeightedReservoirSketch(k=k, item_type=item_type),
-                   prep, update)
-
-
-def _aodwire_family(k: int | None, item_type: str) -> _Family:
-    """Genuine DataSketches Tuple/ArrayOfDoubles family (two-column:
-    measure col is (key_col, value_col)): partials are family-9 wire
-    bytes with [1, x] summaries -> per-key (count, sum), readable by
-    datasketches-java; merged via the byte-sniff union
-    (``compat/aod.py``)."""
-    from ..compat.aod import AodWireAccumulator
-    k = k or conf.tuple_k()
-
-    def prep(pdf: pd.DataFrame):
-        kcol, vcol = pdf.columns[0], pdf.columns[1]
-        mask = pdf[kcol].notna().to_numpy()
-        keys = pdf[kcol].to_numpy()
-        vals = pd.to_numeric(pdf[vcol], errors="coerce") \
-            .fillna(0.0).to_numpy(np.float64)
-        return keys, vals, mask
-
-    def update(sk, ctx, idx):
-        keys, vals, mask = ctx
-        if idx is not None:
-            keys, vals, mask = keys[idx], vals[idx], mask[idx]
-        if not mask.any():
-            return
-        kv, vv = keys[mask], vals[mask]
-        from ..functions.udfs import _wire_longs, _wire_strings
-        if item_type == ITEM_LONG:
-            sk.update_longs(_wire_longs(pd.Series(kv)), vv)
-        else:
-            sk.update_strings(_wire_strings(pd.Series(kv)), vv)
-
-    return _Family(lambda: AodWireAccumulator(k), prep, update)
-
-
-def _tuple_family(k: int | None) -> _Family:
-    """Two-column family: measure col is (key_col, value_col). Null-key
-    rows drop; null values count their row with 0.0 (tuple_acc_udf
-    semantics). Hashing is the theta dispatch, whole-batch vectorized."""
-    k = k or conf.tuple_k()
-
-    def prep(pdf: pd.DataFrame):
-        kcol, vcol = pdf.columns[0], pdf.columns[1]
-        mask = pdf[kcol].notna().to_numpy()
-        hashes = np.zeros(len(pdf), np.uint64)
-        if mask.any():
-            hashes[mask] = hash_series(pdf[kcol][mask])
-        vals = pd.to_numeric(pdf[vcol], errors="coerce") \
-            .fillna(0.0).to_numpy(np.float64)
-        return hashes, vals, mask
-
-    def update(sk, ctx, idx):
-        h, v, mask = ctx
-        if idx is not None:
-            h, v, mask = h[idx], v[idx], mask[idx]
-        if mask.any():
-            sk.update_batch(h[mask], v[mask])
-
-    return _Family(lambda: TupleSketch(k=k), prep, update)
-
-
-class _StateMerger:
-    """Folds pre-serialized sketch states — the ``*_combine`` verb as a
-    partial-capable kernel. Family-agnostic like :func:`combine_udf`
-    (byte-sniff dispatch), so one kernel serves every state the engine or a
-    foreign DataSketches writer produces. Exists so dss.sql can re-plan
-    ``*_estimate(*_combine(state))`` as map-side partial merges + a
-    state-only shuffle instead of the raw-row GROUPED_AGG fallback."""
-
-    __slots__ = ("sk",)
-
-    def __init__(self):
-        self.sk = None
-
-    def merge_blob(self, blob) -> None:
-        sk = deserialize_any(bytes(blob))  # raises on corrupt input
-        self.sk = sk if self.sk is None else self.sk.merge(sk)
-
-    def serialize(self):
-        return None if self.sk is None else self.sk.serialize()
-
-
-def _states_family() -> _Family:
-    def prep(values: pd.Series):
-        mask = values.notna().to_numpy()
-        return values.to_numpy(object), mask
-
-    def update(sk, ctx, idx):
-        vals, mask = ctx
-        if idx is not None:
-            vals, mask = vals[idx], mask[idx]
-        for blob in vals[mask]:
-            sk.merge_blob(blob)
-
-    return _Family(_StateMerger, prep, update)
-
-
-def _family(name: str, **params) -> _Family:
-    if name in ("quantile", "kll", "req", "mergeable"):
-        impl = None if name == "quantile" else name.upper()
-        return _quantile_family(params.get("impl", impl), params.get("k"))
-    if name in ("freq", "freqitems"):
-        return _freq_family(params.get("item_type", ITEM_STR),
-                            params.get("max_map_size"))
-    if name in ("theta", "cpc", "distinct"):
-        return _theta_family(params.get("k"))
-    if name == "hll":
-        return _hll_family(params.get("lgk"))
-    if name == "cpcwire":
-        return _cpcwire_family(params.get("lgk"),
-                               params.get("item_type", ITEM_STR))
-    if name == "thetawire":
-        return _thetawire_family(params.get("k"),
-                                 params.get("item_type", ITEM_STR))
-    if name in ("reservoir", "sample"):
-        return _reservoir_family(params.get("k"),
-                                 params.get("item_type", ITEM_DOUBLE))
-    if name in ("wreservoir", "weighted_sample"):
-        return _wreservoir_family(params.get("k"),
-                                  params.get("item_type", ITEM_DOUBLE))
-    if name == "states":
-        return _states_family()
-    if name == "tuple":
-        return _tuple_family(params.get("k"))
-    if name in ("aodwire", "tuplewire"):
-        return _aodwire_family(params.get("k"),
-                               params.get("item_type", ITEM_STR))
-    if name in ("bloom", "membership"):
-        return _bloom_family(params.get("expected_items"),
-                             params.get("fpp"))
-    if name == "bloomwire":
-        return _bloomwire_family(params.get("expected_items"),
-                                 params.get("fpp"),
-                                 params.get("seed", 0),
-                                 params.get("item_type", ITEM_STR))
-    raise ValueError(f"unknown sketch family {name!r}")
+from ..sketches import ITEM_DOUBLE, ITEM_LONG, ITEM_STR
 
 
 # --------------------------------------------------------------------- operator

@@ -31,359 +31,148 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, BinaryType, DoubleType
 
 from . import conf
+from .families import _ACC_FAMILY, _family, _resolve_acc_family
+from .functions.distinctcnt import ndv_udf
+from .functions.sampling import sample_estimate_udf, sample_size_udf
 from .functions.udfs import (
+    accumulate_udf,
+    bloom_contains_udf,
+    bloom_estimate_udf,
+    bloom_fpp_udf,
+    cdf_est_udf,
     combine_udf,
-    theta_setop_udf,
-    freq_acc_udf,
-    freq_direct_udf,
+    direct_udf,
+    distinct_bounds_udf,
     freq_est_udf,
-    hll_acc_udf,
-    cpc_wire_acc_udf,
-    theta_wire_acc_udf,
-    hll_direct_udf,
-    theta_acc_udf,
-    theta_direct_udf,
+    freq_join_size_udf,
+    freq_maxerr_udf,
+    freq_result_type,
+    frequent_items,
+    ks_distance_udf,
+    percentages_arg,
+    pmf_est_udf,
+    quantile_bounds_udf,
+    quantile_est_udf,
+    rank_est_udf,
     theta_est_udf,
-    validate_num_splits,
-    validate_percentage,
+    theta_setop_udf,
+    tuple_est_udf,
+    tuple_segment_udf,
 )
-from .sketches import (
-    ITEM_LONG,
-    ITEM_STR,
-    deserialize_quantile,
-    make_quantile_sketch,
-)
-
-_DTYPES = {"KLL": np.float32, "REQ": np.float32, "MERGEABLE": np.float64}
+from .sketches import ITEM_DOUBLE, ITEM_LONG, ITEM_STR
+from .sql import _COMBINE_FNS
 
 
-def _build_sketch(v: pd.Series, impl: str, k: int, dtype):
-    arr = pd.to_numeric(v, errors="coerce").dropna().to_numpy(dtype=np.float64)
-    if arr.size == 0:
-        return None
-    sk = make_quantile_sketch(impl, k, dtype)
-    sk.update_batch(arr)
-    return sk
-
-
-def _named_validate(name: str, validator, arg):
-    """Runtime argument validation with the failing SQL function named —
-    the closest a Python UDF registry can get to the reference's
-    AnalysisException timing (``quantileSketches.scala:176-194``; the
-    DataFrame API and dss.sql() both validate before any job starts)."""
-    try:
-        return validator(arg)
-    except ValueError as e:
-        raise ValueError(f"{name}: {e}") from None
-
-
-def _is_null(v) -> bool:
-    if v is None:
-        return True
-    try:
-        return bool(pd.isna(v))
-    except (TypeError, ValueError):  # arrays: pd.isna is elementwise
-        return False
-
-
-def _constant_arg(name: str, p: pd.Series, what: str = "percentage(s)"):
+def _constant_arg(name: str, p: pd.Series):
     """Enforce the reference's constant-literal contract for aggregate
     parameters (``quantileSketches.scala:176-184``: 'The percentage(s)
-    must be a constant literal' / 'Percentage value must not be null').
-    An aggregate that silently used the group's first row would return a
-    plausible-but-wrong answer for per-row parameters — raise instead."""
+    must be a constant literal'). An aggregate that silently used the
+    group's first row would return a plausible-but-wrong answer for
+    per-row parameters — raise instead."""
     keys = p.map(lambda x: tuple(x)
                  if isinstance(x, (list, tuple, np.ndarray)) else x)
     if keys.nunique(dropna=False) > 1:
         raise ValueError(
-            f"{name}: the {what} must be a constant literal")
-    v = p.iloc[0]
-    if _is_null(v):
-        raise ValueError(f"{name}: {what} value must not be null")
-    return v
+            f"{name}: the percentage(s) must be a constant literal")
+    return p.iloc[0]
 
 
-def _sql_quantile_scalar(impl: str, k: int, dtype, name: str, rule: str):
-    @pandas_udf(DoubleType())
-    def f(v: pd.Series, p: pd.Series) -> float:
-        pct = _constant_arg(name, p)
-        if isinstance(pct, (list, tuple, np.ndarray)):
-            raise ValueError(
-                f"{name}: the percentage is an array — use {name}_array "
-                f"(a Python UDF registration cannot overload the scalar "
-                f"and array return types under one name)")
-        ps, _ = _named_validate(name, validate_percentage, float(pct))
-        sk = _build_sketch(v, impl, k, dtype)
-        return None if sk is None else sk.quantile(ps[0], rule=rule)
-    return f
+def _sql_percentile(fam, name: str, rule: str, multi: bool):
+    """GROUPED_AGG ``name(col, percentage)``: the direct quantile aggregate
+    with the percentage as a constant argument column."""
+    def finish(sk, p: pd.Series):
+        ps = percentages_arg(name, _constant_arg(name, p), multi)
+        return sk.quantiles(ps, rule=rule) if multi \
+            else sk.quantile(ps[0], rule=rule)
 
-
-def _sql_quantile_array(impl: str, k: int, dtype, name: str, rule: str):
-    @pandas_udf(ArrayType(DoubleType(), containsNull=False))
-    def f(v: pd.Series, p: pd.Series) -> list:
-        pct = _constant_arg(name, p)
-        ps, _ = _named_validate(name, validate_percentage, list(pct))
-        sk = _build_sketch(v, impl, k, dtype)
-        return None if sk is None else sk.quantiles(ps, rule=rule)
-    return f
-
-
-def _sql_quantile_acc(impl: str, k: int, dtype):
-    @pandas_udf(BinaryType())
-    def f(v: pd.Series) -> bytes:
-        sk = _build_sketch(v, impl, k, dtype)
-        return None if sk is None else sk.serialize()
-    return f
-
-
-def _sql_quantile_est(rule: str):
-    @pandas_udf(DoubleType())
-    def f(states: pd.Series, p: pd.Series) -> pd.Series:
-        out = []
-        for blob, pct in zip(states, p):
-            if blob is None:
-                out.append(None)
-                continue
-            if _is_null(pct):
-                raise ValueError("approx_percentile_estimate: "
-                                 "percentage value must not be null")
-            if isinstance(pct, (list, tuple, np.ndarray)):
-                raise ValueError(
-                    "approx_percentile_estimate: the percentage is an "
-                    "array — use approx_percentile_estimate_array")
-            ps, _ = _named_validate("approx_percentile_estimate",
-                                   validate_percentage, float(pct))
-            try:
-                out.append(deserialize_quantile(bytes(blob))
-                           .quantile(ps[0], rule=rule))
-            except Exception:  # corrupt state -> null (reference parity)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-    return f
-
-
-def _sql_quantile_est_array(rule: str):
-    @pandas_udf(ArrayType(DoubleType(), containsNull=False))
-    def f(states: pd.Series, p: pd.Series) -> pd.Series:
-        out = []
-        for blob, pct in zip(states, p):
-            if blob is None:
-                out.append(None)
-                continue
-            if _is_null(pct):
-                raise ValueError("approx_percentile_estimate_array: "
-                                 "percentage value must not be null")
-            ps, _ = _named_validate("approx_percentile_estimate_array",
-                                   validate_percentage, list(pct))
-            try:
-                out.append(deserialize_quantile(bytes(blob))
-                           .quantiles(ps, rule=rule))
-            except Exception:  # corrupt state -> null (reference parity)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-    return f
-
-
-def _sql_rank_est():
-    @pandas_udf(DoubleType())
-    def f(states: pd.Series, v: pd.Series) -> pd.Series:
-        out = []
-        for blob, x in zip(states, v):
-            if blob is None or x is None:
-                out.append(None)
-                continue
-            try:
-                out.append(deserialize_quantile(bytes(blob)).rank(float(x)))
-            except Exception:  # corrupt state -> null (reference parity)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-    return f
-
-
-def _sql_cdf_est():
-    @pandas_udf(ArrayType(DoubleType(), containsNull=False))
-    def f(states: pd.Series, sps: pd.Series) -> pd.Series:
-        out = []
-        for blob, sp in zip(states, sps):
-            if blob is None or sp is None:
-                out.append(None)
-                continue
-            try:
-                out.append(deserialize_quantile(bytes(blob))
-                           .cdf([float(x) for x in sp]))
-            except Exception:  # corrupt state -> null (reference parity)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-    return f
-
-
-def _sql_pmf_est():
-    @pandas_udf(ArrayType(DoubleType(), containsNull=False))
-    def f(states: pd.Series, n: pd.Series) -> pd.Series:
-        out = []
-        for blob, splits in zip(states, n):
-            if blob is None:
-                out.append(None)
-                continue
-            _named_validate("approx_pmf_estimate", validate_num_splits,
-                            None if _is_null(splits) else int(splits))
-            try:
-                out.append(deserialize_quantile(bytes(blob)).pmf(int(splits)))
-            except Exception:  # corrupt state -> null (reference parity)
-                out.append(None)
-        return pd.Series(out, dtype=object)
-    return f
+    rt = ArrayType(DoubleType(), containsNull=False) if multi else DoubleType()
+    return direct_udf(fam, rt, finish)
 
 
 def install(spark: SparkSession) -> None:
     """Register all engine functions in the session's SQL registry."""
-    q_impl = conf.quantile_impl(spark)
     rule = conf.quantile_rank_rule(spark)
-
-    impl_k = {i: conf.quantile_k(i, spark) for i in conf.QUANTILE_IMPLS}
-    for name, impl in [("approx_percentile_ex", q_impl),
+    for name, impl in [("approx_percentile_ex", conf.quantile_impl(spark)),
                        ("approx_percentile_kll", "KLL"),
                        ("approx_percentile_req", "REQ"),
                        ("approx_percentile_mergeable", "MERGEABLE")]:
-        k, dt = impl_k[impl], _DTYPES[impl]
-        spark.udf.register(name,
-                           _sql_quantile_scalar(impl, k, dt, name, rule))
+        fam = _family("quantile", impl=impl, k=conf.quantile_k(impl, spark))
+        spark.udf.register(name, _sql_percentile(fam, name, rule, False))
         spark.udf.register(f"{name}_array",
-                           _sql_quantile_array(impl, k, dt, f"{name}_array",
-                                               rule))
+                           _sql_percentile(fam, f"{name}_array", rule, True))
 
-    k, dt = impl_k[q_impl], _DTYPES[q_impl]
-    spark.udf.register("approx_percentile_accumulate",
-                       _sql_quantile_acc(q_impl, k, dt))
-    spark.udf.register("approx_percentile_combine", combine_udf())
-    spark.udf.register("approx_percentile_estimate", _sql_quantile_est(rule))
+    # every *_accumulate* name, from the table dss.sql re-plans with
+    for name in _ACC_FAMILY:
+        family, params = _resolve_acc_family(name, spark)
+        spark.udf.register(name, accumulate_udf(_family(family, **params)))
+    for name in sorted(_COMBINE_FNS):
+        spark.udf.register(name, combine_udf())
+
+    spark.udf.register("approx_percentile_estimate",
+                       quantile_est_udf(rule, multi=False))
     spark.udf.register("approx_percentile_estimate_array",
-                       _sql_quantile_est_array(rule))
-    spark.udf.register("approx_pmf_estimate", _sql_pmf_est())
-    spark.udf.register("approx_rank_estimate", _sql_rank_est())
-    spark.udf.register("approx_cdf_estimate", _sql_cdf_est())
+                       quantile_est_udf(rule, multi=True))
+    spark.udf.register("approx_pmf_estimate", pmf_est_udf())
+    spark.udf.register("approx_rank_estimate", rank_est_udf())
+    spark.udf.register("approx_cdf_estimate", cdf_est_udf())
+    spark.udf.register("approx_percentile_bounds", quantile_bounds_udf(rule))
+    spark.udf.register("approx_ks_distance", ks_distance_udf())
 
     m = conf.freq_max_map_size(spark)
-    spark.udf.register("approx_freqitems", freq_direct_udf(m, ITEM_STR))
-    spark.udf.register("approx_freqitems_long", freq_direct_udf(m, ITEM_LONG))
-    spark.udf.register("approx_freqitems_accumulate", freq_acc_udf(m, ITEM_STR))
-    spark.udf.register("approx_freqitems_combine", combine_udf())
-    spark.udf.register("approx_freqitems_estimate", freq_est_udf(ITEM_STR))
-    spark.udf.register("approx_freqitems_estimate_long", freq_est_udf(ITEM_LONG))
+    for suffix, it in (("", ITEM_STR), ("_long", ITEM_LONG)):
+        fam = _family("freq", item_type=it, max_map_size=m)
+        spark.udf.register(f"approx_freqitems{suffix}",
+                           direct_udf(fam, freq_result_type(it),
+                                      frequent_items))
+        spark.udf.register(f"approx_freqitems_estimate{suffix}",
+                           freq_est_udf(it))
+    spark.udf.register("approx_freqitems_maxerr", freq_maxerr_udf())
+    spark.udf.register("approx_join_size", freq_join_size_udf())
 
     tk = conf.distinct_theta_k(spark)
     clgk = conf.distinct_cpc_lgk(spark)
+    hlgk = conf.distinct_hll_lgk(spark)
     dimpl = conf.distinct_impl(spark)
     # CPC (the default) is served by the engine's numpy HLL at a CPC-
     # equivalent lgk: exact through its sparse phase, CPC-class RSE past it.
-    ex_udf = (theta_direct_udf(tk) if dimpl == "THETA"
-              else hll_direct_udf(conf.distinct_hll_lgk(spark))
-              if dimpl == "HLL" else hll_direct_udf(clgk))
-    spark.udf.register("approx_count_distinct_ex", ex_udf)
-    spark.udf.register("approx_count_distinct_cpc", hll_direct_udf(clgk))
-    spark.udf.register("approx_count_distinct_theta", theta_direct_udf(tk))
+    spark.udf.register("approx_count_distinct_ex",
+                       ndv_udf("theta", k=tk) if dimpl == "THETA"
+                       else ndv_udf("hll", lgk=hlgk if dimpl == "HLL"
+                                    else clgk))
+    spark.udf.register("approx_count_distinct_cpc", ndv_udf("hll", lgk=clgk))
+    spark.udf.register("approx_count_distinct_theta", ndv_udf("theta", k=tk))
     # Engine HLL under the reference's plain SQL name (shims.scala:32-56).
     # GROUPED_AGG = no partial aggregation, so this is the compatibility
     # path; dss.sql and the DataFrame API keep resolving the same name to
     # the JVM hll_sketch_agg built-in for partial/final physics.
-    spark.udf.register("approx_count_distinct_hll",
-                       hll_direct_udf(conf.distinct_hll_lgk(spark)))
-    acc_udf = (theta_acc_udf(tk) if dimpl == "THETA"
-               else hll_acc_udf(conf.distinct_hll_lgk(spark))
-               if dimpl == "HLL" else hll_acc_udf(clgk))
-    spark.udf.register("approx_count_distinct_accumulate", acc_udf)
-    spark.udf.register("approx_count_distinct_accumulate_theta",
-                       theta_acc_udf(tk))
-    # genuine CPC wire states (reference-readable; sketches/cpc_state.py)
-    wlgk = conf.distinct_cpc_wire_lgk(spark)
-    spark.udf.register("approx_count_distinct_accumulate_cpc",
-                       cpc_wire_acc_udf(wlgk))
-    spark.udf.register("approx_count_distinct_accumulate_cpc_long",
-                       cpc_wire_acc_udf(wlgk, ITEM_LONG))
-    # genuine DataSketches compact-Theta wire states (compat/theta.py)
-    spark.udf.register("approx_count_distinct_accumulate_theta_wire",
-                       theta_wire_acc_udf(tk))
-    spark.udf.register("approx_count_distinct_accumulate_theta_wire_long",
-                       theta_wire_acc_udf(tk, ITEM_LONG))
-    spark.udf.register("approx_count_distinct_combine", combine_udf())
+    spark.udf.register("approx_count_distinct_hll", ndv_udf("hll", lgk=hlgk))
     spark.udf.register("approx_count_distinct_estimate", theta_est_udf())
+    spark.udf.register("approx_count_distinct_bounds", distinct_bounds_udf())
     spark.udf.register("approx_set_jaccard", theta_setop_udf("jaccard"))
     spark.udf.register("approx_set_intersection",
                        theta_setop_udf("intersection"))
     spark.udf.register("approx_set_difference", theta_setop_udf("a_not_b"))
-    from .functions.udfs import (freq_join_size_udf, ks_distance_udf,
-                                 quantile_bounds_udf)
-    spark.udf.register("approx_join_size", freq_join_size_udf())
-    spark.udf.register("approx_ks_distance", ks_distance_udf())
-    spark.udf.register("approx_percentile_bounds",
-                       quantile_bounds_udf(conf.quantile_rank_rule(spark)))
-    from .functions.udfs import distinct_bounds_udf, freq_maxerr_udf
-    spark.udf.register("approx_count_distinct_bounds", distinct_bounds_udf())
-    spark.udf.register("approx_freqitems_maxerr", freq_maxerr_udf())
 
     # Reservoir sampling family (extension): per-group uniform samples
-    # with the same accumulate/combine/estimate lifecycle; combine is the
-    # shared family-agnostic kernel.
-    from .functions.sampling import sample_acc_udf, sample_est_udf, \
-        sample_size_udf, wsample_acc_udf
-    from .sketches import ITEM_DOUBLE as _IT_D
-    rk = conf.sample_reservoir_k(spark)
-    spark.udf.register("approx_sample_accumulate", sample_acc_udf(rk, _IT_D))
-    spark.udf.register("approx_sample_accumulate_long",
-                       sample_acc_udf(rk, ITEM_LONG))
-    spark.udf.register("approx_sample_accumulate_string",
-                       sample_acc_udf(rk, ITEM_STR))
-    spark.udf.register("approx_sample_weighted_accumulate",
-                       wsample_acc_udf(rk, _IT_D))
-    spark.udf.register("approx_sample_weighted_accumulate_long",
-                       wsample_acc_udf(rk, ITEM_LONG))
-    spark.udf.register("approx_sample_weighted_accumulate_string",
-                       wsample_acc_udf(rk, ITEM_STR))
-    spark.udf.register("approx_sample_combine", combine_udf())
-    spark.udf.register("approx_sample_estimate", sample_est_udf(_IT_D))
-    spark.udf.register("approx_sample_estimate_long",
-                       sample_est_udf(ITEM_LONG))
-    spark.udf.register("approx_sample_estimate_string",
-                       sample_est_udf(ITEM_STR))
+    # with the same accumulate/combine/estimate lifecycle.
+    for suffix, it in (("", ITEM_DOUBLE), ("_long", ITEM_LONG),
+                       ("_string", ITEM_STR)):
+        spark.udf.register(f"approx_sample_estimate{suffix}",
+                           sample_estimate_udf(it))
     spark.udf.register("approx_sample_stream_size", sample_size_udf())
 
     # tuple / per-key summary sketch (extension; DataSketches Tuple
     # family analog — NDV + per-distinct-key aggregates from one state)
-    from .functions.udfs import (aod_wire_acc_udf, tuple_acc_udf,
-                                 tuple_est_udf, tuple_segment_udf)
-    spark.udf.register("approx_tuple_accumulate",
-                       tuple_acc_udf(conf.tuple_k(spark)))
-    # genuine DataSketches ArrayOfDoubles wire states (compat/aod.py)
-    spark.udf.register("approx_tuple_accumulate_wire",
-                       aod_wire_acc_udf(conf.tuple_k(spark)))
-    spark.udf.register("approx_tuple_accumulate_wire_long",
-                       aod_wire_acc_udf(conf.tuple_k(spark), ITEM_LONG))
-    spark.udf.register("approx_tuple_combine", combine_udf())
     spark.udf.register("approx_tuple_estimate", tuple_est_udf())
     spark.udf.register("approx_tuple_segment_estimate", tuple_segment_udf())
-    spark.udf.register("approx_tuple_bounds", distinct_bounds_udf())
+    spark.udf.register("approx_tuple_bounds",
+                       distinct_bounds_udf("approx_tuple_bounds"))
 
     # Bloom membership filter (extension; DataSketches BloomFilter
     # analog — broadcastable "have I seen this key?" state)
-    from .functions.udfs import (bloom_acc_udf, bloom_contains_udf,
-                                 bloom_estimate_udf, bloom_fpp_udf)
-    spark.udf.register(
-        "approx_membership_accumulate",
-        bloom_acc_udf(conf.membership_expected(spark),
-                      conf.membership_fpp(spark)))
-    from .functions.udfs import bloomwire_acc_udf
-    spark.udf.register(
-        "approx_membership_accumulate_wire",
-        bloomwire_acc_udf(conf.membership_expected(spark),
-                          conf.membership_fpp(spark), 0))
-    spark.udf.register(
-        "approx_membership_accumulate_wire_long",
-        bloomwire_acc_udf(conf.membership_expected(spark),
-                          conf.membership_fpp(spark), 0, ITEM_LONG))
-    spark.udf.register("approx_membership_combine", combine_udf())
     spark.udf.register("approx_membership_contains", bloom_contains_udf())
     # plan-time-pinned long probe: the SQL twin of accumulate_wire_long
     # (the 2-arg contains dispatches on the Arrow batch dtype, which is

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import conf
+from .families import _ACC_FAMILY, _family, _resolve_acc_family
 from .functions.udfs import validate_num_splits, validate_percentage
 from .operators.sketch_agg import (
     Measure,
@@ -319,39 +320,6 @@ _QUANTILE_DIRECT = {
 _FREQ_DIRECT = {"approx_freqitems": "string", "approx_freqitems_long": "long"}
 _DISTINCT_DIRECT = ("approx_count_distinct_ex", "approx_count_distinct_cpc",
                     "approx_count_distinct_theta")
-_ACC_FAMILY = {
-    "approx_percentile_accumulate": ("quantile", {}),
-    "approx_freqitems_accumulate": ("freq", {}),
-    # conf-dependent: resolved in _classify_item (matches register.py's
-    # accumulate UDF, which follows distinctCnt.sketchImpl)
-    "approx_count_distinct_accumulate": (None, {}),
-    "approx_count_distinct_accumulate_theta": ("theta", {}),
-    "approx_count_distinct_accumulate_cpc": ("cpcwire", {}),
-    "approx_count_distinct_accumulate_cpc_long":
-        ("cpcwire", {"item_type": "long"}),
-    "approx_count_distinct_accumulate_theta_wire": ("thetawire", {}),
-    "approx_count_distinct_accumulate_theta_wire_long":
-        ("thetawire", {"item_type": "long"}),
-    "approx_sample_accumulate": ("reservoir", {"item_type": "double"}),
-    "approx_sample_accumulate_long": ("reservoir", {"item_type": "long"}),
-    "approx_sample_accumulate_string": ("reservoir", {"item_type": "str"}),
-    # (value, weight) pair aggregates — two measure input columns
-    "approx_sample_weighted_accumulate":
-        ("wreservoir", {"item_type": "double"}),
-    "approx_sample_weighted_accumulate_long":
-        ("wreservoir", {"item_type": "long"}),
-    "approx_sample_weighted_accumulate_string":
-        ("wreservoir", {"item_type": "str"}),
-    # (key, value) per-key-summary aggregate — two measure input columns
-    "approx_tuple_accumulate": ("tuple", {}),
-    "approx_tuple_accumulate_wire": ("aodwire", {}),
-    "approx_tuple_accumulate_wire_long": ("aodwire", {"item_type": "long"}),
-    # Bloom membership (round 12): geometry from conf at plan time
-    "approx_membership_accumulate": ("bloom", {}),
-    "approx_membership_accumulate_wire": ("bloomwire", {}),
-    "approx_membership_accumulate_wire_long":
-        ("bloomwire", {"item_type": "long"}),
-}
 
 # *_combine functions: merge pre-serialized states (family-agnostic wire).
 # Re-planned onto the "states" measure family — map-side partial merges,
@@ -507,8 +475,7 @@ def _classify_item(item: _Item, spark: SparkSession, seq: int) -> None:
         return
     if fname in _ACC_FAMILY:
         family, params = _resolve_acc_family(fname, spark)
-        want_args = 2 if family in ("wreservoir", "tuple",
-                                    "aodwire") else 1
+        want_args = _family(family, **params).ncols
         if len(args) != want_args:
             raise _Unsupported(
                 f"{fname} expects {'(col, weight)' if want_args == 2 else '(col)'}")
@@ -525,29 +492,6 @@ def _classify_item(item: _Item, spark: SparkSession, seq: int) -> None:
             name, col, "states", lambda c: c))
         return
     raise _Unsupported(f"unhandled sketch function {fname}")
-
-
-def _resolve_acc_family(fname: str, spark: SparkSession):
-    """(family, params) for an accumulate function, resolving the
-    conf-dependent distinct name and reservoir k like the registered UDFs
-    (register.py)."""
-    family, params = _ACC_FAMILY[fname]
-    if family is None:  # distinct accumulate follows the conf impl
-        impl = conf.distinct_impl(spark)
-        if impl == "THETA":
-            family, params = "theta", {}
-        elif impl == "HLL":
-            family, params = "hll", {"lgk": conf.distinct_hll_lgk(spark)}
-        else:  # CPC name served by the engine HLL at CPC-class lgk
-            family, params = "hll", {"lgk": conf.distinct_cpc_lgk(spark)}
-    if family in ("reservoir", "wreservoir"):
-        params = dict(params, k=conf.sample_reservoir_k(spark))
-    if family in ("tuple", "aodwire"):
-        params = dict(params, k=conf.tuple_k(spark))
-    if family in ("bloom", "bloomwire"):
-        params = dict(params, expected_items=conf.membership_expected(spark),
-                      fpp=conf.membership_fpp(spark))
-    return family, params
 
 
 def _nested_estimator(fname: str, extra: list[str]):
@@ -666,7 +610,7 @@ def _classify_nested_estimate(item: "_Item", call: tuple[str, str],
         arg_cols = iargs[0]
     elif ifn in _ACC_FAMILY:
         family, params = _resolve_acc_family(ifn, spark)
-        want = 2 if family in ("wreservoir", "tuple", "aodwire") else 1
+        want = _family(family, **params).ncols
         iargs = _split_top(iargs_text)
         if len(iargs) != want:
             return False

@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.sketch_agg import _family
+from ..families import _family
 from ..operators import sketch_accumulate
 from ..sketches import deserialize_any
 

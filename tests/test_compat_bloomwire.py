@@ -398,17 +398,17 @@ class TestNullIndependenceAllWireFamilies:
         assert outs[0] == outs[1], family
 
     def test_wire_acc_udfs(self, spark):
-        from datasketches_spark_spark.functions.udfs import (
-            cpc_wire_acc_udf, theta_wire_acc_udf)
         clean = spark.createDataFrame(
             [(int(i),) for i in range(40)], "v long").coalesce(1)
         dirty = spark.createDataFrame(
             [(int(i),) for i in range(40)] + [(None,)],
             "v long").coalesce(1)
-        for mk in (lambda: cpc_wire_acc_udf(11),
-                   lambda: theta_wire_acc_udf(4096)):
-            a = bytes(clean.agg(mk()("v").alias("s")).collect()[0].s)
-            b = bytes(dirty.agg(mk()("v").alias("s")).collect()[0].s)
+        for mk in (lambda: dsf.approx_count_distinct_accumulate_cpc(
+                       "v", lgk=11),
+                   lambda: dsf.approx_count_distinct_accumulate_theta_wire(
+                       "v", k=4096)):
+            a = bytes(clean.agg(mk().alias("s")).collect()[0].s)
+            b = bytes(dirty.agg(mk().alias("s")).collect()[0].s)
             assert a == b
 
 

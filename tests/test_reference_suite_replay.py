@@ -278,7 +278,7 @@ class TestErrorHandlingReplay:
     """Replays of the reference's three error-handling suites
     (ApproximateQuerySuite.scala:67-84, :149-178, :180-200). The engine
     raises at EXECUTION time (a Python UDF registry has no analysis
-    hook — documented divergence, register.py::_named_validate) with
+    hook — documented divergence, functions/udfs.py::_named) with
     the reference's message substrings; the dangerous case the runtime
     CAN catch that an analyzer can't even express — a percentage that
     varies WITHIN an aggregation group, which the old first-row read
