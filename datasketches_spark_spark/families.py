@@ -116,6 +116,44 @@ def _rows(ctx, idx):
     return [a[sel] for a in arrays]
 
 
+# --------------------------------------------------------------------- groups
+
+def _hashable(v):
+    if isinstance(v, dict):
+        return tuple(_hashable(x) for x in v.values())
+    if isinstance(v, (list, np.ndarray)):
+        return tuple(_hashable(x) for x in v)
+    return v
+
+
+def _iter_groups(pdf: pd.DataFrame, keys: list[str]):
+    """Yield (hashable_key, original_key_tuple, positions) per group.
+    Fast path: C-computed groupby().indices. Fallback for unhashable key
+    values (a window/struct key arrives in pandas as a dict — the reference
+    supports groupBy(window(...)) so we must too): a per-row python loop
+    keyed on a hashable rendering, emitting the original values."""
+    try:
+        # .indices builds the full dict eagerly; materialize before any
+        # yield so a TypeError can never leave groups half-processed
+        items = list(pdf.groupby(keys, dropna=False, sort=False)
+                     .indices.items())
+    except TypeError:
+        cols = [pdf[k].tolist() for k in keys]
+        groups: dict = {}
+        originals: dict = {}
+        for pos, row in enumerate(zip(*cols)):
+            hk = tuple(_hashable(v) for v in row)
+            groups.setdefault(hk, []).append(pos)
+            if hk not in originals:
+                originals[hk] = row
+        for hk, poss in groups.items():
+            yield hk, originals[hk], np.asarray(poss)
+        return
+    for kv, idx in items:
+        kv = kv if isinstance(kv, tuple) else (kv,)
+        yield kv, kv, idx
+
+
 # --------------------------------------------------------------------- families
 
 class _Family:
@@ -409,20 +447,26 @@ def _tuple_family(k: int | None) -> _Family:
 
 class _StateMerger:
     """Folds pre-serialized sketch states — the ``*_combine`` verb as a
-    partial-capable kernel. Family-agnostic like ``udfs.combine_udf``
-    (byte-sniff dispatch), so one kernel serves every state the engine or
-    a foreign DataSketches writer produces. Exists so dss.sql can re-plan
-    ``*_estimate(*_combine(state))`` as map-side partial merges + a
-    state-only shuffle instead of the raw-row GROUPED_AGG fallback."""
+    partial-capable kernel. Family-agnostic (byte-sniff dispatch), so one
+    kernel serves every state the engine or a foreign DataSketches writer
+    produces. It is the one merge loop: the ``*_combine`` GROUPED_AGG UDF
+    (``udfs.combine_udf``), the reduce-side fold (``udfs.combine_fold``)
+    and dss.sql's map-side ``states`` family, which re-plans
+    ``*_estimate(*_combine(state))`` as partial merges + a state-only
+    shuffle instead of the raw-row GROUPED_AGG fallback, all run it."""
 
     __slots__ = ("sk",)
 
     def __init__(self):
         self.sk = None
 
-    def merge_blob(self, blob) -> None:
-        sk = deserialize_any(bytes(blob))  # raises on corrupt input
-        self.sk = sk if self.sk is None else self.sk.merge(sk)
+    def merge_blobs(self, blobs) -> "_StateMerger":
+        """Fold every non-null blob in; raises on corrupt input."""
+        for blob in blobs:
+            if blob is not None:
+                sk = deserialize_any(bytes(blob))
+                self.sk = sk if self.sk is None else self.sk.merge(sk)
+        return self
 
     def serialize(self):
         return None if self.sk is None else self.sk.serialize()
@@ -433,9 +477,7 @@ def _states_family() -> _Family:
         return values.to_numpy(object), values.notna().to_numpy()
 
     def update(sk, ctx, idx):
-        blobs, = _rows(ctx, idx)
-        for blob in blobs:
-            sk.merge_blob(blob)
+        sk.merge_blobs(*_rows(ctx, idx))
 
     return _Family(_StateMerger, prep, update)
 

@@ -6,13 +6,15 @@ update/merge/serialize contract (``quantileSketches.scala:234-273``) maps to
 * *accumulate / direct agg*  -> ``GROUPED_AGG`` pandas UDF (Arrow-batched),
   built by :func:`accumulate_udf` / :func:`direct_udf` from the family
   table (``families.py``) — the same row path the two-phase operator runs;
-* *combine*                  -> ``GROUPED_AGG`` pandas UDF over binary states,
+* *combine*                  -> ``GROUPED_AGG`` pandas UDF over binary states
+  (:func:`combine_udf`, the Column/SQL ``*_combine``), or the key-sorted
+  ``mapInPandas`` fold :func:`combine_fold` the operators plan;
 * *estimate / pmf*           -> scalar pandas UDF over binary states, built
   by :func:`state_udf`.
 
 For true map-side combine at scale, see
 ``datasketches_spark_spark.operators.sketch_agg`` which pre-sketches per
-partition with ``mapInPandas`` before the merge UDAF — the two-phase physics
+partition with ``mapInPandas`` before the state fold — the two-phase physics
 of the reference's partial/final aggregation.
 
 Error semantics preserved from the reference:
@@ -44,7 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..families import _wire_longs, _wire_strings
+from ..families import _iter_groups, _StateMerger, _wire_longs, _wire_strings
 from ..sketches import (
     ITEM_LONG,
     ITEM_STR,
@@ -369,13 +371,57 @@ def combine_udf():
 
     @pandas_udf(BinaryType())
     def combine(states: pd.Series) -> bytes:
-        merged = None
-        for blob in states:
-            if blob is None:
+        return _StateMerger().merge_blobs(states).serialize()
+
+    return combine
+
+
+def _same_key(a, b) -> bool:
+    """Null-safe equality of two :func:`_iter_groups` keys: Arrow->pandas
+    renders a null as None, NaN or NaT depending on the column type."""
+    if isinstance(a, tuple) and isinstance(b, tuple):
+        return len(a) == len(b) and all(map(_same_key, a, b))
+    if _is_null(a) or _is_null(b):
+        return _is_null(a) and _is_null(b)
+    return bool(a == b)
+
+
+def combine_fold(keys: list[str], state_cols: list[str]):
+    """mapInPandas: ``(keys..., states...)`` batches sorted by ``keys`` ->
+    one row per group, each state column merged like :func:`combine_udf`
+    (an all-null column gives null, a corrupt blob raises).
+
+    Every row of a group arrives in one run (the caller hash-partitions
+    and sorts by ``keys``), so only the last run of a batch can go on in
+    the next batch: memory is one batch plus one open group. With no keys
+    the partition is one group."""
+
+    def frame(groups):
+        out = {k: [kv[i] for _, kv, _ in groups] for i, k in enumerate(keys)}
+        for j, c in enumerate(state_cols):
+            out[c] = [ms[j].serialize() for _, _, ms in groups]
+        return pd.DataFrame(out, columns=[*keys, *state_cols])
+
+    def combine(batches):
+        group = None  # (hashable key, key values, one merger per column)
+        for pdf in batches:
+            if pdf.empty:
                 continue
-            sk = deserialize_any(bytes(blob))  # raises on corrupt input
-            merged = sk if merged is None else merged.merge(sk)
-        return None if merged is None else merged.serialize()
+            runs = (sorted(_iter_groups(pdf, keys), key=lambda r: r[2][0])
+                    if keys else [((), (), slice(None))])
+            blobs = [pdf[c].to_numpy(object) for c in state_cols]
+            done = []
+            for hk, kv, idx in runs:
+                if group is None or not _same_key(hk, group[0]):
+                    if group is not None:
+                        done.append(group)
+                    group = hk, kv, [_StateMerger() for _ in state_cols]
+                for m, col in zip(group[2], blobs):
+                    m.merge_blobs(col[idx])
+            if done:
+                yield frame(done)
+        if group is not None:
+            yield frame([group])
 
     return combine
 

@@ -13,6 +13,11 @@ monoids, so
 * **compact** folds appended partials back to one row per group when the
   append count grows (pure state-merge, still no raw data).
 
+Every merge here — build, refresh, compact and query — is
+:func:`~.sketch_agg.sketch_merge`: the state rows are hash-partitioned and
+sorted by the (re-)grouping keys, then one ``mapInPandas`` fold per
+partition merges each key's run of states.
+
 At 100 TB the rollup is O(groups) KB-rows; every query cost is
 proportional to the groups selected, not the rows ever ingested. The
 same shape as a streaming-ingest summary table — states written by the
@@ -31,10 +36,8 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.udfs import combine_udf
-from .sketch_agg import Measure, sketch_partial_multi
+from .sketch_agg import Measure, sketch_merge, sketch_partial_multi
 
 
 class SketchRollup:
@@ -59,9 +62,7 @@ class SketchRollup:
         """One-pass multi-measure partial sketching + per-group merge —
         the shuffle carries states, not rows."""
         partial = sketch_partial_multi(df, self.keys, self.measures)
-        merges = [combine_udf()(F.col(c)).alias(c)
-                  for c in self._state_cols]
-        return partial.groupBy(*self.keys).agg(*merges)
+        return self._merge(partial, self.keys)
 
     def build(self, df: DataFrame) -> None:
         """(Re)materialize the rollup from ``df`` — one scan of the raw
@@ -94,9 +95,7 @@ class SketchRollup:
         return spark.read.parquet(self.path)
 
     def _merge(self, df: DataFrame, group_by: list[str]) -> DataFrame:
-        merges = [combine_udf()(F.col(c)).alias(c)
-                  for c in self._state_cols]
-        return df.groupBy(*group_by).agg(*merges)
+        return sketch_merge(df, group_by, self._state_cols)
 
     def query(self, spark: SparkSession, where=None,
               group_by: list[str] | None = None) -> DataFrame:
@@ -121,6 +120,6 @@ class SketchRollup:
         estimator if integral output is required.)"""
         group_by = self.keys if group_by is None else list(group_by)
         merged = self.query(spark, where=where, group_by=group_by)
-        outs = [m.estimator(F.col(f"{m.name}__state")).alias(m.name)
+        outs = [m.estimator(merged[f"{m.name}__state"]).alias(m.name)
                 for m in self.measures]
         return merged.select(*group_by, *outs)

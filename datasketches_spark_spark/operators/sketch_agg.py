@@ -14,8 +14,13 @@ This module reproduces the reference's physics explicitly:
                         maintain one live sketch per group key, emit
                         ``(keys..., state: binary)`` — one row per group per
                         partition;
-  phase 2 (reduce-side) ``groupBy(keys).agg(combine_udf)``: shuffle only the
-                        small states and merge.
+  phase 2 (reduce-side) :func:`sketch_merge`: hash-partition + sort the
+                        small state rows by key (the only shuffle), then one
+                        ``mapInPandas`` fold per partition
+                        (``udfs.combine_fold``) merges each key's run of
+                        states — the physical contract of Spark's
+                        ``AggregateInPandasExec``, without its Python call
+                        per group and state column.
 
 The output of ``sketch_accumulate`` is a re-aggregable summary table exactly
 like the reference's accumulate results (``README.md:68-100``): filter it,
@@ -31,51 +36,20 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.types import (
+    BinaryType,
+    DoubleType,
+    FloatType,
+    StructField,
+    StructType,
+)
 
-from ..families import _family
-from ..functions.udfs import combine_udf
+from ..families import _family, _iter_groups
+from ..functions.udfs import combine_fold
 from ..sketches import ITEM_DOUBLE, ITEM_LONG, ITEM_STR
 
 
 # --------------------------------------------------------------------- operator
-
-def _hashable(v):
-    if isinstance(v, dict):
-        return tuple(_hashable(x) for x in v.values())
-    if isinstance(v, (list, np.ndarray)):
-        return tuple(_hashable(x) for x in v)
-    return v
-
-
-def _iter_groups(pdf: pd.DataFrame, keys: list[str]):
-    """Yield (hashable_key, original_key_tuple, positions) per group.
-    Fast path: C-computed groupby().indices. Fallback for unhashable key
-    values (a window/struct key arrives in pandas as a dict — the reference
-    supports groupBy(window(...)) so we must too): a per-row python loop
-    keyed on a hashable rendering, emitting the original values."""
-    try:
-        # .indices builds the full dict eagerly; materialize before any
-        # yield so a TypeError can never leave groups half-processed
-        items = list(pdf.groupby(keys, dropna=False, sort=False)
-                     .indices.items())
-    except TypeError:
-        cols = [pdf[k].tolist() for k in keys]
-        groups: dict = {}
-        originals: dict = {}
-        for pos, row in enumerate(zip(*cols)):
-            hk = tuple(_hashable(v) for v in row)
-            groups.setdefault(hk, []).append(pos)
-            if hk not in originals:
-                originals[hk] = row
-        for hk, poss in groups.items():
-            yield hk, originals[hk], np.asarray(poss)
-        return
-    for kv, idx in items:
-        kv = kv if isinstance(kv, tuple) else (kv,)
-        yield kv, kv, idx
-
-
 
 def sketch_partial(df: DataFrame, keys: list[str], col: str,
                    family: str, state_col: str = "state",
@@ -298,10 +272,7 @@ def sketch_grouped_agg(df: DataFrame, keys: list[str],
     changes results, only the count of (still state-sized) shuffle rows."""
     ms = list(measures)
     partial = sketch_partial_multi(df, keys, ms, max_groups=max_groups)
-    combines = [combine_udf()(F.col(f"{m.name}__state"))
-                .alias(f"{m.name}__state") for m in ms]
-    merged = (partial.groupBy(*keys).agg(*combines) if keys
-              else partial.agg(*combines))
+    merged = sketch_merge(partial, keys, [f"{m.name}__state" for m in ms])
     outs = []
     for m in ms:
         out = m.estimator(F.col(f"{m.name}__state"))
@@ -313,13 +284,42 @@ def sketch_grouped_agg(df: DataFrame, keys: list[str],
     return merged.select(*keys, *outs)
 
 
+def _run_key(df: DataFrame, key: str):
+    """The partition and sort expression of one group key. A float key
+    puts NaN with null: Arrow->pandas renders both as NaN, so the fold
+    must meet them in one run to emit one group."""
+    c = F.col(key)
+    if isinstance(df.schema[key].dataType, (FloatType, DoubleType)):
+        return F.when(~F.isnan(c), c)
+    return c
+
+
 def sketch_merge(df: DataFrame, keys: list[str],
-                 state_col: str = "state") -> DataFrame:
-    """Phase 2: merge partial states per group (family-agnostic)."""
-    merged = combine_udf()(F.col(state_col)).alias(state_col)
+                 state_col: str | list[str] = "state",
+                 names: list[str] | None = None) -> DataFrame:
+    """Phase 2: merge partial states per group (family-agnostic), one row
+    per group. ``state_col`` is one state column or a list of them;
+    ``names`` renames them in the output. The state rows are
+    hash-partitioned and sorted by ``keys`` and then folded by one
+    ``mapInPandas`` pass per partition.
+
+    With no keys the rows go to one partition together with one all-null
+    row, so the result is always one row, null states for no input (the
+    global-aggregate contract; an input the optimizer proves empty would
+    otherwise leave no partition to run the fold on)."""
+    cols = [state_col] if isinstance(state_col, str) else list(state_col)
+    names = cols if names is None else list(names)
+    src = df.select(*keys, *(F.col(c).alias(n) for c, n in zip(cols, names)))
+    schema = StructType([src.schema[k] for k in keys]
+                        + [StructField(n, BinaryType()) for n in names])
     if keys:
-        return df.groupBy(*keys).agg(merged)
-    return df.agg(merged)
+        order = [_run_key(src, k) for k in keys]
+        src = src.repartition(*order).sortWithinPartitions(*order)
+    else:
+        nulls = df.sparkSession.range(1).select(
+            *(F.lit(None).cast(BinaryType()).alias(n) for n in names))
+        src = src.union(nulls).repartition(1)
+    return src.mapInPandas(combine_fold(keys, names), schema)
 
 
 def sketch_accumulate(df: DataFrame, keys: list[str], col: str,
@@ -354,7 +354,5 @@ def sketch_accumulate_multi(df: DataFrame, keys: list[str],
     accepts, incl. tuple's two-column input as a col tuple)."""
     ms = list(measures)
     partial = sketch_partial_multi(df, keys, ms, max_groups=max_groups)
-    combines = [combine_udf()(F.col(f"{m.name}__state")).alias(m.name)
-                for m in ms]
-    return (partial.groupBy(*keys).agg(*combines) if keys
-            else partial.agg(*combines))
+    return sketch_merge(partial, keys, [f"{m.name}__state" for m in ms],
+                        names=[m.name for m in ms])
