@@ -27,6 +27,9 @@ Quick start::
 
 __version__ = "0.1.0"
 
+# first: every Python worker imports the package when it unpickles an engine
+# UDF, and from then on its tasks skip the per-task zip re-reads
+from . import _zipimport_cache  # noqa: E402,F401
 from . import compat  # noqa: E402
 from .register import install  # noqa: E402
 from .sql import sql  # noqa: E402

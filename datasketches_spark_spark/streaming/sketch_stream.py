@@ -137,6 +137,49 @@ def _epoch_ms(ts, tz: str) -> int:
     return t.value // 1_000_000
 
 
+def _fold_columns(df: DataFrame, cols: list[str], evict_after) -> list[str]:
+    """The input columns of a stateful fold: ``cols``, plus the input's
+    event-time watermark column when eviction is on and none of ``cols``
+    carries it. An event-time timeout needs the watermark below the fold,
+    and projecting to plain keys and measures (idle-key eviction) would
+    drop it; a window key derived from the event time already carries it."""
+    if evict_after is None:
+        return cols
+    marked = [f.name for f in df.schema.fields
+              if "spark.watermarkDelayMs" in f.metadata]
+    if not marked or set(marked) & set(cols):
+        return cols
+    return [*cols, marked[0]]
+
+
+def _eviction_horizon(key_fields, evict_after, tz: str):
+    """The event-time timeout a stateful fold sets on a group after each
+    update, as ``horizon(key, state) -> epoch ms``; None without
+    ``evict_after``. A window struct key times out at ``window.end +
+    evict_after``; any other key ``evict_after`` past the watermark at its
+    last update (idle-key eviction)."""
+    if evict_after is None:
+        return None
+    evict_ms = _interval_ms(evict_after)
+    win_idx = _window_key_index(key_fields)
+
+    def horizon(key, state: GroupState) -> int:
+        if win_idx is not None:
+            w = key[win_idx]
+            end = (w["end"] if isinstance(w, dict)
+                   else getattr(w, "end", None))
+            if end is None:  # plain tuple (start, end)
+                end = w[1]
+            at = _epoch_ms(end, tz) + evict_ms
+        else:
+            at = max(state.getCurrentWatermarkMs(), 0) + evict_ms
+        # EventTimeTimeout requires a strictly-future timestamp; a
+        # window already past the watermark evicts on the next trigger.
+        return max(at, state.getCurrentWatermarkMs() + 1)
+
+    return horizon
+
+
 def sketch_accumulate_stream(df: DataFrame, keys: list[str], col: str,
                              family: str, state_col: str = "state",
                              evict_after=None, **params) -> DataFrame:
@@ -160,7 +203,10 @@ def sketch_accumulate_stream(df: DataFrame, keys: list[str], col: str,
       evict_after`` — the window is complete (modulo allowed lateness)
       and its last emitted state is final;
     * otherwise the group times out ``evict_after`` past the watermark at
-      its last update — idle-key eviction.
+      its last update — idle-key eviction. The input's watermark column
+      rides into the fold for this; a group last updated before the
+      first watermark (the first trigger) times out at the first later
+      trigger that brings it no rows.
 
     Rows arriving for an evicted group start a FRESH state (the
     within-watermark contract, same as ``dropDuplicatesWithinWatermark``):
@@ -169,7 +215,7 @@ def sketch_accumulate_stream(df: DataFrame, keys: list[str], col: str,
     of all keys ever seen."""
     fam = _family(family, **params)
     in_cols = list(col) if isinstance(col, tuple) else [col]
-    src = df.select(*keys, *in_cols)
+    src = df.select(*_fold_columns(df, [*keys, *in_cols], evict_after))
     key_fields = [src.schema[k] for k in keys]
     out_schema = StructType(key_fields + [
         StructField(state_col, BinaryType()),
@@ -177,12 +223,12 @@ def sketch_accumulate_stream(df: DataFrame, keys: list[str], col: str,
     ])
     state_schema = StructType([StructField("blob", BinaryType()),
                                StructField("n", LongType())])
-    evict_ms = None if evict_after is None else _interval_ms(evict_after)
-    win_idx = _window_key_index(key_fields) if evict_ms is not None else None
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    horizon = _eviction_horizon(
+        key_fields, evict_after,
+        df.sparkSession.conf.get("spark.sql.session.timeZone"))
 
     def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if evict_ms is not None and state.hasTimedOut:
+        if horizon is not None and state.hasTimedOut:
             state.remove()
             return
         if state.exists:
@@ -199,26 +245,14 @@ def sketch_accumulate_stream(df: DataFrame, keys: list[str], col: str,
             fam.update_series(sk, vals)
         blob = sk.serialize()
         state.update((blob, n))
-        if evict_ms is not None:
-            if win_idx is not None:
-                w = key[win_idx]
-                end = (w["end"] if isinstance(w, dict)
-                       else getattr(w, "end", None))
-                if end is None:  # plain tuple (start, end)
-                    end = w[1]
-                horizon = _epoch_ms(end, tz) + evict_ms
-            else:
-                horizon = max(state.getCurrentWatermarkMs(), 0) + evict_ms
-            # EventTimeTimeout requires a strictly-future timestamp; a
-            # window already past the watermark evicts on the next trigger.
-            horizon = max(horizon, state.getCurrentWatermarkMs() + 1)
-            state.setTimeoutTimestamp(horizon)
+        if horizon is not None:
+            state.setTimeoutTimestamp(horizon(key, state))
         row = {k: [v] for k, v in zip(keys, key)}
         row[state_col] = [blob]
         row["n"] = [n]
         yield pd.DataFrame(row)
 
-    timeout = (GroupStateTimeout.EventTimeTimeout if evict_ms is not None
+    timeout = (GroupStateTimeout.EventTimeTimeout if horizon is not None
                else GroupStateTimeout.NoTimeout)
     return (src.groupBy(*keys)
             .applyInPandasWithState(fold, out_schema, state_schema,
@@ -247,7 +281,7 @@ def sketch_accumulate_stream_multi(df: DataFrame, keys: list[str],
     cols = list(dict.fromkeys(
         [*keys, *(c for m in ms
                   for c in (m.col if isinstance(m.col, tuple) else (m.col,)))]))
-    src = df.select(*cols)
+    src = df.select(*_fold_columns(df, cols, evict_after))
     key_fields = [src.schema[k] for k in keys]
     state_cols = [f"{m.name}__state" for m in ms]
     out_schema = StructType(
@@ -256,12 +290,12 @@ def sketch_accumulate_stream_multi(df: DataFrame, keys: list[str],
     state_schema = StructType(
         [StructField(c, BinaryType()) for c in state_cols]
         + [StructField("n", LongType())])
-    evict_ms = None if evict_after is None else _interval_ms(evict_after)
-    win_idx = _window_key_index(key_fields) if evict_ms is not None else None
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    horizon = _eviction_horizon(
+        key_fields, evict_after,
+        df.sparkSession.conf.get("spark.sql.session.timeZone"))
 
     def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if evict_ms is not None and state.hasTimedOut:
+        if horizon is not None and state.hasTimedOut:
             state.remove()
             return
         if state.exists:
@@ -275,25 +309,15 @@ def sketch_accumulate_stream_multi(df: DataFrame, keys: list[str],
                 fam.update_series(sks[j], _measure_input(pdf, m))
         blobs = [sk.serialize() for sk in sks]
         state.update((*blobs, n))
-        if evict_ms is not None:
-            if win_idx is not None:
-                w = key[win_idx]
-                end = (w["end"] if isinstance(w, dict)
-                       else getattr(w, "end", None))
-                if end is None:
-                    end = w[1]
-                horizon = _epoch_ms(end, tz) + evict_ms
-            else:
-                horizon = max(state.getCurrentWatermarkMs(), 0) + evict_ms
-            horizon = max(horizon, state.getCurrentWatermarkMs() + 1)
-            state.setTimeoutTimestamp(horizon)
+        if horizon is not None:
+            state.setTimeoutTimestamp(horizon(key, state))
         row = {k: [v] for k, v in zip(keys, key)}
         for c, b in zip(state_cols, blobs):
             row[c] = [b]
         row["n"] = [n]
         yield pd.DataFrame(row)
 
-    timeout = (GroupStateTimeout.EventTimeTimeout if evict_ms is not None
+    timeout = (GroupStateTimeout.EventTimeTimeout if horizon is not None
                else GroupStateTimeout.NoTimeout)
     return (src.groupBy(*keys)
             .applyInPandasWithState(fold, out_schema, state_schema,

@@ -421,6 +421,81 @@ class TestMultiMeasureStream:
         assert got == want
 
 
+class TestIdleKeyEviction:
+    @pytest.mark.parametrize("multi", [False, True],
+                             ids=["single", "multi"])
+    def test_idle_key_state_is_evicted(self, spark, tmp_path, multi):
+        """A non-window key with ``evict_after`` times out ``evict_after``
+        past the watermark at its last update: a key idle while the
+        watermark passes that horizon loses its state, and its next rows
+        start a fresh one; a key updated meanwhile keeps its state. One
+        file per trigger, 1 h horizon, 0 s watermark delay:
+
+        ====  ===========  ======================  =================
+        file  event times  keys                    watermark in batch
+        ====  ===========  ======================  =================
+        0     00:00-00:05  w w                     none
+        1     00:10-00:20  a a a b b b             00:05
+        2     00:30-00:40  b b                     00:20
+        3     03:00-03:05  b b                     00:40
+        4     03:30        b (a's 01:05 passed)    03:05
+        5     03:40-03:45  a a                     03:30
+        ====  ===========  ======================  =================
+
+        ``w`` is set in the first batch, before any watermark, and times
+        out in the second; no assertion depends on when."""
+        from datasketches_spark_spark.operators.sketch_agg import (
+            distinct_measure)
+        from datasketches_spark_spark.streaming import (
+            await_or_fail, sketch_accumulate_stream,
+            sketch_accumulate_stream_multi, with_event_time_watermark)
+        base = 1_709_251_200  # 2024-03-01 00:00:00 UTC
+        files = [
+            [(0, "w"), (5, "w")],
+            [(10, "a"), (12, "a"), (14, "a"),
+             (16, "b"), (18, "b"), (20, "b")],
+            [(30, "b"), (40, "b")],
+            [(180, "b"), (185, "b")],
+            [(210, "b")],
+            [(220, "a"), (225, "a")],
+        ]
+        src = str(tmp_path / "src")
+        for i, rows in enumerate(files):  # one file each, in event order
+            (spark.createDataFrame(
+                [(base + minute * 60, k, float(i)) for minute, k in rows],
+                "t long, k string, value double")
+             .select(F.timestamp_seconds("t").alias("ts"), "k", "value")
+             .coalesce(1).write.mode("append").parquet(src))
+        raw = (spark.readStream.schema("ts timestamp, k string, value double")
+               .option("maxFilesPerTrigger", 1).parquet(src))
+        stream = with_event_time_watermark(raw, "ts", "0 seconds")
+        if multi:
+            out = sketch_accumulate_stream_multi(
+                stream, ["k"], [distinct_measure("ndv", "value")],
+                evict_after="1 hour")
+        else:
+            out = sketch_accumulate_stream(stream, ["k"], "value",
+                                           family="theta",
+                                           evict_after="1 hour")
+        name = f"idle_evict_{int(multi)}"
+        q = (out.writeStream.format("memory").queryName(name)
+             .outputMode("update")
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .trigger(availableNow=True).start())
+        await_or_fail(q, 300)
+        emitted = {}
+        for r in spark.table(name).collect():
+            emitted.setdefault(r.k, []).append(r.n)
+        # a: 3 rows, evicted in batch 4, then a fresh state of 2 rows
+        # (kept, it would read 5); b: updated every batch, never evicted
+        assert {k: sorted(v) for k, v in emitted.items()} == {
+            "w": [2], "a": [2, 3], "b": [3, 5, 7, 8]}
+        removed = sum(op.get("numRowsRemoved", 0)
+                      for pr in q.recentProgress
+                      for op in (pr.get("stateOperators") or []))
+        assert removed >= 2  # w and a
+
+
 class TestStreamingTuple:
     def test_tuple_family_rides_stateful_accumulate(self, spark, tables,
                                                     stream_dirs):
