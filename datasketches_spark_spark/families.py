@@ -12,7 +12,7 @@ own. Every consumer builds on this table:
 * ``register.install`` and ``dss.sql`` map the SQL accumulate names to
   families through ``_ACC_FAMILY``.
 
-Adding a family is one constructor here (plus a ``_family`` branch) and
+Adding a family is one constructor here (plus a ``_build_family`` branch) and
 one ``_ACC_FAMILY`` row. This module is a leaf: it imports nothing from
 ``functions/`` or ``operators/``.
 """
@@ -483,43 +483,53 @@ def _states_family() -> _Family:
 
 
 def _family(name: str, **params) -> _Family:
+    """The family ``name`` built from ``params``. A parameter its branch
+    does not read raises ValueError, like an unknown name: a silently
+    ignored ``lgk`` on theta or a misrouted ``max_groups`` would
+    otherwise build a default sketch."""
+    read = set()
+
+    def get(key, default=None):
+        read.add(key)
+        return params.get(key, default)
+
+    fam = _build_family(name, get)
+    unknown = sorted(set(params) - read)
+    if unknown:
+        raise ValueError(f"sketch family {name!r} takes no parameter "
+                         f"{', '.join(map(repr, unknown))}")
+    return fam
+
+
+def _build_family(name: str, get) -> _Family:
     if name in ("quantile", "kll", "req", "mergeable"):
         impl = None if name == "quantile" else name.upper()
-        return _quantile_family(params.get("impl", impl), params.get("k"))
+        return _quantile_family(get("impl", impl), get("k"))
     if name in ("freq", "freqitems"):
-        return _freq_family(params.get("item_type", ITEM_STR),
-                            params.get("max_map_size"))
+        return _freq_family(get("item_type", ITEM_STR), get("max_map_size"))
     if name in ("theta", "cpc", "distinct"):
-        return _theta_family(params.get("k"))
+        return _theta_family(get("k"))
     if name == "hll":
-        return _hll_family(params.get("lgk"))
+        return _hll_family(get("lgk"))
     if name == "cpcwire":
-        return _cpcwire_family(params.get("lgk"),
-                               params.get("item_type", ITEM_STR))
+        return _cpcwire_family(get("lgk"), get("item_type", ITEM_STR))
     if name == "thetawire":
-        return _thetawire_family(params.get("k"),
-                                 params.get("item_type", ITEM_STR))
+        return _thetawire_family(get("k"), get("item_type", ITEM_STR))
     if name in ("reservoir", "sample"):
-        return _reservoir_family(params.get("k"),
-                                 params.get("item_type", ITEM_DOUBLE))
+        return _reservoir_family(get("k"), get("item_type", ITEM_DOUBLE))
     if name in ("wreservoir", "weighted_sample"):
-        return _wreservoir_family(params.get("k"),
-                                  params.get("item_type", ITEM_DOUBLE))
+        return _wreservoir_family(get("k"), get("item_type", ITEM_DOUBLE))
     if name == "states":
         return _states_family()
     if name == "tuple":
-        return _tuple_family(params.get("k"))
+        return _tuple_family(get("k"))
     if name in ("aodwire", "tuplewire"):
-        return _aodwire_family(params.get("k"),
-                               params.get("item_type", ITEM_STR))
+        return _aodwire_family(get("k"), get("item_type", ITEM_STR))
     if name in ("bloom", "membership"):
-        return _bloom_family(params.get("expected_items"),
-                             params.get("fpp"))
+        return _bloom_family(get("expected_items"), get("fpp"))
     if name == "bloomwire":
-        return _bloomwire_family(params.get("expected_items"),
-                                 params.get("fpp"),
-                                 params.get("seed", 0),
-                                 params.get("item_type", ITEM_STR))
+        return _bloomwire_family(get("expected_items"), get("fpp"),
+                                 get("seed", 0), get("item_type", ITEM_STR))
     raise ValueError(f"unknown sketch family {name!r}")
 
 

@@ -133,7 +133,8 @@ def _domain_stats_sketched(base: DataFrame, family: str,
     The exchange therefore carries |domains| x |partitions| rows of
     (domain, 3 longs, ~k*8-byte state) — no term grows with corpus
     rows. ``max_groups`` bounds the live-accumulator dict exactly like
-    ``sketch_partial`` (flushes add shuffle rows, never change results).
+    ``sketch_partial_multi`` (flushes add shuffle rows, never change
+    results).
     """
     import numpy as np
     import pandas as pd
@@ -144,7 +145,7 @@ def _domain_stats_sketched(base: DataFrame, family: str,
         StructType,
     )
 
-    from ..families import _family
+    from ..families import _family, _StateMerger
     from .sketch_agg import _iter_groups
 
     fam = (_family("theta", k=ndv_k) if family == "theta"
@@ -197,8 +198,6 @@ def _domain_stats_sketched(base: DataFrame, family: str,
 
     partial = base.mapInPandas(build, partial_schema)
 
-    from ..sketches import deserialize_any
-
     final_schema = StructType([
         base.schema["domain"],
         StructField("n_docs", LongType()),
@@ -208,12 +207,7 @@ def _domain_stats_sketched(base: DataFrame, family: str,
     ])
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = None
-        for blob in pdf["_pstate"]:
-            if blob is None:
-                continue
-            sk = deserialize_any(bytes(blob))
-            merged = sk if merged is None else merged.merge(sk)
+        merged = _StateMerger().merge_blobs(pdf["_pstate"]).sk
         return pd.DataFrame({
             "domain": [pdf["domain"].iloc[0]],
             "n_docs": [int(pdf["_pn"].sum())],

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,58 +54,13 @@ def sketch_partial(df: DataFrame, keys: list[str], col: str,
                    family: str, state_col: str = "state",
                    max_groups: int = 100_000,
                    **params) -> DataFrame:
-    """Phase 1: partition-local sketching. One output row per (partition,
-    group); no shuffle. Input is pruned to ``keys + [col]`` so the parquet
-    scan reads only those columns.
-
-    ``max_groups`` bounds executor memory for high-cardinality group keys
-    (e.g. ``user_id`` at 100 TB): when a partition has accumulated that many
-    live sketches, their states are flushed downstream and the dict resets.
-    Correctness is unaffected — phase 2 re-merges all partial states for a
-    key; the cost is only extra (still state-sized, not raw-sized) shuffle
-    rows on pathological key distributions."""
-    fam = _family(family, **params)
-    in_cols = list(col) if isinstance(col, tuple) else [col]
-    src = df.select(*keys, *in_cols)
-    fields = [src.schema[k] for k in keys]
-    out_schema = StructType(fields + [StructField(state_col, BinaryType())])
-
-    def flush(sketches: dict, originals: dict) -> pd.DataFrame:
-        rows = {k: [originals[hk][i] for hk in sketches]
-                for i, k in enumerate(keys)}
-        rows[state_col] = [sk.serialize() for sk in sketches.values()]
-        return pd.DataFrame(rows)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sketches: dict = {}
-        originals: dict = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if not keys:
-                sk = sketches.get(())
-                if sk is None:
-                    sk = sketches[()] = fam.make()
-                    originals[()] = ()
-                fam.update_series(sk, pdf[in_cols] if len(in_cols) > 1
-                                  else pdf[col])
-                continue
-            # prep the whole batch column once (vectorized); per group only
-            # a numpy position slice + one sketch call
-            ctx = fam.prep(pdf[in_cols] if len(in_cols) > 1 else pdf[col])
-            for hk, kv, idx in _iter_groups(pdf, keys):
-                sk = sketches.get(hk)
-                if sk is None:
-                    sk = sketches[hk] = fam.make()
-                    originals[hk] = kv
-                fam.update(sk, ctx, idx)
-            if len(sketches) >= max_groups:
-                yield flush(sketches, originals)
-                sketches, originals = {}, {}
-        if sketches:
-            yield flush(sketches, originals)
-
-    return src.mapInPandas(build, out_schema)
+    """Phase 1 for one measure: :func:`sketch_partial_multi` over
+    ``state_measure(state_col, col, family, **params)``, its state column
+    renamed to ``state_col``. One output row per (partition, group); no
+    shuffle."""
+    m = state_measure(state_col, col, family, **params)
+    return (sketch_partial_multi(df, keys, [m], max_groups=max_groups)
+            .withColumnRenamed(f"{state_col}__state", state_col))
 
 
 class Measure:
@@ -188,6 +142,13 @@ def _measure_input(pdf: pd.DataFrame, m: Measure):
     return pdf[list(m.col)] if isinstance(m.col, tuple) else pdf[m.col]
 
 
+def _input_columns(keys: list[str], measures: list[Measure]) -> list[str]:
+    """The keys and every measure's input columns, each once, in order."""
+    cols = (c for m in measures
+            for c in (m.col if isinstance(m.col, tuple) else (m.col,)))
+    return list(dict.fromkeys([*keys, *cols]))
+
+
 def weighted_sample_measure(name: str, col: str, weight_col: str,
                             k: int | None = None,
                             item_type: str = "double") -> Measure:
@@ -206,14 +167,20 @@ def sketch_partial_multi(df: DataFrame, keys: list[str],
                          max_groups: int = 100_000) -> DataFrame:
     """Phase 1 over several measures in ONE pass: each input partition is
     streamed once, one live sketch per (group, measure), emitting
-    ``(keys..., <name>__state ...)`` rows. Compared with running one
-    ``sketch_partial`` per measure this scans the source once instead of M
-    times and shuffles one state row per group instead of M."""
+    ``(keys..., <name>__state ...)`` rows — one row per (partition,
+    group); no shuffle. Input is pruned to the keys and measure columns
+    so the parquet scan reads only those columns. Compared with one pass
+    per measure this scans the source once instead of M times and
+    shuffles one state row per group instead of M.
+
+    ``max_groups`` bounds executor memory for high-cardinality group keys
+    (e.g. ``user_id`` at 100 TB): when a partition has accumulated that many
+    live groups, their states are flushed downstream and the dict resets.
+    Correctness is unaffected — phase 2 re-merges all partial states for a
+    key; the cost is only extra (still state-sized, not raw-sized) shuffle
+    rows on pathological key distributions."""
     fams = [(m, _family(m.family, **m.params)) for m in measures]
-    cols = list(dict.fromkeys(
-        [*keys, *(c for m in measures
-                  for c in (m.col if isinstance(m.col, tuple) else (m.col,)))]))
-    src = df.select(*cols)
+    src = df.select(*_input_columns(keys, measures))
     fields = [src.schema[k] for k in keys]
     state_cols = [f"{m.name}__state" for m in measures]
     out_schema = StructType(fields + [StructField(c, BinaryType())
@@ -262,20 +229,21 @@ def sketch_grouped_agg(df: DataFrame, keys: list[str],
                        max_groups: int = 100_000) -> DataFrame:
     """Grouped sketch aggregation with the scale-correct physics: map-side
     partial sketches (``mapInPandas``), a state-only shuffle, reduce-side
-    merge, then estimate. This is what a bare ``GROUPED_AGG`` pandas UDF
-    cannot do — it would shuffle every raw row to the aggregating task
-    (the reference gets partial/final for free from
-    ``TypedImperativeAggregate``, ``quantileSketches.scala:234-273``).
+    merge — :func:`sketch_accumulate_multi` — then estimate. This is what
+    a bare ``GROUPED_AGG`` pandas UDF cannot do — it would shuffle every
+    raw row to the aggregating task (the reference gets partial/final for
+    free from ``TypedImperativeAggregate``,
+    ``quantileSketches.scala:234-273``).
 
     ``max_groups`` bounds the per-executor live-sketch dict for
-    high-cardinality keys (see :func:`sketch_partial`); flushing never
-    changes results, only the count of (still state-sized) shuffle rows."""
+    high-cardinality keys (see :func:`sketch_partial_multi`); flushing
+    never changes results, only the count of (still state-sized) shuffle
+    rows."""
     ms = list(measures)
-    partial = sketch_partial_multi(df, keys, ms, max_groups=max_groups)
-    merged = sketch_merge(partial, keys, [f"{m.name}__state" for m in ms])
+    merged = sketch_accumulate_multi(df, keys, ms, max_groups=max_groups)
     outs = []
     for m in ms:
-        out = m.estimator(F.col(f"{m.name}__state"))
+        out = m.estimator(F.col(m.name))
         if m.preserve_type:
             from ..functions.quantiles import preserve_output_type
             dt = df.schema[m.col].dataType
@@ -325,13 +293,17 @@ def sketch_merge(df: DataFrame, keys: list[str],
 def sketch_accumulate(df: DataFrame, keys: list[str], col: str,
                       family: str, state_col: str = "state",
                       **params) -> DataFrame:
-    """Two-phase accumulate: ``(keys..., state)`` summary table.
+    """Two-phase accumulate: ``(keys..., state)`` summary table — the
+    one-measure form of :func:`sketch_accumulate_multi`.
 
     Equivalent result to ``groupBy(keys).agg(approx_*_accumulate(col))`` but
     with map-side combine: the shuffle carries sketch states, not raw rows.
+    ``max_groups`` (in ``params``) reaches :func:`sketch_partial_multi`.
     """
-    return sketch_merge(sketch_partial(df, keys, col, family, state_col,
-                                       **params), keys, state_col)
+    max_groups = params.pop("max_groups", 100_000)
+    return sketch_accumulate_multi(
+        df, keys, [state_measure(state_col, col, family, **params)],
+        max_groups=max_groups)
 
 
 def state_measure(name: str, col, family: str, **params) -> Measure:

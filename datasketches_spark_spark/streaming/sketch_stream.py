@@ -8,17 +8,19 @@ functions used in batch (the reference has no streaming support at all —
 
 Two shapes:
 
-* ``sketch_accumulate_stream`` — custom stateful operator via
-  ``applyInPandasWithState``: one serialized sketch per group key lives in
-  the state store; each trigger folds the new rows in and emits the updated
-  ``(keys..., state, n)`` row. Use with update-mode sinks.
+* ``sketch_accumulate_stream_multi`` — custom stateful operator via
+  ``applyInPandasWithState``: one serialized sketch per (group key,
+  measure) lives in the state store; each trigger folds the new rows in
+  and emits the updated ``(keys..., <name>__state ..., n)`` row. Use with
+  update-mode sinks. ``sketch_accumulate_stream`` is its one-measure form
+  (``(keys..., state, n)``); both run the one fold in ``_keyed_fold``.
 * ``streaming_summary_sink`` — ``foreachBatch`` composition for
   append-style pipelines: every micro-batch runs the batch two-phase
-  operator (``sketch_partial`` -> merge) and APPENDS its per-batch states
-  to a summary table; readers re-combine states at query time with
-  ``*_combine``. This is the streaming version of the reference's
-  accumulate -> (filter) -> combine -> estimate pipeline and needs no
-  state store at all — the summary table IS the state.
+  operator (``sketch_accumulate``: partial states -> merge) and APPENDS
+  its per-batch states to a summary table; readers re-combine states at
+  query time with ``*_combine``. This is the streaming version of the
+  reference's accumulate -> (filter) -> combine -> estimate pipeline and
+  needs no state store at all — the summary table IS the state.
 """
 
 from __future__ import annotations
@@ -38,6 +40,8 @@ from pyspark.sql.types import (
 
 from ..families import _family
 from ..operators import sketch_accumulate
+from ..operators.sketch_agg import (
+    _input_columns, _measure_input, state_measure)
 from ..sketches import deserialize_any
 
 
@@ -187,8 +191,9 @@ def sketch_accumulate_stream(df: DataFrame, keys: list[str], col: str,
     ``applyInPandasWithState`` keeping one serialized sketch per group.
 
     Emits ``(keys..., state, n)`` every trigger for every updated group
-    (``n`` = rows folded in so far). The state blob is the same wire format
-    as batch accumulate — estimate/combine functions apply unchanged.
+    (``n`` = rows folded in so far whose first ``col`` is neither null nor
+    NaN). The state blob is the same wire format as batch accumulate —
+    estimate/combine functions apply unchanged.
 
     State eviction (``evict_after``): without it, state lives forever —
     fine for bounded key domains (an event-type dimension), a scale-killer
@@ -212,51 +217,15 @@ def sketch_accumulate_stream(df: DataFrame, keys: list[str], col: str,
     within-watermark contract, same as ``dropDuplicatesWithinWatermark``):
     size ``evict_after`` to cover real event-time spread. State-store
     growth is then bounded by the keys active within the horizon instead
-    of all keys ever seen."""
-    fam = _family(family, **params)
-    in_cols = list(col) if isinstance(col, tuple) else [col]
-    src = df.select(*_fold_columns(df, [*keys, *in_cols], evict_after))
-    key_fields = [src.schema[k] for k in keys]
-    out_schema = StructType(key_fields + [
-        StructField(state_col, BinaryType()),
-        StructField("n", LongType()),
-    ])
-    state_schema = StructType([StructField("blob", BinaryType()),
-                               StructField("n", LongType())])
-    horizon = _eviction_horizon(
-        key_fields, evict_after,
-        df.sparkSession.conf.get("spark.sql.session.timeZone"))
+    of all keys ever seen.
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if horizon is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            blob, n = state.get
-            sk = deserialize_any(bytes(blob))
-        else:
-            sk, n = fam.make(), 0
-        for pdf in pdfs:
-            if len(in_cols) > 1:  # (value, weight) family: sub-frame input
-                vals = pdf[in_cols].dropna(subset=in_cols[:1])
-            else:
-                vals = pdf[col].dropna()
-            n += len(vals)
-            fam.update_series(sk, vals)
-        blob = sk.serialize()
-        state.update((blob, n))
-        if horizon is not None:
-            state.setTimeoutTimestamp(horizon(key, state))
-        row = {k: [v] for k, v in zip(keys, key)}
-        row[state_col] = [blob]
-        row["n"] = [n]
-        yield pd.DataFrame(row)
-
-    timeout = (GroupStateTimeout.EventTimeTimeout if horizon is not None
-               else GroupStateTimeout.NoTimeout)
-    return (src.groupBy(*keys)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "update", timeout))
+    This is the one-measure form of :func:`sketch_accumulate_stream_multi`
+    except for ``n`` and for the state row's field names (``blob``,
+    ``n``), which existing checkpoints rely on."""
+    first = col[0] if isinstance(col, tuple) else col
+    return _keyed_fold(df, keys,
+                       [state_measure(state_col, col, family, **params)],
+                       evict_after, [state_col], ["blob"], count_col=first)
 
 
 def sketch_accumulate_stream_multi(df: DataFrame, keys: list[str],
@@ -266,29 +235,39 @@ def sketch_accumulate_stream_multi(df: DataFrame, keys: list[str],
     per measure (the streaming twin of
     ``sketch_agg.sketch_partial_multi``). Emits
     ``(keys..., <name>__state ..., n)`` every trigger for updated
-    groups; eviction semantics are identical to
-    :func:`sketch_accumulate_stream` (``EventTimeTimeout`` horizon from
-    a window key's end, idle-key eviction otherwise).
+    groups, ``n`` = every row folded in so far; eviction semantics are
+    identical to :func:`sketch_accumulate_stream` (``EventTimeTimeout``
+    horizon from a window key's end, idle-key eviction otherwise).
 
     Compared with running one single-measure stream per metric this
     keeps ONE state store, one shuffle of the input, and one checkpoint
     lineage — at scale the difference between N stateful operators and
     one. States merge interchangeably with batch-built ones (same wire
     format), so the outputs can feed a ``SketchRollup`` directly."""
-    from ..operators.sketch_agg import _measure_input
     ms = list(measures)
-    fams = [(m, _family(m.family, **m.params)) for m in ms]
-    cols = list(dict.fromkeys(
-        [*keys, *(c for m in ms
-                  for c in (m.col if isinstance(m.col, tuple) else (m.col,)))]))
-    src = df.select(*_fold_columns(df, cols, evict_after))
-    key_fields = [src.schema[k] for k in keys]
     state_cols = [f"{m.name}__state" for m in ms]
+    return _keyed_fold(df, keys, ms, evict_after, state_cols, state_cols)
+
+
+def _keyed_fold(df: DataFrame, keys: list[str], measures, evict_after,
+                state_cols: list[str], blob_fields: list[str],
+                count_col: str | None = None) -> DataFrame:
+    """The keyed-accumulate fold behind both stream operators:
+    ``groupBy(keys)`` + ``applyInPandasWithState`` keeping one serialized
+    sketch per measure in a state row ``(blob_fields..., n)`` and
+    emitting ``(keys..., state_cols..., n)`` per updated group. With
+    ``count_col`` each batch first drops the rows where that column is
+    null or NaN and ``n`` counts the rest; without it ``n`` counts every
+    row."""
+    fams = [(m, _family(m.family, **m.params)) for m in measures]
+    src = df.select(*_fold_columns(df, _input_columns(keys, measures),
+                                   evict_after))
+    key_fields = [src.schema[k] for k in keys]
     out_schema = StructType(
         key_fields + [StructField(c, BinaryType()) for c in state_cols]
         + [StructField("n", LongType())])
     state_schema = StructType(
-        [StructField(c, BinaryType()) for c in state_cols]
+        [StructField(c, BinaryType()) for c in blob_fields]
         + [StructField("n", LongType())])
     horizon = _eviction_horizon(
         key_fields, evict_after,
@@ -304,9 +283,11 @@ def sketch_accumulate_stream_multi(df: DataFrame, keys: list[str],
         else:
             sks, n = [fam.make() for _, fam in fams], 0
         for pdf in pdfs:
+            if count_col is not None:
+                pdf = pdf.dropna(subset=[count_col])
             n += len(pdf)
-            for j, (m, fam) in enumerate(fams):
-                fam.update_series(sks[j], _measure_input(pdf, m))
+            for sk, (m, fam) in zip(sks, fams):
+                fam.update_series(sk, _measure_input(pdf, m))
         blobs = [sk.serialize() for sk in sks]
         state.update((*blobs, n))
         if horizon is not None:

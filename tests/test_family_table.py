@@ -105,6 +105,28 @@ def test_all_zero_weight_group_accumulates_to_null(spark, installed,
     assert row.s is None
 
 
+def test_unknown_sketch_parameters_raise(spark, installed):
+    """A parameter the family does not read raises instead of building a
+    default sketch, on the batch, streaming and multi-measure paths;
+    ``max_groups`` still reaches the batch partial loop."""
+    from datasketches_spark_spark.operators import (
+        sketch_accumulate_multi, state_measure)
+    from datasketches_spark_spark.streaming import sketch_accumulate_stream
+    with pytest.raises(ValueError, match="'theta' takes no parameter 'lgk'"):
+        sketch_accumulate(installed, ["g"], "v", "theta", lgk=12)
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(ValueError, match="'max_groups'"):
+        sketch_accumulate_stream(stream, ["timestamp"], "value", "theta",
+                                 max_groups=10)
+    with pytest.raises(ValueError, match="'bogus', 'lgk'"):
+        sketch_accumulate_multi(installed, ["g"], [
+            state_measure("s", "v", "quantile", lgk=12, bogus=1)])
+    got = sketch_accumulate(installed, ["g"], "v", "theta", k=64,
+                            max_groups=1).collect()
+    assert _states(got) == _states(sketch_accumulate(
+        installed, ["g"], "v", "theta", k=64).collect())
+
+
 def test_every_registered_accumulate_is_in_the_table(registered):
     acc = {n for n in registered if "_accumulate" in n}
     assert acc == set(_ACC_FAMILY)

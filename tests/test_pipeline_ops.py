@@ -461,7 +461,8 @@ class TestManyGroupsSkewStress:
     """The engine's central 100 TB claim, stress-tested: the two-phase
     operator must hold >=1e5 distinct group keys plus one pathological hot
     key with per-executor memory bounded by ``max_groups`` flushes
-    (``operators/sketch_agg.py::sketch_partial:318``), and the flushed
+    (``operators/sketch_agg.py::sketch_partial_multi``, the loop
+    ``sketch_partial`` calls), and the flushed
     partials must re-merge to results identical to the unflushed path.
     Reference physics being reproduced: ``quantileSketches.scala:234-273``
     (TypedImperativeAggregate partial/final with serialize-at-shuffle)."""

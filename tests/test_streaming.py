@@ -1,6 +1,7 @@
 """Structured Streaming sketch aggregation tests (file source, availableNow
 trigger, memory/parquet sinks)."""
 
+import math
 import shutil
 import tempfile
 
@@ -686,3 +687,81 @@ class TestStreamingBloom:
                   .where(~dsf.approx_membership_contains(
                       F.col("state"), F.col("user_id"))).count())
         assert misses == 0
+
+
+class TestSingleMeasureStreamParity:
+    """``sketch_accumulate_stream`` is the one-measure form of
+    ``sketch_accumulate_stream_multi``: over one stream whose double
+    measure ``v`` holds nulls and NaNs, both build the same final state
+    bytes as batch ``sketch_accumulate`` (the streaming counterpart of
+    ``test_family_table.py``'s per-name byte check). Only ``n`` differs:
+    the single form counts the rows whose ``v`` is neither null nor NaN,
+    the multi form every row of the group."""
+
+    # (g, v, x) per file; one file per trigger
+    FILES = [
+        [(0, 1.5, 1.0), (0, None, 2.0), (1, 2.5, 3.0), (1, float("nan"), 4.0),
+         (2, None, 5.0)],
+        [(0, 3.5, 6.0), (0, float("nan"), None), (1, 1.5, 7.0),
+         (2, 4.5, 8.0), (2, 4.5, None)],
+        [(0, 1.5, 9.0), (1, None, 1.0), (1, 6.5, 2.0), (2, float("nan"), 3.0),
+         (2, 0.5, 4.0)],
+    ]
+
+    @pytest.mark.parametrize("family,col", [
+        ("quantile", "v"), ("theta", "v"), ("tuple", ("v", "x"))],
+        ids=["quantile", "theta", "tuple"])
+    def test_single_multi_and_batch_states_match(self, spark, tmp_path,
+                                                 family, col):
+        from datasketches_spark_spark.operators import sketch_accumulate
+        from datasketches_spark_spark.operators.sketch_agg import (
+            state_measure)
+        from datasketches_spark_spark.streaming import (
+            await_or_fail, sketch_accumulate_stream,
+            sketch_accumulate_stream_multi)
+        # ``i`` numbers the rows in stream order: the batch scan replays
+        # that order, since an exact-regime quantile state keeps it
+        schema = "i int, g int, v double, x double"
+        src = str(tmp_path / "src")
+        i = 0
+        for rows in self.FILES:
+            (spark.createDataFrame([(i + j, *r) for j, r in enumerate(rows)],
+                                   schema)
+             .coalesce(1).write.mode("append").parquet(src))
+            i += len(rows)
+
+        def final(out, state_col, tag):
+            name = f"parity_{family}_{tag}"
+            q = (out.writeStream.format("memory").queryName(name)
+                 .outputMode("update")
+                 .option("checkpointLocation", str(tmp_path / tag))
+                 .trigger(availableNow=True).start())
+            await_or_fail(q, 300)
+            last = {}
+            for r in spark.table(name).collect():
+                if r.g not in last or r.n >= last[r.g][0]:
+                    last[r.g] = (r.n, bytes(r[state_col]))
+            return last
+
+        def stream():
+            return (spark.readStream.schema(schema)
+                    .option("maxFilesPerTrigger", 1).parquet(src))
+
+        single = final(sketch_accumulate_stream(stream(), ["g"], col, family),
+                       "state", "single")
+        multi = final(sketch_accumulate_stream_multi(
+            stream(), ["g"], [state_measure("m", col, family)]),
+            "m__state", "multi")
+        ordered = (spark.read.schema(schema).parquet(src)
+                   .repartition(1).sortWithinPartitions("i"))
+        batch = {r.g: bytes(r.state) for r in sketch_accumulate(
+            ordered, ["g"], col, family).collect()}
+
+        assert {g: s for g, (_, s) in single.items()} == batch
+        assert {g: s for g, (_, s) in multi.items()} == batch
+        rows = [r for f in self.FILES for r in f]
+        assert {g: n for g, (n, _) in single.items()} == {
+            g: sum(1 for r in rows if r[0] == g and r[1] is not None
+                   and not math.isnan(r[1])) for g in batch}
+        assert {g: n for g, (n, _) in multi.items()} == {
+            g: sum(1 for r in rows if r[0] == g) for g in batch}
