@@ -43,6 +43,7 @@ from .. import conf
 from ..families import _family
 from ..sketches import ITEM_LONG, ITEM_STR
 from .udfs import (
+    Finisher,
     _col,
     accumulate_udf,
     combine_udf,
@@ -163,6 +164,16 @@ def _is_ds_hll(c: Column) -> Column:
     return F.substring(c, 3, 1) == F.lit(bytes([7]))
 
 
+def _count_distinct_finisher() -> Finisher:
+    """The engine-state estimate, wrapped so foreign DataSketches HLL
+    states take the JVM branch. Only the Column form needs the wrap: a
+    merge fold has already decoded every state it finishes, and it
+    raises on HLL wire bytes (``compat.datasketches``), so the states it
+    merges are never of that kind."""
+    return Finisher(theta_est_udf, wrap=lambda c, est: F.when(
+        _is_ds_hll(c), F.hll_sketch_estimate(c)).otherwise(est))
+
+
 def approx_count_distinct_estimate(col, impl: str | None = None) -> Column:
     """Decode a state and return the NDV estimate (LongType).
 
@@ -176,9 +187,7 @@ def approx_count_distinct_estimate(col, impl: str | None = None) -> Column:
     ``hll_union_agg``)."""
     if _impl(impl) == "HLL":
         return F.hll_sketch_estimate(_col(col))
-    c = _col(col)
-    return (F.when(_is_ds_hll(c), F.hll_sketch_estimate(c))
-            .otherwise(theta_est_udf()(c)))
+    return _count_distinct_finisher()(col)
 
 
 def approx_set_jaccard(col_a, col_b) -> Column:

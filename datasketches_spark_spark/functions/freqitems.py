@@ -13,7 +13,7 @@ from pyspark.sql import Column
 
 from ..families import _family
 from ..sketches import ITEM_LONG, ITEM_STR
-from .udfs import (_col, accumulate_udf, combine_udf, direct_udf,
+from .udfs import (Finisher, _col, accumulate_udf, combine_udf, direct_udf,
                    freq_est_udf, freq_result_type, frequent_items)
 
 _TYPES = {"string": ITEM_STR, "str": ITEM_STR, "long": ITEM_LONG, "int": ITEM_LONG}
@@ -51,8 +51,13 @@ def approx_freqitems_combine(col) -> Column:
     return combine_udf()(_col(col))
 
 
+def _freqitems_finisher(item_type: str = "string") -> Finisher:
+    t = _item_type(item_type)
+    return Finisher(lambda: freq_est_udf(t))
+
+
 def approx_freqitems_estimate(col, item_type: str = "string") -> Column:
-    return freq_est_udf(_item_type(item_type))(_col(col))
+    return _freqitems_finisher(item_type)(col)
 
 
 def approx_join_size(col_a, col_b) -> Column:

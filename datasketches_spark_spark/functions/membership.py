@@ -35,6 +35,7 @@ from pyspark.sql import Column
 from ..families import _family
 from ..sketches import ITEM_LONG, ITEM_STR
 from .udfs import (
+    Finisher,
     _col,
     accumulate_udf,
     bloom_contains_udf,
@@ -99,14 +100,14 @@ def approx_membership_contains(state, col,
 def approx_membership_estimate(state) -> Column:
     """Distinct-key estimate decoded from the state's fill ratio
     (Swamidass & Baldi 2007); null for a saturated filter."""
-    return bloom_estimate_udf()(_col(state))
+    return Finisher(bloom_estimate_udf)(state)
 
 
 def approx_membership_fpp(state) -> Column:
     """CURRENT false-positive probability at the state's observed fill
     — the membership family's read-time error surface (analogue of
     ``approx_count_distinct_bounds``)."""
-    return bloom_fpp_udf()(_col(state))
+    return Finisher(bloom_fpp_udf)(state)
 
 
 def approx_membership_accumulate_wire(col, expected_items: int | None = None,

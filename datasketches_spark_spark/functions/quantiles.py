@@ -27,6 +27,7 @@ from pyspark.sql.types import ArrayType, DoubleType
 from .. import conf
 from ..families import QUANTILE_DTYPES, _family
 from .udfs import (
+    Finisher,
     _col,
     accumulate_udf,
     cdf_est_udf,
@@ -173,34 +174,50 @@ def approx_percentile_combine(col) -> Column:
     return combine_udf()(_col(col))
 
 
+def _percentile_finisher(percentage) -> Finisher:
+    ps, multi = validate_percentage(percentage)
+    return Finisher(lambda: quantile_est_udf(conf.quantile_rank_rule(), multi),
+                    ps if multi else ps[0])
+
+
+def _pmf_finisher(num_splits: int = 9) -> Finisher:
+    validate_num_splits(num_splits)
+    return Finisher(pmf_est_udf, num_splits)
+
+
+def _rank_finisher(value) -> Finisher:
+    return Finisher(rank_est_udf, float(value))
+
+
+def _cdf_finisher(split_points) -> Finisher:
+    sps = [float(x) for x in split_points]
+    if not sps:
+        raise ValueError("split_points must be non-empty")
+    return Finisher(cdf_est_udf, sps)
+
+
 def approx_percentile_estimate(col, percentage) -> Column:
     """Decode a state and return quantile(s); output is always double.
     Rank rule from conf ``quantiles.rankRule`` (disc | exclusive)."""
-    ps, multi = validate_percentage(percentage)
-    lit = F.array(*map(F.lit, ps)) if multi else F.lit(ps[0])
-    return quantile_est_udf(conf.quantile_rank_rule(), multi)(_col(col), lit)
+    return _percentile_finisher(percentage)(col)
 
 
 def approx_pmf_estimate(col, num_splits: int = 9) -> Column:
     """Probability mass over ``num_splits`` equal-width bins of [min, max]."""
-    validate_num_splits(num_splits)
-    return pmf_est_udf()(_col(col), F.lit(num_splits))
+    return _pmf_finisher(num_splits)(col)
 
 
 def approx_rank_estimate(col, value) -> Column:
     """Rank of ``value`` (fraction of mass <= value) from a quantile state
     — the inverse of approx_percentile_estimate. Extension beyond the
     reference's surface (it has quantile + pmf only)."""
-    return rank_est_udf()(_col(col), F.lit(float(value)))
+    return _rank_finisher(value)(col)
 
 
 def approx_cdf_estimate(col, split_points) -> Column:
     """Cumulative distribution at each split point (plus a trailing 1.0),
     the cumulative complement of approx_pmf_estimate."""
-    sps = [float(x) for x in split_points]
-    if not sps:
-        raise ValueError("split_points must be non-empty")
-    return cdf_est_udf()(_col(col), F.array(*map(F.lit, sps)))
+    return _cdf_finisher(split_points)(col)
 
 
 def approx_percentile_bounds(col, percentage, eps=None) -> Column:

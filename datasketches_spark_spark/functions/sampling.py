@@ -22,7 +22,7 @@ from ..sketches import (
     ReservoirSketch,
     WeightedReservoirSketch,
 )
-from .udfs import _col, accumulate_udf, combine_udf, state_udf
+from .udfs import Finisher, _col, accumulate_udf, combine_udf, state_udf
 
 _SAMPLE_FAMILIES = (ReservoirSketch, WeightedReservoirSketch)
 
@@ -88,10 +88,15 @@ def approx_sample_combine(col) -> Column:
     return combine_udf()(_col(col))
 
 
+def _sample_finisher(item_type: str = "double") -> Finisher:
+    t = _item_type(item_type)
+    return Finisher(lambda: sample_estimate_udf(t))
+
+
 def approx_sample_estimate(col, item_type: str = "double") -> Column:
     """Scalar: state -> the retained sample as a SORTED array (complete
     multiset while the stream stayed within k)."""
-    return sample_estimate_udf(_item_type(item_type))(_col(col))
+    return _sample_finisher(item_type)(col)
 
 
 def approx_sample_stream_size(col) -> Column:

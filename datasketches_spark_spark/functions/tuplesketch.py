@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..families import _family
 from ..sketches import ITEM_LONG
 from .udfs import (
+    Finisher,
     _col,
     accumulate_udf,
     combine_udf,
@@ -69,7 +70,7 @@ def approx_tuple_combine(col) -> Column:
 def approx_tuple_estimate(col) -> Column:
     """Decode a tuple state: ``struct(ndv: long, rows: long,
     value_sum: double)`` — distinct keys, total rows, total value."""
-    return tuple_est_udf()(_col(col))
+    return Finisher(tuple_est_udf)(col)
 
 
 def approx_tuple_bounds(col, num_std: float = 2.0) -> Column:
@@ -90,7 +91,11 @@ def approx_tuple_segment_estimate(col, min_count: int = 1,
     given, per-key value sum >= ``min_sum``) — the per-key-predicate
     estimator (exact while the state is exact; Horvitz-Thompson scaled
     at saturation)."""
+    return _tuple_segment_finisher(min_count, min_sum)(col)
+
+
+def _tuple_segment_finisher(min_count: int = 1,
+                            min_sum: float | None = None) -> Finisher:
     if min_sum is None:
-        return tuple_segment_udf()(_col(col), F.lit(int(min_count)))
-    return tuple_segment_sum_udf()(_col(col), F.lit(int(min_count)),
-                                   F.lit(float(min_sum)))
+        return Finisher(tuple_segment_udf, int(min_count))
+    return Finisher(tuple_segment_sum_udf, int(min_count), float(min_sum))

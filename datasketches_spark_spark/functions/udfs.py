@@ -10,7 +10,9 @@ update/merge/serialize contract (``quantileSketches.scala:234-273``) maps to
   (:func:`combine_udf`, the Column/SQL ``*_combine``), or the key-sorted
   ``mapInPandas`` fold :func:`combine_fold` the operators plan;
 * *estimate / pmf*           -> scalar pandas UDF over binary states, built
-  by :func:`state_udf`.
+  by :func:`state_udf`; after an operator merge, the same function runs
+  inside the fold on the merged sketch (:class:`Finisher`), as the
+  reference's ``eval`` estimates from the final buffer.
 
 For true map-side combine at scale, see
 ``datasketches_spark_spark.operators.sketch_agg`` which pre-sketches per
@@ -29,6 +31,7 @@ Error semantics preserved from the reference:
 from __future__ import annotations
 
 import logging
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -39,6 +42,7 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     BooleanType,
+    DataType,
     DoubleType,
     LongType,
     StringType,
@@ -159,6 +163,52 @@ def direct_udf(fam, return_type, finish):
     return direct
 
 
+class _NullOnError:
+    """The estimate error rule (reference parity,
+    ``quantileSketches.scala:614-624``): ``fn`` over states that must all
+    be one of ``kinds``, where a decode error, a state of another kind or
+    an error in ``fn`` gives null. A state is a blob, decoded with
+    ``deserialize_any``, or an already merged sketch. Failures are
+    counted and logged once per batch by :meth:`flush`, naming ``name``.
+    :func:`state_udf` and the merge fold's finishers
+    (:func:`combine_fold`) share it."""
+
+    __slots__ = ("name", "kinds", "fn", "failed", "first")
+
+    def __init__(self, name: str, kinds, fn):
+        self.name, self.kinds, self.fn = name, kinds, fn
+        self.failed, self.first = 0, None
+
+    def __call__(self, states, extra=()):
+        try:
+            sks = [deserialize_any(bytes(s))
+                   if isinstance(s, (bytes, bytearray, memoryview)) else s
+                   for s in states]
+            for sk in sks:
+                if not isinstance(sk, self.kinds):
+                    raise TypeError(f"unexpected {type(sk).__name__} state")
+            return self.fn(*sks, *extra)
+        except Exception as e:
+            self.failed += 1
+            self.first = e if self.first is None else self.first
+            return None
+
+    def flush(self) -> None:
+        if self.failed:
+            log.warning("%s: %d corrupt state(s) -> null; first: %s",
+                        self.name, self.failed, self.first)
+        self.failed, self.first = 0, None
+
+
+def _struct_nulls(out: list, return_type) -> list:
+    """``out`` with each null of a struct-typed result as a struct of
+    nulls, the row a struct-returning pandas UDF gives for it."""
+    if not isinstance(return_type, StructType):
+        return out
+    null = (None,) * len(return_type.fields)
+    return [null if r is None else r for r in out]
+
+
 def state_udf(name: str, return_type, kinds, fn, states: int = 1, args=None):
     """Scalar: ``states`` binary state columns, then argument columns ->
     ``fn(*sketches, *row_args)`` per row.
@@ -167,15 +217,14 @@ def state_udf(name: str, return_type, kinds, fn, states: int = 1, args=None):
     and must be one of ``kinds``. ``args(*row_args)``, when given, runs
     first and outside the error guard: it validates the row's arguments
     (invalid ones raise, reference AnalysisException semantics) and
-    returns the values passed on to ``fn``, or None for a null row. A
-    decode or estimate error gives null (reference parity,
-    ``quantileSketches.scala:614-624``) and is logged once per batch,
-    naming ``name``."""
-    struct = isinstance(return_type, StructType)
+    returns the values passed on to ``fn``, or None for a null row.
+    Errors follow :class:`_NullOnError`. The returned UDF carries its
+    definition as ``spec`` for :class:`Finisher`."""
+    guard = _NullOnError(name, kinds, fn)
 
     @pandas_udf(return_type)
     def est(*cols: pd.Series) -> pd.Series:
-        out, failed, first = [], 0, None
+        out = []
         for row in zip(*cols):
             blobs, extra = row[:states], row[states:]
             if any(b is None for b in blobs):
@@ -186,26 +235,61 @@ def state_udf(name: str, return_type, kinds, fn, states: int = 1, args=None):
                 if extra is None:
                     out.append(None)
                     continue
-            try:
-                sks = [deserialize_any(bytes(b)) for b in blobs]
-                for sk in sks:
-                    if not isinstance(sk, kinds):
-                        raise TypeError(f"unexpected {type(sk).__name__} state")
-                out.append(fn(*sks, *extra))
-            except Exception as e:
-                failed += 1
-                first = e if first is None else first
-                out.append(None)
-        if failed:
-            log.warning("%s: %d corrupt state(s) -> null; first: %s",
-                        name, failed, first)
-        if struct:
-            width = len(return_type.fields)
-            return pd.DataFrame([(None,) * width if r is None else r
-                                 for r in out], columns=return_type.names)
+            out.append(guard(blobs, extra))
+        guard.flush()
+        out = _struct_nulls(out, return_type)
+        if isinstance(return_type, StructType):
+            return pd.DataFrame(out, columns=return_type.names)
         return pd.Series(out, dtype=object)
 
+    est.spec = (name, return_type, kinds, fn, args)
     return est
+
+
+def _lit(v) -> Column:
+    return F.array(*map(F.lit, v)) if isinstance(v, (list, tuple)) \
+        else F.lit(v)
+
+
+class Finisher:
+    """An estimate of one merged state, in both of the places it can run.
+
+    Called on a state column, ``f(col)`` is the Column the ``*_estimate``
+    function returns: the :func:`state_udf` that ``udf()`` builds,
+    applied to the state and to ``lits`` (the literal arguments after the
+    state, already validated) as literal columns, wrapped by
+    ``wrap(col, estimate)`` when given. :meth:`bind` gives the same
+    estimate as a Python function of a merged sketch, which the merge
+    fold (:func:`combine_fold`) runs instead of serializing the state for
+    a second Python pass to decode again. ``udf`` runs when the Column or
+    the fold is built, so the conf it reads is read then."""
+
+    __slots__ = ("udf", "lits", "wrap")
+
+    def __init__(self, udf, *lits, wrap=None):
+        self.udf = udf
+        self.lits = lits
+        self.wrap = wrap
+
+    def __call__(self, col) -> Column:
+        c = _col(col)
+        out = self.udf()(c, *map(_lit, self.lits))
+        return out if self.wrap is None else self.wrap(c, out)
+
+    def bind(self) -> "_Bound":
+        """This estimate as a finish entry of :func:`combine_fold`: the
+        UDF's ``fn`` under its error guard, its arguments bound now."""
+        name, return_type, kinds, fn, args = self.udf().spec
+        bound = self.lits if args is None else args(*self.lits)
+        return _Bound(_NullOnError(name, kinds, fn), bound, return_type)
+
+
+class _Bound(NamedTuple):
+    """A :class:`Finisher` bound for the fold. ``args`` is None when the
+    arguments make every estimate null, as a null argument row does."""
+    guard: _NullOnError
+    args: tuple | None
+    return_type: DataType
 
 
 # --------------------------------------------------------------------- quantile
@@ -386,20 +470,35 @@ def _same_key(a, b) -> bool:
     return bool(a == b)
 
 
-def combine_fold(keys: list[str], state_cols: list[str]):
+def combine_fold(keys: list[str], state_cols: list[str], finish=None):
     """mapInPandas: ``(keys..., states...)`` batches sorted by ``keys`` ->
     one row per group, each state column merged like :func:`combine_udf`
-    (an all-null column gives null, a corrupt blob raises).
+    (a corrupt blob raises).
+
+    ``finish`` has one entry per state column. None emits the merged
+    state, null for an all-null column. A :meth:`Finisher.bind` entry
+    emits the estimate of the merged sketch instead: null for an
+    all-null column, and under the guard's error rule, whose failures
+    are logged once per emitted batch.
 
     Every row of a group arrives in one run (the caller hash-partitions
     and sorts by ``keys``), so only the last run of a batch can go on in
     the next batch: memory is one batch plus one open group. With no keys
     the partition is one group."""
+    finish = finish or [None] * len(state_cols)
+
+    def emit(mergers, f):
+        if f is None:
+            return [m.serialize() for m in mergers]
+        out = [None if m.sk is None or f.args is None
+               else f.guard((m.sk,), f.args) for m in mergers]
+        f.guard.flush()
+        return pd.Series(_struct_nulls(out, f.return_type), dtype=object)
 
     def frame(groups):
         out = {k: [kv[i] for _, kv, _ in groups] for i, k in enumerate(keys)}
         for j, c in enumerate(state_cols):
-            out[c] = [ms[j].serialize() for _, _, ms in groups]
+            out[c] = emit([ms[j] for _, _, ms in groups], finish[j])
         return pd.DataFrame(out, columns=[*keys, *state_cols])
 
     def combine(batches):

@@ -16,7 +16,13 @@ monoids, so
 Every merge here — build, refresh, compact and query — is
 :func:`~.sketch_agg.sketch_merge`: the state rows are hash-partitioned and
 sorted by the (re-)grouping keys, then one ``mapInPandas`` fold per
-partition merges each key's run of states.
+partition merges each key's run of states. For :meth:`SketchRollup.estimate`
+that same fold also emits each measure's estimate from the merged sketch
+when the measure's estimator is a finisher (every ``*_measure`` builder's
+is); only other Column estimators run after it, over merged states.
+
+Reads take the table schema from the Spark schema stored in a data file's
+parquet footer, so a query or compact runs no schema-inference job.
 
 At 100 TB the rollup is O(groups) KB-rows; every query cost is
 proportional to the groups selected, not the rows ever ingested. The
@@ -31,13 +37,37 @@ with the summary table made durable and maintainable.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from .sketch_agg import Measure, sketch_merge, sketch_partial_multi
+from .sketch_agg import Measure, _finisher, sketch_merge, sketch_partial_multi
+
+# The footer key under which Spark's parquet writer stores the row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema stored in the footer of the first data file under
+    ``path`` that has one, or None (no such file, or not a directory)."""
+    import pyarrow.parquet as pq
+    try:
+        names = sorted(n for n in os.listdir(path)
+                       if not n.startswith(("_", ".")))
+    except OSError:
+        return None
+    for n in names:
+        try:
+            meta = pq.read_metadata(os.path.join(path, n)).metadata or {}
+        except Exception:  # not a parquet file: let Spark's read decide
+            continue
+        if _SPARK_SCHEMA_KEY in meta:
+            return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return None
 
 
 class SketchRollup:
@@ -92,17 +122,22 @@ class SketchRollup:
     # ------------------------------------------------------------ query
 
     def states(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        """The rollup's state rows. The schema comes from a data file's
+        footer when Spark wrote one, which saves the job that
+        ``spark.read.parquet`` runs to infer it; otherwise (or for an
+        empty table) the plain read runs, with its inference and errors."""
+        schema = _footer_schema(self.path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.path)
 
-    def _merge(self, df: DataFrame, group_by: list[str]) -> DataFrame:
-        return sketch_merge(df, group_by, self._state_cols)
+    def _merge(self, df: DataFrame, group_by: list[str],
+               finish=None, names=None) -> DataFrame:
+        return sketch_merge(df, group_by, self._state_cols, names=names,
+                            finish=finish)
 
-    def query(self, spark: SparkSession, where=None,
-              group_by: list[str] | None = None) -> DataFrame:
-        """Merged states for a subset: optional ``where`` predicate over
-        the KEY columns (pushed to the parquet scan), optional
-        ``group_by`` re-grouping to a subset of the rollup keys —
-        states for the keys dropped from the grouping are combined."""
+    def _selected(self, spark: SparkSession, where,
+                  group_by: list[str] | None) -> tuple[DataFrame, list[str]]:
+        """The state rows ``where`` selects, and the checked grouping."""
         group_by = self.keys if group_by is None else list(group_by)
         unknown = set(group_by) - set(self.keys)
         if unknown:
@@ -110,16 +145,29 @@ class SketchRollup:
         df = self.states(spark)
         if where is not None:
             df = df.where(where)
-        return self._merge(df, group_by)
+        return df, group_by
+
+    def query(self, spark: SparkSession, where=None,
+              group_by: list[str] | None = None) -> DataFrame:
+        """Merged states for a subset: optional ``where`` predicate over
+        the KEY columns (pushed to the parquet scan), optional
+        ``group_by`` re-grouping to a subset of the rollup keys —
+        states for the keys dropped from the grouping are combined."""
+        return self._merge(*self._selected(spark, where, group_by))
 
     def estimate(self, spark: SparkSession, where=None,
                  group_by: list[str] | None = None) -> DataFrame:
         """Measure estimates for a subset — the user-facing answer table.
+        The merge fold emits the estimate of each measure whose estimator
+        is a finisher; other estimators run over the merged state column.
         (`Measure.preserve_type` is not applied here: a rollup has no
         raw input column to infer from; pass an explicit `output_type`
         estimator if integral output is required.)"""
-        group_by = self.keys if group_by is None else list(group_by)
-        merged = self.query(spark, where=where, group_by=group_by)
-        outs = [m.estimator(merged[f"{m.name}__state"]).alias(m.name)
-                for m in self.measures]
+        df, group_by = self._selected(spark, where, group_by)
+        fin = [_finisher(m) for m in self.measures]
+        merged = self._merge(df, group_by, fin,
+                             names=[m.name for m in self.measures])
+        outs = [merged[m.name] if f is not None
+                else m.estimator(merged[m.name]).alias(m.name)
+                for m, f in zip(self.measures, fin)]
         return merged.select(*group_by, *outs)

@@ -20,7 +20,12 @@ This module reproduces the reference's physics explicitly:
                         (``udfs.combine_fold``) merges each key's run of
                         states — the physical contract of Spark's
                         ``AggregateInPandasExec``, without its Python call
-                        per group and state column.
+                        per group and state column;
+  estimate              the same fold, for each column given a finisher
+                        (``finish=``), emits the estimate of the merged
+                        sketch instead of its state, as the reference's
+                        ``eval`` estimates from the final buffer — no
+                        second Python pass decodes the state again.
 
 The output of ``sketch_accumulate`` is a re-aggregable summary table exactly
 like the reference's accumulate results (``README.md:68-100``): filter it,
@@ -44,7 +49,7 @@ from pyspark.sql.types import (
 )
 
 from ..families import _family, _iter_groups
-from ..functions.udfs import combine_fold
+from ..functions.udfs import Finisher, combine_fold
 from ..sketches import ITEM_DOUBLE, ITEM_LONG, ITEM_STR
 
 
@@ -66,7 +71,10 @@ def sketch_partial(df: DataFrame, keys: list[str], col: str,
 class Measure:
     """One sketched aggregate in a :func:`sketch_grouped_agg` call: which
     column to sketch, with which family/params, and how to turn the merged
-    state into the output column."""
+    state into the output column. An ``estimator`` that is a
+    :class:`~..functions.udfs.Finisher` (what every ``*_measure`` builder
+    sets) runs inside the merge fold; any other Column function runs on
+    the merged state column after it."""
 
     __slots__ = ("name", "col", "family", "params", "estimator",
                  "preserve_type", "multi")
@@ -89,9 +97,8 @@ def percentile_measure(name: str, col: str, percentage,
     incl. Decimal (``quantileSketches.scala:196-211``; type matrix test
     ``ApproximateQuerySuite.scala:52-65``). The estimate-from-state path
     stays double, like the reference's (``:601-605``)."""
-    from ..functions.quantiles import approx_percentile_estimate
-    m = Measure(name, col, "quantile",
-                lambda c: approx_percentile_estimate(c, percentage),
+    from ..functions.quantiles import _percentile_finisher
+    m = Measure(name, col, "quantile", _percentile_finisher(percentage),
                 impl=impl, k=k)
     m.preserve_type = preserve_type
     m.multi = isinstance(percentage, (list, tuple))
@@ -100,10 +107,9 @@ def percentile_measure(name: str, col: str, percentage,
 
 def freqitems_measure(name: str, col: str, item_type: str = "string",
                       max_map_size: int | None = None) -> Measure:
-    from ..functions.freqitems import approx_freqitems_estimate
+    from ..functions.freqitems import _freqitems_finisher
     it = ITEM_LONG if item_type in ("long", "int") else ITEM_STR
-    return Measure(name, col, "freq",
-                   lambda c: approx_freqitems_estimate(c, item_type=item_type),
+    return Measure(name, col, "freq", _freqitems_finisher(item_type),
                    item_type=it, max_map_size=max_map_size)
 
 
@@ -115,12 +121,10 @@ def distinct_measure(name: str, col: str, k: int | None = None,
     a bounded 2^lgk-byte state; the right choice when per-group NDV is
     huge and summary-table size matters (this is what serves the CPC name,
     at ``conf.distinct_cpc_lgk()``)."""
-    from ..functions.distinctcnt import approx_count_distinct_estimate
+    from ..functions.distinctcnt import _count_distinct_finisher
     if impl == "hll":
-        return Measure(name, col, "hll",
-                       lambda c: approx_count_distinct_estimate(c), lgk=lgk)
-    return Measure(name, col, "theta",
-                   lambda c: approx_count_distinct_estimate(c), k=k)
+        return Measure(name, col, "hll", _count_distinct_finisher(), lgk=lgk)
+    return Measure(name, col, "theta", _count_distinct_finisher(), k=k)
 
 
 def sample_measure(name: str, col: str, k: int | None = None,
@@ -128,11 +132,10 @@ def sample_measure(name: str, col: str, k: int | None = None,
     """Uniform per-group reservoir sample (``sketches/reservoir.py``).
     Exact (returns the complete sorted multiset) while group size <= k;
     beyond that, a uniform k-sample. Output is a sorted array column."""
-    from ..functions.sampling import approx_sample_estimate
+    from ..functions.sampling import _sample_finisher
     it = (ITEM_LONG if item_type in ("long", "int")
           else ITEM_STR if item_type in ("str", "string") else ITEM_DOUBLE)
-    return Measure(name, col, "reservoir",
-                   lambda c: approx_sample_estimate(c, item_type=item_type),
+    return Measure(name, col, "reservoir", _sample_finisher(item_type),
                    k=k, item_type=it)
 
 
@@ -154,12 +157,11 @@ def weighted_sample_measure(name: str, col: str, weight_col: str,
                             item_type: str = "double") -> Measure:
     """Weight-proportional per-group sample (A-ES weighted reservoir;
     deterministic top-k merge). Zero/negative/null weights excluded."""
-    from ..functions.sampling import approx_sample_estimate
+    from ..functions.sampling import _sample_finisher
     it = (ITEM_LONG if item_type in ("long", "int")
           else ITEM_STR if item_type in ("str", "string") else ITEM_DOUBLE)
     return Measure(name, (col, weight_col), "wreservoir",
-                   lambda c: approx_sample_estimate(c, item_type=item_type),
-                   k=k, item_type=it)
+                   _sample_finisher(item_type), k=k, item_type=it)
 
 
 def sketch_partial_multi(df: DataFrame, keys: list[str],
@@ -180,7 +182,7 @@ def sketch_partial_multi(df: DataFrame, keys: list[str],
     key; the cost is only extra (still state-sized, not raw-sized) shuffle
     rows on pathological key distributions."""
     fams = [(m, _family(m.family, **m.params)) for m in measures]
-    src = df.select(*_input_columns(keys, measures))
+    src = df.select([df[c] for c in _input_columns(keys, measures)])
     fields = [src.schema[k] for k in keys]
     state_cols = [f"{m.name}__state" for m in measures]
     out_schema = StructType(fields + [StructField(c, BinaryType())
@@ -229,26 +231,36 @@ def sketch_grouped_agg(df: DataFrame, keys: list[str],
                        max_groups: int = 100_000) -> DataFrame:
     """Grouped sketch aggregation with the scale-correct physics: map-side
     partial sketches (``mapInPandas``), a state-only shuffle, reduce-side
-    merge — :func:`sketch_accumulate_multi` — then estimate. This is what
-    a bare ``GROUPED_AGG`` pandas UDF cannot do — it would shuffle every
-    raw row to the aggregating task (the reference gets partial/final for
-    free from ``TypedImperativeAggregate``,
-    ``quantileSketches.scala:234-273``).
+    merge — :func:`sketch_accumulate_multi`'s two phases — then estimate.
+    This is what a bare ``GROUPED_AGG`` pandas UDF cannot do — it would
+    shuffle every raw row to the aggregating task (the reference gets
+    partial/final for free from ``TypedImperativeAggregate``,
+    ``quantileSketches.scala:234-273``, whose ``eval`` estimates straight
+    from the merged buffer). Like ``eval``, the merge fold emits the
+    estimate of every measure whose estimator is a
+    :class:`~..functions.udfs.Finisher`; any other estimator, and the
+    ``preserve_type`` cast, run as Columns over the fold's output.
 
     ``max_groups`` bounds the per-executor live-sketch dict for
     high-cardinality keys (see :func:`sketch_partial_multi`); flushing
     never changes results, only the count of (still state-sized) shuffle
     rows."""
     ms = list(measures)
-    merged = sketch_accumulate_multi(df, keys, ms, max_groups=max_groups)
+    partial = sketch_partial_multi(df, keys, ms, max_groups=max_groups)
+    merged = sketch_merge(partial, keys, [f"{m.name}__state" for m in ms],
+                          names=[m.name for m in ms],
+                          finish=[_finisher(m) for m in ms])
     outs = []
     for m in ms:
-        out = m.estimator(F.col(m.name))
+        out = col = merged[m.name]
+        if _finisher(m) is None:
+            out = m.estimator(col)
         if m.preserve_type:
             from ..functions.quantiles import preserve_output_type
             dt = df.schema[m.col].dataType
             out = preserve_output_type(out, dt.simpleString(), m.multi)
-        outs.append(out.alias(m.name))
+        # the fold's own output is already named m.name
+        outs.append(out if out is col else out.alias(m.name))
     return merged.select(*keys, *outs)
 
 
@@ -256,20 +268,33 @@ def _run_key(df: DataFrame, key: str):
     """The partition and sort expression of one group key. A float key
     puts NaN with null: Arrow->pandas renders both as NaN, so the fold
     must meet them in one run to emit one group."""
-    c = F.col(key)
+    c = df[key]
     if isinstance(df.schema[key].dataType, (FloatType, DoubleType)):
         return F.when(~F.isnan(c), c)
     return c
 
 
+def _finisher(m: Measure) -> Finisher | None:
+    """The measure's estimator when the merge fold can run it."""
+    return m.estimator if isinstance(m.estimator, Finisher) else None
+
+
 def sketch_merge(df: DataFrame, keys: list[str],
                  state_col: str | list[str] = "state",
-                 names: list[str] | None = None) -> DataFrame:
+                 names: list[str] | None = None,
+                 finish: list[Finisher | None] | None = None) -> DataFrame:
     """Phase 2: merge partial states per group (family-agnostic), one row
     per group. ``state_col`` is one state column or a list of them;
     ``names`` renames them in the output. The state rows are
     hash-partitioned and sorted by ``keys`` and then folded by one
     ``mapInPandas`` pass per partition.
+
+    ``finish`` has one entry per state column. None (the default for
+    every column) emits the merged state. A
+    :class:`~..functions.udfs.Finisher` emits its estimate straight from
+    the merged sketch, the value and type ``finisher(state column)``
+    gives on the merged state, so that state is neither serialized nor
+    decoded again.
 
     With no keys the rows go to one partition together with one all-null
     row, so the result is always one row, null states for no input (the
@@ -277,9 +302,20 @@ def sketch_merge(df: DataFrame, keys: list[str],
     otherwise leave no partition to run the fold on)."""
     cols = [state_col] if isinstance(state_col, str) else list(state_col)
     names = cols if names is None else list(names)
-    src = df.select(*keys, *(F.col(c).alias(n) for c, n in zip(cols, names)))
+    finish = [None] * len(cols) if finish is None else list(finish)
+    if len(finish) != len(cols):
+        raise ValueError(f"finish has {len(finish)} entries for "
+                         f"{len(cols)} state columns")
+    bound = [None if f is None else f.bind() for f in finish]
+    # bound columns and one positional rename: a Column built with
+    # F.col or renamed with alias costs a dozen py4j round trips to the JVM
+    src = df.select([df[c] for c in (*keys, *cols)])
+    if names != cols:
+        src = src.toDF(*keys, *names)
     schema = StructType([src.schema[k] for k in keys]
-                        + [StructField(n, BinaryType()) for n in names])
+                        + [StructField(n, BinaryType() if b is None
+                                       else b.return_type)
+                           for n, b in zip(names, bound)])
     if keys:
         order = [_run_key(src, k) for k in keys]
         src = src.repartition(*order).sortWithinPartitions(*order)
@@ -287,7 +323,7 @@ def sketch_merge(df: DataFrame, keys: list[str],
         nulls = df.sparkSession.range(1).select(
             *(F.lit(None).cast(BinaryType()).alias(n) for n in names))
         src = src.union(nulls).repartition(1)
-    return src.mapInPandas(combine_fold(keys, names), schema)
+    return src.mapInPandas(combine_fold(keys, names, bound), schema)
 
 
 def sketch_accumulate(df: DataFrame, keys: list[str], col: str,

@@ -81,9 +81,11 @@ class KllSketch:
         self._levels: list[np.ndarray] = [np.empty(0, self.dtype)]
         self._buf: list[np.ndarray] = []
         self._buf_len = 0
-        # Deterministic seed: compaction coin flips are reproducible for a
-        # given input order.  (Exact-regime queries never compact at all.)
-        self._rng = np.random.default_rng(0xD5C0FFEE)
+        # Compaction coin flips come from a generator with a fixed seed,
+        # so they are reproducible for a given input order. It is built
+        # on the first flip (:meth:`_coin`): building one costs more than
+        # decoding a small state, and exact-regime sketches never flip.
+        self._rng = None
 
     # ------------------------------------------------------------------ udpate
 
@@ -400,8 +402,14 @@ class KllSketch:
         leftover item stays at this level instead)."""
         odd = arr.size % 2
         body = arr[odd:]
-        offset = int(self._rng.integers(0, 2))
+        offset = self._coin()
         return arr[:odd].copy(), body[offset::2]
+
+    def _coin(self) -> int:
+        """One compaction coin flip (0 or 1) from this sketch's generator."""
+        if self._rng is None:
+            self._rng = np.random.default_rng(0xD5C0FFEE)
+        return int(self._rng.integers(0, 2))
 
 
 # NOTE: rank/cdf extend the reference surface (it exposes quantile + pmf

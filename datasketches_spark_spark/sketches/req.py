@@ -65,6 +65,6 @@ class ReqSketch(KllSketch):
         half = arr.size // 2
         odd = half % 2
         low = arr[odd:half]
-        offset = int(self._rng.integers(0, 2))
+        offset = self._coin()
         kept = np.concatenate([arr[:odd], arr[half:]])
         return kept, low[offset::2].copy()

@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 
 from . import conf
 from .families import _ACC_FAMILY, _family, _resolve_acc_family
-from .functions.udfs import validate_num_splits, validate_percentage
+from .functions.udfs import validate_percentage
 from .operators.sketch_agg import (
     Measure,
     distinct_measure,
@@ -495,8 +495,9 @@ def _classify_item(item: _Item, spark: SparkSession, seq: int) -> None:
 
 
 def _nested_estimator(fname: str, extra: list[str]):
-    """Column-builder for estimate function ``fname`` applied to a merged
-    state, with SQL-literal extra args. Returns None when the arg shape is
+    """The finisher of estimate function ``fname`` applied to a merged
+    state, with SQL-literal extra args: the merge fold emits its estimate
+    (``sketch_merge(finish=)``). Returns None when the arg shape is
     outside the rewrite (the caller falls through to the ordinary
     unsupported-nesting path). Invalid literals raise eagerly (ValueError),
     matching direct-aggregate validation timing."""
@@ -504,6 +505,9 @@ def _nested_estimator(fname: str, extra: list[str]):
     from .functions import freqitems as _fi
     from .functions import quantiles as _qt
     from .functions import sampling as _sp
+    from .functions import tuplesketch as _tp
+    from .functions.udfs import (Finisher, bloom_estimate_udf, bloom_fpp_udf,
+                                 tuple_est_udf)
 
     if fname in ("approx_percentile_estimate",
                  "approx_percentile_estimate_array"):
@@ -525,21 +529,19 @@ def _nested_estimator(fname: str, extra: list[str]):
             validate_percentage(pct)
         except ValueError as e:
             raise ValueError(f"{fname}: {e}") from None
-        return lambda c: _qt.approx_percentile_estimate(c, pct)
+        return _qt._percentile_finisher(pct)
     if fname == "approx_pmf_estimate":
         if len(extra) > 1:
             return None
         ns = int(_parse_literal_number(extra[0])) if extra else 9
         try:
-            validate_num_splits(ns)
+            return _qt._pmf_finisher(ns)
         except ValueError as e:
             raise ValueError(f"{fname}: {e}") from None
-        return lambda c: _qt.approx_pmf_estimate(c, ns)
     if fname == "approx_rank_estimate":
         if len(extra) != 1:
             return None
-        value = _parse_literal_number(extra[0])
-        return lambda c: _qt.approx_rank_estimate(c, value)
+        return _qt._rank_finisher(_parse_literal_number(extra[0]))
     if fname == "approx_cdf_estimate":
         if len(extra) != 1:
             return None
@@ -547,41 +549,38 @@ def _nested_estimator(fname: str, extra: list[str]):
         if not call or call[0] != "array":
             return None
         pts = [_parse_literal_number(a) for a in _split_top(call[1])]
-        return lambda c: _qt.approx_cdf_estimate(c, pts)
+        return _qt._cdf_finisher(pts)
     if fname in ("approx_freqitems_estimate", "approx_freqitems_estimate_long"):
         if extra:
             return None
         it = "long" if fname.endswith("_long") else "string"
-        return lambda c: _fi.approx_freqitems_estimate(c, item_type=it)
+        return _fi._freqitems_finisher(it)
     if fname == "approx_count_distinct_estimate":
         if extra:
             return None
-        return lambda c: _dc.approx_count_distinct_estimate(c)
+        return _dc._count_distinct_finisher()
     if fname in ("approx_sample_estimate", "approx_sample_estimate_long",
                  "approx_sample_estimate_string"):
         if extra:
             return None
         it = ("long" if fname.endswith("_long")
               else "string" if fname.endswith("_string") else "double")
-        return lambda c: _sp.approx_sample_estimate(c, item_type=it)
+        return _sp._sample_finisher(it)
     if fname == "approx_tuple_estimate":
         if extra:
             return None
-        from .functions import tuplesketch as _tp
-        return lambda c: _tp.approx_tuple_estimate(c)
+        return Finisher(tuple_est_udf)
     if fname == "approx_tuple_segment_estimate":
         if len(extra) > 1:
             return None
         mc = int(_parse_literal_number(extra[0])) if extra else 1
-        from .functions import tuplesketch as _tp
-        return lambda c: _tp.approx_tuple_segment_estimate(c, mc)
+        return _tp._tuple_segment_finisher(mc)
     if fname in ("approx_membership_estimate", "approx_membership_fpp"):
         if extra:
             return None
-        from .functions import membership as _mb
-        return (lambda c: _mb.approx_membership_estimate(c)) \
-            if fname == "approx_membership_estimate" \
-            else (lambda c: _mb.approx_membership_fpp(c))
+        return Finisher(bloom_estimate_udf
+                        if fname == "approx_membership_estimate"
+                        else bloom_fpp_udf)
     return None
 
 
@@ -1145,18 +1144,22 @@ def _rewrite_block(spark: SparkSession, query: str) -> DataFrame:
             return _as_ident(it.text) or it.out_name
         return it.out_name
 
+    def _named(src: DataFrame, col: str, name: str):
+        # an alias costs a dozen py4j round trips to the JVM: skip no-ops
+        return src[col] if col == name else src[col].alias(name)
+
     out_cols = []
     for it in items:
         if it.kind == "const":
             out_cols.append(F.expr(it.text).alias(it.out_name))
         elif it.kind == "key":
-            out_cols.append(
-                left[resolved_groups[it.gk_index]].alias(_final_name(it)))
+            out_cols.append(_named(left, resolved_groups[it.gk_index],
+                                   _final_name(it)))
         elif it.kind == "sketch":
-            out_cols.append(left[it.alias].alias(it.out_name))
+            out_cols.append(_named(left, it.alias, it.out_name))
         else:
-            src = exact if exact is not None else left
-            out_cols.append(src[it.alias].alias(it.out_name))
+            out_cols.append(_named(exact if exact is not None else left,
+                                   it.alias, it.out_name))
     result = joined.select(*out_cols)
 
     # HAVING / ORDER BY may reference an aggregate by its expression text

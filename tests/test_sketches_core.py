@@ -125,6 +125,57 @@ class TestKll:
         q = sk.quantile(0.5)
         assert q == pytest.approx(np.float32(2.2), abs=0)
 
+    # sha256[:16] of the (update, merge, deserialize-then-merge) states of
+    # _compaction_chain, pinned before the compaction generator was made
+    # lazy: the coin flips, and so the states, must not change.
+    _GOLDEN = {
+        ("KllSketch", "float32"): ["3ed886871de42c99", "5ba23a23fede701a",
+                                   "d404d5c5f6656acc"],
+        ("KllSketch", "float64"): ["0bb96d434e977f12", "55e228c878ccab82",
+                                   "f354013f55fdb682"],
+        ("ReqSketch", "float32"): ["3a19c18ec0527f23", "b01426c1a76cfb40",
+                                   "97712938161ac3e1"],
+    }
+
+    @staticmethod
+    def _compaction_chain(cls, k, dtype):
+        import hashlib
+        rng = np.random.default_rng(7)
+        a, b = cls(k=k, dtype=dtype), cls(k=k, dtype=dtype)
+        a.update_batch(rng.normal(size=3000))      # update -> compact
+        b.update_batch(rng.exponential(size=2000))
+        sa = a.serialize()
+        a.merge(b)                                  # merge
+        sm = a.serialize()
+        c = deserialize_any(sa)                     # deserialize-then-merge
+        c.merge(deserialize_any(b.serialize()))
+        c.merge(deserialize_any(sm))
+        return [hashlib.sha256(x).hexdigest()[:16]
+                for x in (sa, sm, c.serialize())]
+
+    @pytest.mark.parametrize("impl,k,dtype", [
+        ("KllSketch", 200, np.float32), ("KllSketch", 200, np.float64),
+        ("ReqSketch", 12, np.float32)])
+    def test_compaction_states_match_golden(self, impl, k, dtype):
+        from datasketches_spark_spark.sketches.req import ReqSketch
+        cls = {"KllSketch": KllSketch, "ReqSketch": ReqSketch}[impl]
+        got = self._compaction_chain(cls, k, dtype)
+        assert got == self._GOLDEN[(impl, np.dtype(dtype).name)]
+
+    def test_deserialize_without_compaction_builds_no_generator(
+            self, monkeypatch):
+        sk = KllSketch(k=200)
+        sk.update_batch(np.arange(50, dtype=np.float64))
+        blob = sk.serialize()
+        built = []
+        real = np.random.default_rng
+        monkeypatch.setattr(np.random, "default_rng",
+                            lambda *a: built.append(a) or real(*a))
+        other = deserialize_any(blob)
+        other.merge(deserialize_any(blob))
+        assert other.quantile(0.5) == 24.0
+        assert built == []
+
     def test_quantile_disc_rule_matches_duckdb(self):
         import duckdb
         rng = np.random.default_rng(4)
