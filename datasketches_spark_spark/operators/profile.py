@@ -84,7 +84,8 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
     rows: list[tuple] = [("_table", "rows", float(b["_rows"]), None)]
     for c in columns:
         rows.append((c, "nulls", float(b[f"nulls__{c}"]), None))
-        rows.append((c, "ndv", float(s[f"ndv__{c}"]), None))
+        # an all-null column has a null sketch; count(distinct) says 0
+        rows.append((c, "ndv", float(s[f"ndv__{c}"] or 0), None))
     for c in numeric:
         mn, mx = b[f"min__{c}"], b[f"max__{c}"]
         rows.append((c, "min", None if mn is None else float(mn), None))

@@ -16,7 +16,10 @@ monoids, so
 Every merge here — build, refresh, compact and query — is
 :func:`~.sketch_agg.sketch_merge`: the state rows are hash-partitioned and
 sorted by the (re-)grouping keys, then one ``mapInPandas`` fold per
-partition merges each key's run of states. For :meth:`SketchRollup.estimate`
+partition merges each key's run of states. A selection no larger than one
+AQE partition (``spark.sql.adaptive.coalescePartitions.minPartitionSize``)
+is folded in one task with no exchange, so a query over a small rollup
+runs one job. For :meth:`SketchRollup.estimate`
 that same fold also emits each measure's estimate from the merged sketch
 when the measure's estimator is a finisher (every ``*_measure`` builder's
 is); only other Column estimators run after it, over merged states.
@@ -37,38 +40,14 @@ with the summary table made durable and maintainable.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
+from ..sources.tables import _footer_schema
 from .sketch_agg import Measure, _finisher, sketch_merge, sketch_partial_multi
-
-# The footer key under which Spark's parquet writer stores the row schema.
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _footer_schema(path: str) -> StructType | None:
-    """The Spark schema stored in the footer of the first data file under
-    ``path`` that has one, or None (no such file, or not a directory)."""
-    import pyarrow.parquet as pq
-    try:
-        names = sorted(n for n in os.listdir(path)
-                       if not n.startswith(("_", ".")))
-    except OSError:
-        return None
-    for n in names:
-        try:
-            meta = pq.read_metadata(os.path.join(path, n)).metadata or {}
-        except Exception:  # not a parquet file: let Spark's read decide
-            continue
-        if _SPARK_SCHEMA_KEY in meta:
-            return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
-    return None
-
 
 class SketchRollup:
     """A materialized sketch rollup table at ``path``.

@@ -20,7 +20,10 @@ This module reproduces the reference's physics explicitly:
                         (``udfs.combine_fold``) merges each key's run of
                         states — the physical contract of Spark's
                         ``AggregateInPandasExec``, without its Python call
-                        per group and state column;
+                        per group and state column. An input no larger
+                        than one AQE partition skips the shuffle: its rows
+                        are coalesced into one task and sorted there,
+                        since AQE would have given them one reduce task;
   estimate              the same fold, for each column given a finisher
                         (``finish=``), emits the estimate of the merged
                         sketch instead of its state, as the reference's
@@ -175,6 +178,11 @@ def sketch_partial_multi(df: DataFrame, keys: list[str],
     per measure this scans the source once instead of M times and
     shuffles one state row per group instead of M.
 
+    A (group, measure) that no valid row reaches (every input null, or
+    dropped by the family's ``prep``) emits a null state, so its estimate
+    is null: the empty-aggregation-is-null rule of ``_Family.sketch_of``
+    and of the reference (``quantileSketches.scala:286-287``).
+
     ``max_groups`` bounds executor memory for high-cardinality group keys
     (e.g. ``user_id`` at 100 TB): when a partition has accumulated that many
     live groups, their states are flushed downstream and the dict resets.
@@ -192,7 +200,8 @@ def sketch_partial_multi(df: DataFrame, keys: list[str],
         rows = {k: [originals[hk][i] for hk in groups]
                 for i, k in enumerate(keys)}
         for j, c in enumerate(state_cols):
-            rows[c] = [sks[j].serialize() for sks in groups.values()]
+            rows[c] = [None if sks[j] is None else sks[j].serialize()
+                       for sks in groups.values()]
         return pd.DataFrame(rows)
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -201,22 +210,22 @@ def sketch_partial_multi(df: DataFrame, keys: list[str],
         for pdf in batches:
             if pdf.empty:
                 continue
-            if not keys:
-                sks = groups.get(())
-                if sks is None:
-                    sks = groups[()] = [fam.make() for _, fam in fams]
-                    originals[()] = ()
-                for j, (m, fam) in enumerate(fams):
-                    fam.update_series(sks[j], _measure_input(pdf, m))
-                continue
             ctxs = [fam.prep(_measure_input(pdf, m)) for m, fam in fams]
-            for hk, kv, idx in _iter_groups(pdf, keys):
+            for hk, kv, idx in (_iter_groups(pdf, keys) if keys
+                                else [((), (), None)]):
                 sks = groups.get(hk)
                 if sks is None:
-                    sks = groups[hk] = [fam.make() for _, fam in fams]
+                    sks = groups[hk] = [None] * len(fams)
                     originals[hk] = kv
                 for j, (_, fam) in enumerate(fams):
-                    fam.update(sks[j], ctxs[j], idx)
+                    ctx = ctxs[j]
+                    if sks[j] is None:
+                        # no valid row yet: the state stays null
+                        valid = ctx[-1] if idx is None else ctx[-1][idx]
+                        if not valid.any():
+                            continue
+                        sks[j] = fam.make()
+                    fam.update(sks[j], ctx, idx)
             if len(groups) >= max_groups:
                 yield flush(groups, originals)
                 groups, originals = {}, {}
@@ -287,7 +296,11 @@ def sketch_merge(df: DataFrame, keys: list[str],
     per group. ``state_col`` is one state column or a list of them;
     ``names`` renames them in the output. The state rows are
     hash-partitioned and sorted by ``keys`` and then folded by one
-    ``mapInPandas`` pass per partition.
+    ``mapInPandas`` pass per partition. When the optimizer's size
+    estimate of the rows is at most
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize``, they are
+    coalesced into one partition and sorted there instead: the same fold
+    in one task, with no exchange and so one job fewer.
 
     ``finish`` has one entry per state column. None (the default for
     every column) emits the merged state. A
@@ -296,10 +309,11 @@ def sketch_merge(df: DataFrame, keys: list[str],
     gives on the merged state, so that state is neither serialized nor
     decoded again.
 
-    With no keys the rows go to one partition together with one all-null
-    row, so the result is always one row, null states for no input (the
-    global-aggregate contract; an input the optimizer proves empty would
-    otherwise leave no partition to run the fold on)."""
+    With no keys the rows go to one partition (by exchange or coalesce,
+    under the same rule) together with one all-null row, so the result
+    is always one row, null states for no input (the global-aggregate
+    contract; an input the optimizer proves empty would otherwise leave
+    no partition to run the fold on)."""
     cols = [state_col] if isinstance(state_col, str) else list(state_col)
     names = cols if names is None else list(names)
     finish = [None] * len(cols) if finish is None else list(finish)
@@ -316,14 +330,34 @@ def sketch_merge(df: DataFrame, keys: list[str],
                         + [StructField(n, BinaryType() if b is None
                                        else b.return_type)
                            for n, b in zip(names, bound)])
+    one_task = _fits_one_task(src)
     if keys:
         order = [_run_key(src, k) for k in keys]
-        src = src.repartition(*order).sortWithinPartitions(*order)
+        src = (src.coalesce(1) if one_task else src.repartition(*order)) \
+            .sortWithinPartitions(*order)
     else:
         nulls = df.sparkSession.range(1).select(
             *(F.lit(None).cast(BinaryType()).alias(n) for n in names))
-        src = src.union(nulls).repartition(1)
+        src = src.union(nulls)
+        src = src.coalesce(1) if one_task else src.repartition(1)
     return src.mapInPandas(combine_fold(keys, names, bound), schema)
+
+
+# AQE's floor on the size of a coalesced shuffle partition
+_MIN_PARTITION_SIZE = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+
+def _fits_one_task(df: DataFrame) -> bool:
+    """True when the optimizer's size estimate of ``df`` is at most
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize``. AQE sizes
+    a coalesced partition at ``max(total / parallelism, that floor)``, so
+    below it the whole shuffle would land in one reduce task anyway: an
+    exchange would add a stage and a job and buy no parallelism."""
+    spark = df.sparkSession
+    limit = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(spark.conf.get(_MIN_PARTITION_SIZE))
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return size <= limit
 
 
 def sketch_accumulate(df: DataFrame, keys: list[str], col: str,

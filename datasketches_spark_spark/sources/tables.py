@@ -13,8 +13,12 @@ division would lose microsecond precision: nanos-since-epoch exceeds
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region", "nation", "customer", "supplier", "part",
@@ -29,6 +33,9 @@ _NANOS_TS_COLS = {
 }
 
 NANOS_CONF = {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+
+# The footer key under which Spark's parquet writer stores the row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def session_builder(master: str = "local[*]", app: str = "datasketches_spark_spark",
@@ -88,6 +95,27 @@ def arrow_local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
         {n: [r[i] for r in rows] for i, n in enumerate(names)},
         columns=names)
     return spark.createDataFrame(pdf, schema=schema)
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema stored in the footer of the first data file under
+    ``path`` that has one, or None (no such file, or not a directory).
+    Reading a directory with it, ``spark.read.schema(...).parquet(path)``,
+    skips the job ``spark.read.parquet`` runs to infer the schema."""
+    import pyarrow.parquet as pq
+    try:
+        names = sorted(n for n in os.listdir(path)
+                       if not n.startswith(("_", ".")))
+    except OSError:
+        return None
+    for n in names:
+        try:
+            meta = pq.read_metadata(os.path.join(path, n)).metadata or {}
+        except Exception:  # not a parquet file: let Spark's read decide
+            continue
+        if _SPARK_SCHEMA_KEY in meta:
+            return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return None
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -67,6 +67,7 @@ from .operators.sketch_agg import (
     percentile_measure,
     sketch_grouped_agg,
 )
+from .sources.tables import _footer_schema
 
 
 class _Unsupported(Exception):
@@ -990,18 +991,53 @@ def _extract_sketch_subqueries(spark: SparkSession, prefix: str, text: str,
     return "".join(out)
 
 
+_PARQUET_PREFIX = re.compile(r"(?<![\w.])parquet\s*\.\s*$", re.I)
+
+
+def _footer_relations(spark: SparkSession, q: str, views: list[str]) -> str:
+    """Replace each ``parquet.`<path>``` relation whose directory carries
+    Spark's footer schema with a uniquely-named temp view of
+    ``spark.read.schema(<footer schema>).parquet(<path>)`` (recorded in
+    ``views`` for cleanup), so planning the query runs no
+    schema-inference job. Any other path stays as written, with the
+    inference and errors of ``spark.sql``."""
+    import uuid
+    out, last, i, n = [], 0, 0, len(q)
+    while i < n:
+        if q[i] not in _QUOTES:
+            i += 1
+            continue
+        j = _skip_quoted(q, i)
+        head = _PARQUET_PREFIX.search(q, last, i) if q[i] == "`" else None
+        path = q[i + 1:j - 1].replace("``", "`")
+        schema = None if head is None else _footer_schema(path)
+        if schema is not None:
+            vname = f"__dss_parquet_{uuid.uuid4().hex[:8]}"
+            spark.read.schema(schema).parquet(path) \
+                .createOrReplaceTempView(vname)
+            views.append(vname)
+            out += [q[last:head.start()], vname]
+            last = j
+        i = j
+    return "".join(out) + q[last:]
+
+
 def _rewrite(spark: SparkSession, query: str) -> DataFrame:
-    """Full rewrite pipeline: CTE bodies and FROM-subqueries carrying
-    sketch aggregates are rewritten to two-phase plans and materialized as
-    uniquely-named temp views (dropped again before returning — analysis
-    inlines them); plain CTEs stay SQL text; the remainder (a SELECT block
-    or a UNION ALL chain) is rewritten per member."""
+    """Full rewrite pipeline: ``parquet.`<path>``` relations read their
+    footer schema (:func:`_footer_relations`); CTE bodies and
+    FROM-subqueries carrying sketch aggregates are rewritten to two-phase
+    plans and materialized as uniquely-named temp views (dropped again
+    before returning — analysis inlines them); plain CTEs stay SQL text;
+    the remainder (a SELECT block or a UNION ALL chain) is rewritten per
+    member."""
     q = _strip_comments(query).strip().rstrip(";").strip()
-    ctes, rest = _parse_with(q)
-    plain: list[tuple[str, str]] = []
-    subs: dict[str, str] = {}
     views: list[str] = []
     try:
+        q = _footer_relations(spark, q, views)
+        relations = len(views)
+        ctes, rest = _parse_with(q)
+        plain: list[tuple[str, str]] = []
+        subs: dict[str, str] = {}
         for name, body, cols in ctes:
             body = _sub_cte_refs(body, subs)
             body = _extract_sketch_subqueries(
@@ -1017,7 +1053,7 @@ def _rewrite(spark: SparkSession, query: str) -> DataFrame:
         rest = _extract_sketch_subqueries(spark, prefix, rest, views)
         if _has_sketch(rest):
             result = _rewrite_union(spark, prefix, rest)
-        elif views:
+        elif len(views) > relations:
             # the sketch work lives entirely inside CTEs/subqueries; the
             # remainder is ordinary SQL over their materialized views
             result = spark.sql(prefix + rest)

@@ -1,3 +1,4 @@
+import contextlib
 import os
 
 import pytest
@@ -42,3 +43,52 @@ def sf_dir():
 def tables(spark, sf_dir):
     from datasketches_spark_spark.sources import load_tables
     return load_tables(spark, sf_dir)
+
+
+# ``sketch_merge`` folds in one task, with no exchange, when its input's
+# size estimate is at most this conf; these values force each plan.
+MIN_PARTITION_SIZE = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+MERGE_PLAN_CONF = {"exchange": "1b", "single_task": f"{2 ** 63 - 1}b"}
+
+
+@pytest.fixture
+def merge_plan(spark):
+    """``with merge_plan(plan):`` builds every ``sketch_merge`` in the
+    block with ``plan`` ("exchange" or "single_task"); the conf is
+    restored after it."""
+    @contextlib.contextmanager
+    def force(plan: str):
+        old = spark.conf.get(MIN_PARTITION_SIZE)
+        spark.conf.set(MIN_PARTITION_SIZE, MERGE_PLAN_CONF[plan])
+        try:
+            yield
+        finally:
+            spark.conf.set(MIN_PARTITION_SIZE, old)
+    return force
+
+
+@pytest.fixture
+def exchange_merge(merge_plan):
+    """Force the hash-partitioned merge plan, for tests that pin its
+    exchange on inputs small enough to take the single-task plan."""
+    with merge_plan("exchange"):
+        yield
+
+
+@pytest.fixture
+def jobs_during(spark):
+    """``jobs_during(fn)`` runs ``fn`` and returns ``(its result, the ids
+    of the Spark jobs it ran)``, counted through a job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "jobs-during"
+
+    def run(fn):
+        sc.setJobGroup(group, group)
+        try:
+            before = set(tracker.getJobIdsForGroup(group))
+            out = fn()
+            return out, set(tracker.getJobIdsForGroup(group)) - before
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    return run

@@ -5,7 +5,10 @@ new family row is covered with no new test code:
 
 * the registered GROUPED_AGG UDF, ``dss.sql``'s two-phase rewrite and
   ``sketch_accumulate`` build byte-identical states (one row path);
-* an all-null group accumulates to a null state;
+* an all-null group accumulates to a null state, on the registered UDF,
+  ``dss.sql``, ``sketch_accumulate`` and ``sketch_grouped_agg`` alike,
+  and every direct aggregate ``dss.sql`` re-plans gives the registered
+  UDF's null for it;
 * ``install()`` registers no accumulate name outside the table.
 
 Plus the state-reader contract over everything ``install()`` registers:
@@ -26,8 +29,12 @@ import datasketches_spark_spark as dss
 from datasketches_spark_spark import functions as dsf
 from datasketches_spark_spark.families import (
     _ACC_FAMILY, _family, _resolve_acc_family)
-from datasketches_spark_spark.operators import sketch_accumulate
-from datasketches_spark_spark.sql import _COMBINE_FNS, SketchSqlFallbackWarning
+from datasketches_spark_spark.operators import (
+    distinct_measure, freqitems_measure, percentile_measure, sketch_accumulate,
+    sketch_grouped_agg, state_measure)
+from datasketches_spark_spark.sql import (
+    _COMBINE_FNS, _DISTINCT_DIRECT, _FREQ_DIRECT, _QUANTILE_DIRECT,
+    SketchSqlFallbackWarning)
 
 # Small groups inside every family's exact regime; the null lands in the
 # same Arrow batch, so the bigint column reaches Python as float64.
@@ -94,6 +101,67 @@ def test_all_null_group_accumulates_to_null(spark, installed, name):
             else "CAST(NULL AS BIGINT)")
     (row,) = spark.sql(f"SELECT {name}({args}) AS s FROM range(3)").collect()
     assert row.s is None, name
+
+
+@pytest.fixture(scope="module")
+def null_group(spark, installed):
+    """``_ROWS`` plus group 2, whose every ``v`` is null."""
+    df = spark.createDataFrame(_ROWS + [(2, None), (2, None)],
+                               "g int, v long") \
+        .withColumn("w", (F.col("g") + 1.5).cast("double")).coalesce(1)
+    df.createOrReplaceTempView("t_family_null_group")
+    return df
+
+
+@pytest.mark.parametrize("name", sorted(_ACC_FAMILY))
+def test_all_null_group_state_is_null_on_every_path(spark, null_group,
+                                                    name):
+    family, params, cols = _call(name, spark)
+    args = ", ".join(cols) if isinstance(cols, tuple) else cols
+    query = (f"SELECT g, {name}({args}) AS state FROM t_family_null_group "
+             "GROUP BY g")
+    via_udf = _states(spark.sql(query).collect())
+    assert via_udf[2] is None, name
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", SketchSqlFallbackWarning)
+        assert _states(dss.sql(spark, query).collect()) == via_udf, name
+    assert _states(sketch_accumulate(
+        null_group, ["g"], cols, family, **params).collect()) == via_udf
+    assert _states(sketch_grouped_agg(
+        null_group, ["g"], state_measure("state", cols, family, **params))
+        .collect()) == via_udf
+
+
+def _direct_calls():
+    for n in sorted(_QUANTILE_DIRECT):
+        yield f"{n}(v, {'array(0.25, 0.75)' if n.endswith('_array') else 0.5})"
+    for n in sorted(_FREQ_DIRECT) + sorted(_DISTINCT_DIRECT):
+        yield f"{n}(v)"
+
+
+# the operator measure that each of these direct aggregates is
+_DIRECT_MEASURES = {
+    "approx_percentile_kll": lambda: percentile_measure("e", "v", 0.5,
+                                                        impl="KLL"),
+    "approx_freqitems": lambda: freqitems_measure("e", "v"),
+    "approx_count_distinct_theta": lambda: distinct_measure("e", "v"),
+}
+
+
+@pytest.mark.parametrize("call", list(_direct_calls()))
+def test_direct_aggregates_match_the_udf_on_an_all_null_group(
+        spark, null_group, call):
+    query = f"SELECT g, {call} AS e FROM t_family_null_group GROUP BY g"
+    want = {r.g: r.e for r in spark.sql(query).collect()}
+    assert want[2] is None, call
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", SketchSqlFallbackWarning)
+        got = {r.g: r.e for r in dss.sql(spark, query).collect()}
+    assert got == want, call
+    measure = _DIRECT_MEASURES.get(call.split("(")[0])
+    if measure is not None:
+        assert {r.g: r.e for r in sketch_grouped_agg(
+            null_group, ["g"], measure()).collect()} == want, call
 
 
 @pytest.mark.parametrize("item_type", ["", "_long", "_string"])

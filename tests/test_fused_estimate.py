@@ -362,23 +362,12 @@ def test_datasketches_hll_state_after_merge_raises_as_before(spark):
 
 # --------------------------------------------------------------- rollup reads
 
-def _jobs_during(spark, fn):
-    tracker = spark.sparkContext.statusTracker()
-    spark.sparkContext.setJobGroup("fused-estimate-read", "read")
-    try:
-        before = set(tracker.getJobIdsForGroup("fused-estimate-read"))
-        out = fn()
-        return out, set(tracker.getJobIdsForGroup(
-            "fused-estimate-read")) - before
-    finally:
-        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-
-
-def test_rollup_states_read_the_footer_schema(spark, df, tmp_path):
+def test_rollup_states_read_the_footer_schema(spark, df, tmp_path,
+                                              jobs_during):
     roll = SketchRollup(str(tmp_path / "roll"), ["g"],
                         [percentile_measure("p", "v", 0.5)])
     roll.build(df)
-    states, jobs = _jobs_during(spark, lambda: roll.states(spark))
+    states, jobs = jobs_during(lambda: roll.states(spark))
     assert jobs == set()
     assert states.schema == spark.read.parquet(roll.path).schema
 

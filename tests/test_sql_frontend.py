@@ -75,7 +75,7 @@ def test_rewrite_matches_registered_udf_path(spark):
         assert g.p50 == pytest.approx(r.p50, rel=1e-6)
 
 
-def test_rewrite_plan_is_two_phase(spark):
+def test_rewrite_plan_is_two_phase(spark, exchange_merge):
     df = dss.sql(spark, (
         "SELECT l_returnflag, approx_percentile_ex(l_quantity, 0.9) AS p90 "
         "FROM lineitem GROUP BY l_returnflag"))
@@ -165,7 +165,7 @@ def test_accumulate_states_compatible_with_estimate(spark):
     assert len(rows) == 3 and all(r.p50 is not None for r in rows)
 
 
-def test_nested_estimate_accumulate_replans_two_phase(spark):
+def test_nested_estimate_accumulate_replans_two_phase(spark, exchange_merge):
     """estimate(accumulate(col)) IS the direct-aggregate shape plus a
     scalar decode — it must re-plan (MapInPandas below the exchange), not
     warn onto the raw-row UDF fallback, and match that fallback's values
@@ -207,7 +207,7 @@ def test_nested_estimate_accumulate_with_literal_args(spark):
             "FROM lineitem"))
 
 
-def test_nested_estimate_combine_replans_two_phase(spark):
+def test_nested_estimate_combine_replans_two_phase(spark, exchange_merge):
     """estimate(combine(state)) over a summary table: partial state merges
     map-side (the 'states' family), state-only shuffle, scalar decode —
     and a bare combine select item re-plans the same way."""
@@ -531,7 +531,7 @@ def test_sample_accumulate_mixed_with_native(spark):
         assert r.seen == r.n
 
 
-def test_sample_accumulate_plan_is_two_phase(spark):
+def test_sample_accumulate_plan_is_two_phase(spark, exchange_merge):
     df = dss.sql(spark, (
         "SELECT l_returnflag, approx_sample_accumulate(l_quantity) AS st "
         "FROM lineitem GROUP BY l_returnflag"))

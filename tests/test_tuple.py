@@ -125,7 +125,7 @@ def test_dataframe_and_sql_surfaces_match_truth(spark):
         assert a.e == b.e
 
 
-def test_dss_sql_two_phase_plan_and_combine(spark):
+def test_dss_sql_two_phase_plan_and_combine(spark, exchange_merge):
     """The tuple family rides the dss.sql rewrite: nested
     estimate(accumulate(k, v)) re-plans two-phase (MapInPandas below the
     exchange), and estimate(combine(state)) works over a summary view."""
