@@ -446,14 +446,13 @@ def _tuple_family(k: int | None) -> _Family:
 
 
 class _StateMerger:
-    """Folds pre-serialized sketch states — the ``*_combine`` verb as a
-    partial-capable kernel. Family-agnostic (byte-sniff dispatch), so one
-    kernel serves every state the engine or a foreign DataSketches writer
-    produces. It is the one merge loop: the ``*_combine`` GROUPED_AGG UDF
-    (``udfs.combine_udf``), the reduce-side fold (``udfs.combine_fold``)
-    and dss.sql's map-side ``states`` family, which re-plans
-    ``*_estimate(*_combine(state))`` as partial merges + a state-only
-    shuffle instead of the raw-row GROUPED_AGG fallback, all run it."""
+    """Folds pre-serialized sketch states — the ``*_combine`` verb.
+    Family-agnostic (byte-sniff dispatch), so one kernel serves every
+    state the engine or a foreign DataSketches writer produces. It is the
+    one merge loop: the ``*_combine`` GROUPED_AGG UDF
+    (``udfs.combine_udf``) and the merge fold (``udfs.combine_fold``) run
+    it, and every operator, ``SketchRollup`` and dss.sql's ``*_combine``
+    reach it through that one fold."""
 
     __slots__ = ("sk",)
 
@@ -470,16 +469,6 @@ class _StateMerger:
 
     def serialize(self):
         return None if self.sk is None else self.sk.serialize()
-
-
-def _states_family() -> _Family:
-    def prep(values: pd.Series):
-        return values.to_numpy(object), values.notna().to_numpy()
-
-    def update(sk, ctx, idx):
-        sk.merge_blobs(*_rows(ctx, idx))
-
-    return _Family(_StateMerger, prep, update)
 
 
 def _family(name: str, **params) -> _Family:
@@ -519,8 +508,6 @@ def _build_family(name: str, get) -> _Family:
         return _reservoir_family(get("k"), get("item_type", ITEM_DOUBLE))
     if name in ("wreservoir", "weighted_sample"):
         return _wreservoir_family(get("k"), get("item_type", ITEM_DOUBLE))
-    if name == "states":
-        return _states_family()
     if name == "tuple":
         return _tuple_family(get("k"))
     if name in ("aodwire", "tuplewire"):

@@ -47,7 +47,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.tables import _footer_schema
-from .sketch_agg import Measure, _finisher, sketch_merge, sketch_partial_multi
+from .sketch_agg import (
+    Measure, sketch_grouped_agg, sketch_merge, sketch_partial_multi)
 
 class SketchRollup:
     """A materialized sketch rollup table at ``path``.
@@ -71,7 +72,7 @@ class SketchRollup:
         """One-pass multi-measure partial sketching + per-group merge —
         the shuffle carries states, not rows."""
         partial = sketch_partial_multi(df, self.keys, self.measures)
-        return self._merge(partial, self.keys)
+        return sketch_merge(partial, self.keys, self._state_cols)
 
     def build(self, df: DataFrame) -> None:
         """(Re)materialize the rollup from ``df`` — one scan of the raw
@@ -89,7 +90,7 @@ class SketchRollup:
         state merging; the swap goes through a temp directory (a table
         format — Iceberg/Delta — would make this an atomic commit; plain
         parquet gets the local-rename equivalent)."""
-        merged = self._merge(self.states(spark), self.keys)
+        merged = sketch_merge(self.states(spark), self.keys, self._state_cols)
         # temp dir SIBLING to the table so the final rename never crosses
         # a filesystem boundary (os.rename raises EXDEV across mounts)
         tmp = tempfile.mkdtemp(
@@ -109,11 +110,6 @@ class SketchRollup:
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(self.path)
 
-    def _merge(self, df: DataFrame, group_by: list[str],
-               finish=None, names=None) -> DataFrame:
-        return sketch_merge(df, group_by, self._state_cols, names=names,
-                            finish=finish)
-
     def _selected(self, spark: SparkSession, where,
                   group_by: list[str] | None) -> tuple[DataFrame, list[str]]:
         """The state rows ``where`` selects, and the checked grouping."""
@@ -132,21 +128,20 @@ class SketchRollup:
         the KEY columns (pushed to the parquet scan), optional
         ``group_by`` re-grouping to a subset of the rollup keys —
         states for the keys dropped from the grouping are combined."""
-        return self._merge(*self._selected(spark, where, group_by))
+        return sketch_merge(*self._selected(spark, where, group_by),
+                            self._state_cols)
 
     def estimate(self, spark: SparkSession, where=None,
                  group_by: list[str] | None = None) -> DataFrame:
-        """Measure estimates for a subset — the user-facing answer table.
-        The merge fold emits the estimate of each measure whose estimator
-        is a finisher; other estimators run over the merged state column.
+        """Measure estimates for a subset — the user-facing answer table:
+        :func:`~.sketch_agg.sketch_grouped_agg` over the selected state
+        columns, so the merge fold emits the estimate of each measure whose
+        estimator is a finisher; other estimators run over the merged state
+        column.
         (`Measure.preserve_type` is not applied here: a rollup has no
         raw input column to infer from; pass an explicit `output_type`
         estimator if integral output is required.)"""
         df, group_by = self._selected(spark, where, group_by)
-        fin = [_finisher(m) for m in self.measures]
-        merged = self._merge(df, group_by, fin,
-                             names=[m.name for m in self.measures])
-        outs = [merged[m.name] if f is not None
-                else m.estimator(merged[m.name]).alias(m.name)
-                for m, f in zip(self.measures, fin)]
-        return merged.select(*group_by, *outs)
+        return sketch_grouped_agg(df, group_by, *(
+            Measure(m.name, c, None, m.estimator)
+            for m, c in zip(self.measures, self._state_cols)))

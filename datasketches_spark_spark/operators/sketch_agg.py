@@ -74,7 +74,9 @@ def sketch_partial(df: DataFrame, keys: list[str], col: str,
 class Measure:
     """One sketched aggregate in a :func:`sketch_grouped_agg` call: which
     column to sketch, with which family/params, and how to turn the merged
-    state into the output column. An ``estimator`` that is a
+    state into the output column. A measure with no ``family`` reads a
+    column that already holds serialized states (any family): it is merged
+    as it is, the ``*_combine`` verb. An ``estimator`` that is a
     :class:`~..functions.udfs.Finisher` (what every ``*_measure`` builder
     sets) runs inside the merge fold; any other Column function runs on
     the merged state column after it."""
@@ -235,6 +237,31 @@ def sketch_partial_multi(df: DataFrame, keys: list[str],
     return src.mapInPandas(build, out_schema)
 
 
+def _merge_input(df: DataFrame, keys: list[str], ms: list[Measure],
+                 max_groups: int) -> tuple[DataFrame, list[str]]:
+    """The rows :func:`sketch_merge` folds for measures ``ms``, and their
+    state columns in measure order. A state measure (no family) is its own
+    input column; raw measures go through :func:`sketch_partial_multi`,
+    and when both kinds meet, the state rows are appended to the partial
+    rows, each side null in the other's columns (the fold skips nulls).
+
+    Known cost of the mixed case: the partial rows and the state rows
+    are two subplans of ``df``, so Spark evaluates ``df`` twice (two
+    scans, and any join or subquery in it twice). Over a
+    non-deterministic ``df`` (``rand()`` in a filter, ``TABLESAMPLE``)
+    the raw measures and the state measures may see different rows."""
+    raw = [m for m in ms if m.family is not None]
+    if not raw:
+        return df, [m.col for m in ms]
+    rows = sketch_partial_multi(df, keys, raw, max_groups=max_groups)
+    states = [df[m.col].alias(f"{m.name}__state") for m in ms
+              if m.family is None]
+    if states:
+        rows = rows.unionByName(df.select(*(df[k] for k in keys), *states),
+                                allowMissingColumns=True)
+    return rows, [f"{m.name}__state" for m in ms]
+
+
 def sketch_grouped_agg(df: DataFrame, keys: list[str],
                        *measures: Measure,
                        max_groups: int = 100_000) -> DataFrame:
@@ -250,14 +277,18 @@ def sketch_grouped_agg(df: DataFrame, keys: list[str],
     :class:`~..functions.udfs.Finisher`; any other estimator, and the
     ``preserve_type`` cast, run as Columns over the fold's output.
 
+    A measure with no family (a state column) skips phase 1: its states
+    go straight into the one merge fold, so a combine-only call runs one
+    Python pass over its input rows (with no keys above the one-task
+    limit, :func:`sketch_merge` also folds each input partition first).
+
     ``max_groups`` bounds the per-executor live-sketch dict for
     high-cardinality keys (see :func:`sketch_partial_multi`); flushing
     never changes results, only the count of (still state-sized) shuffle
     rows."""
     ms = list(measures)
-    partial = sketch_partial_multi(df, keys, ms, max_groups=max_groups)
-    merged = sketch_merge(partial, keys, [f"{m.name}__state" for m in ms],
-                          names=[m.name for m in ms],
+    rows, cols = _merge_input(df, keys, ms, max_groups)
+    merged = sketch_merge(rows, keys, cols, names=[m.name for m in ms],
                           finish=[_finisher(m) for m in ms])
     outs = []
     for m in ms:
@@ -313,7 +344,10 @@ def sketch_merge(df: DataFrame, keys: list[str],
     under the same rule) together with one all-null row, so the result
     is always one row, null states for no input (the global-aggregate
     contract; an input the optimizer proves empty would otherwise leave
-    no partition to run the fold on)."""
+    no partition to run the fold on). Before that exchange the same fold
+    runs once per input partition, emitting its merged states: the
+    global aggregate's partial/final split, which keeps the decodes
+    spread over the input tasks instead of all in the one final task."""
     cols = [state_col] if isinstance(state_col, str) else list(state_col)
     names = cols if names is None else list(names)
     finish = [None] * len(cols) if finish is None else list(finish)
@@ -336,6 +370,10 @@ def sketch_merge(df: DataFrame, keys: list[str],
         src = (src.coalesce(1) if one_task else src.repartition(*order)) \
             .sortWithinPartitions(*order)
     else:
+        if not one_task:
+            # the exchange sends every row to one task: fold each input
+            # partition to one row first, so the decodes run in parallel
+            src = src.mapInPandas(combine_fold([], names), src.schema)
         nulls = df.sparkSession.range(1).select(
             *(F.lit(None).cast(BinaryType()).alias(n) for n in names))
         src = src.union(nulls)
@@ -395,6 +433,5 @@ def sketch_accumulate_multi(df: DataFrame, keys: list[str],
     :func:`state_measure` (any family the single-measure path
     accepts, incl. tuple's two-column input as a col tuple)."""
     ms = list(measures)
-    partial = sketch_partial_multi(df, keys, ms, max_groups=max_groups)
-    return sketch_merge(partial, keys, [f"{m.name}__state" for m in ms],
-                        names=[m.name for m in ms])
+    rows, cols = _merge_input(df, keys, ms, max_groups)
+    return sketch_merge(rows, keys, cols, names=[m.name for m in ms])

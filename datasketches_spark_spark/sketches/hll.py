@@ -162,7 +162,7 @@ class HllSketch:
     # ------------------------------------------------------------------ serde
     # v2 payload: lgk(u8) | mode(u8: 0=dense, 1=sparse)
     #             | dense:  2^lgk register bytes
-    #             | sparse: count(u32) + count * u64 hashes
+    #             | sparse: count(u32) + count * u64 hashes, ascending
     # v1 payload (pre-sparse-phase states): lgk(u8) | 2^lgk register bytes.
     # v1 is still decoded: by version byte, plus a length fallback
     # (len == 1 + 2^lgk) because early sparse-phase builds emitted the v2
@@ -170,8 +170,10 @@ class HllSketch:
 
     def serialize(self) -> bytes:
         if self._coupons is not None:
-            hashes = np.fromiter(self._coupons, dtype=np.uint64,
-                                 count=len(self._coupons))
+            # sorted: the bytes must not depend on the set's insertion
+            # history, so any merge order or nesting gives the same state
+            hashes = np.sort(np.fromiter(self._coupons, dtype=np.uint64,
+                                         count=len(self._coupons)))
             payload = (struct.pack("<BBI", self.lgk, 1, hashes.size)
                        + hashes.tobytes())
         else:

@@ -20,7 +20,8 @@ exactly like ``spark.sql``:
 * select items that call an engine sketch aggregate are re-planned onto
   :func:`~datasketches_spark_spark.operators.sketch_agg.sketch_grouped_agg`
   (``mapInPandas`` partial sketches → state-only shuffle → merge →
-  estimate);
+  estimate; a ``*_combine``'s input states skip the partial pass and go
+  straight to the merge);
 * select items built from native aggregates (``count``/``sum``/… — or
   ``approx_count_distinct_hll``, which maps to Spark's JVM
   ``hll_sketch_agg`` and already aggregates partially) run as one JVM
@@ -323,9 +324,9 @@ _DISTINCT_DIRECT = ("approx_count_distinct_ex", "approx_count_distinct_cpc",
                     "approx_count_distinct_theta")
 
 # *_combine functions: merge pre-serialized states (family-agnostic wire).
-# Re-planned onto the "states" measure family — map-side partial merges,
-# then a state-only shuffle (the GROUPED_AGG fallback ships every input
-# state row to the aggregating task instead).
+# Re-planned as state measures (no family): the input states go straight
+# into the one merge fold, which decodes each of them once (the GROUPED_AGG
+# fallback calls Python once per group instead).
 _COMBINE_FNS = {
     "approx_percentile_combine", "approx_freqitems_combine",
     "approx_count_distinct_combine", "approx_sample_combine",
@@ -490,7 +491,7 @@ def _classify_item(item: _Item, spark: SparkSession, seq: int) -> None:
             raise _Unsupported(f"{fname} expects (state)")
         item.kind = "sketch"
         item.measure = (args[0], lambda col: Measure(
-            name, col, "states", lambda c: c))
+            name, col, None, lambda c: c))
         return
     raise _Unsupported(f"unhandled sketch function {fname}")
 
@@ -589,11 +590,13 @@ def _classify_nested_estimate(item: "_Item", call: tuple[str, str],
                               spark: SparkSession, seq: int) -> bool:
     """Re-plan ``*_estimate(*_accumulate(col), lits...)`` /
     ``*_estimate(*_combine(state), lits...)`` select items onto the
-    two-phase measure machinery: the nesting IS the direct-aggregate
-    pattern (map-side partial sketches or partial state merges -> state-only
-    shuffle -> merge -> scalar decode). Returns False for shapes outside
-    the rewrite; the caller then raises the usual unsupported-nesting
-    error and the query falls back (correct, raw-shuffle)."""
+    measure machinery: the nesting IS the direct-aggregate pattern. An
+    accumulate runs map-side partial sketches -> state-only shuffle ->
+    merge and estimate in one fold; a combine is a state measure (no
+    family), whose input states go straight into that fold, so each is
+    decoded once. Returns False for shapes outside the rewrite; the
+    caller then raises the usual unsupported-nesting error and the query
+    falls back (correct, raw-shuffle)."""
     fname, args_text = call
     args = _split_top(args_text)
     if not args:
@@ -606,7 +609,7 @@ def _classify_nested_estimate(item: "_Item", call: tuple[str, str],
         iargs = _split_top(iargs_text)
         if len(iargs) != 1:
             return False
-        family, params = "states", {}
+        family, params = None, {}
         arg_cols = iargs[0]
     elif ifn in _ACC_FAMILY:
         family, params = _resolve_acc_family(ifn, spark)

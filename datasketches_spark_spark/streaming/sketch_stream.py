@@ -193,7 +193,8 @@ def sketch_accumulate_stream(df: DataFrame, keys: list[str], col: str,
     Emits ``(keys..., state, n)`` every trigger for every updated group
     (``n`` = rows folded in so far whose first ``col`` is neither null nor
     NaN). The state blob is the same wire format as batch accumulate —
-    estimate/combine functions apply unchanged.
+    estimate/combine functions apply unchanged — and, as in batch, null
+    while no valid row has reached the group.
 
     State eviction (``evict_after``): without it, state lives forever —
     fine for bounded key domains (an event-type dimension), a scale-killer
@@ -258,7 +259,13 @@ def _keyed_fold(df: DataFrame, keys: list[str], measures, evict_after,
     emitting ``(keys..., state_cols..., n)`` per updated group. With
     ``count_col`` each batch first drops the rows where that column is
     null or NaN and ``n`` counts the rest; without it ``n`` counts every
-    row."""
+    row.
+
+    A (group, measure) sketch is made when the first valid row reaches
+    it (``_Family.sketch_of``'s rule): until then its state is stored and
+    emitted as null, as the batch path gives. A restored null blob is
+    "no sketch yet"; a non-null one, incl. the empty states older
+    checkpoints hold, is decoded and folded into as before."""
     fams = [(m, _family(m.family, **m.params)) for m in measures]
     src = df.select(*_fold_columns(df, _input_columns(keys, measures),
                                    evict_after))
@@ -279,16 +286,23 @@ def _keyed_fold(df: DataFrame, keys: list[str], measures, evict_after,
             return
         if state.exists:
             *blobs, n = state.get
-            sks = [deserialize_any(bytes(b)) for b in blobs]
+            sks = [None if b is None else deserialize_any(bytes(b))
+                   for b in blobs]
         else:
-            sks, n = [fam.make() for _, fam in fams], 0
+            sks, n = [None] * len(fams), 0
         for pdf in pdfs:
             if count_col is not None:
                 pdf = pdf.dropna(subset=[count_col])
             n += len(pdf)
-            for sk, (m, fam) in zip(sks, fams):
-                fam.update_series(sk, _measure_input(pdf, m))
-        blobs = [sk.serialize() for sk in sks]
+            for j, (m, fam) in enumerate(fams):
+                ctx = fam.prep(_measure_input(pdf, m))
+                if sks[j] is None:
+                    # no valid row yet: the state stays null
+                    if not ctx[-1].any():
+                        continue
+                    sks[j] = fam.make()
+                fam.update(sks[j], ctx, None)
+        blobs = [None if sk is None else sk.serialize() for sk in sks]
         state.update((*blobs, n))
         if horizon is not None:
             state.setTimeoutTimestamp(horizon(key, state))

@@ -195,6 +195,13 @@ def test_unknown_sketch_parameters_raise(spark, installed):
         installed, ["g"], "v", "theta", k=64).collect())
 
 
+def test_states_is_not_a_family():
+    """State columns are merged by the fold itself (a measure with no
+    family), so there is no map-side "states" family to build."""
+    with pytest.raises(ValueError, match="unknown sketch family 'states'"):
+        _family("states")
+
+
 def test_every_registered_accumulate_is_in_the_table(registered):
     acc = {n for n in registered if "_accumulate" in n}
     assert acc == set(_ACC_FAMILY)

@@ -207,17 +207,22 @@ def test_nested_estimate_accumulate_with_literal_args(spark):
             "FROM lineitem"))
 
 
-def test_nested_estimate_combine_replans_two_phase(spark, exchange_merge):
-    """estimate(combine(state)) over a summary table: partial state merges
-    map-side (the 'states' family), state-only shuffle, scalar decode —
-    and a bare combine select item re-plans the same way."""
+def test_nested_estimate_combine_replans_two_phase(spark, exchange_merge,
+                                                   tmp_path):
+    """estimate(combine(state)) over a summary table: the input states go
+    straight into the merge fold (no map-side Python pass below the
+    exchange), which emits the scalar decode — and a bare combine select
+    item re-plans the same way."""
     import re
     import warnings as w
     from datasketches_spark_spark.sql import SketchSqlFallbackWarning
+    # a stored summary table: its scan is a leaf of the combine's plan
     dss.sql(spark, (
         "SELECT l_returnflag, l_linestatus, "
         "approx_percentile_accumulate(l_quantity) AS st "
         "FROM lineitem GROUP BY l_returnflag, l_linestatus")) \
+        .write.parquet(str(tmp_path / "states"))
+    spark.read.parquet(str(tmp_path / "states")) \
         .createOrReplaceTempView("_nested_states")
     q = ("SELECT l_returnflag, approx_percentile_estimate_array("
          "approx_percentile_combine(st), array(0.25, 0.75)) AS qs "
@@ -228,7 +233,8 @@ def test_nested_estimate_combine_replans_two_phase(spark, exchange_merge):
     plan = _plan(df)
     mp = [int(m) for m in re.findall(r"MapInPandas \((\d+)\)", plan)]
     ex = [int(m) for m in re.findall(r"Exchange \((\d+)\)", plan)]
-    assert mp and ex and min(mp) < min(ex), plan
+    # one Python pass, the fold, above the merge exchange: nothing below
+    assert len(mp) == 1 and ex and min(ex) < mp[0], plan
     got = df.collect()
     ref = spark.sql(q).collect()
     assert [r.l_returnflag for r in got] == [r.l_returnflag for r in ref]
@@ -242,6 +248,116 @@ def test_nested_estimate_combine_replans_two_phase(spark, exchange_merge):
             "FROM _nested_states")).collect()
     assert len(rows) == 1 and rows[0].st is not None
     spark.catalog.dropTempView("_nested_states")
+
+
+@pytest.fixture
+def combine_input(spark, tmp_path):
+    """``_combine_input``, a stored table of (l_returnflag, l_linestatus,
+    l_linenumber) rows with a quantile state ``st`` of l_extendedprice,
+    null for line 1, and a raw double ``v``, null for line 2."""
+    path = str(tmp_path / "combine_input")
+    dss.sql(spark, (
+        "SELECT l_returnflag, l_linestatus, l_linenumber, "
+        "approx_percentile_accumulate(l_extendedprice) AS st "
+        "FROM lineitem GROUP BY l_returnflag, l_linestatus, l_linenumber")) \
+        .selectExpr(
+            "l_returnflag", "l_linestatus",
+            "CASE WHEN l_linenumber = 1 THEN NULL ELSE st END AS st",
+            "CASE WHEN l_linenumber = 2 THEN NULL "
+            "ELSE l_linenumber * 1.5 END AS v") \
+        .write.parquet(path)
+    spark.read.parquet(path).createOrReplaceTempView("_combine_input")
+    yield "_combine_input"
+    spark.catalog.dropTempView("_combine_input")
+
+
+@pytest.mark.parametrize("plan", ["exchange", "single_task"])
+def test_combine_only_block_runs_one_python_pass(spark, merge_plan,
+                                                 combine_input, plan):
+    """A block of *_combine measures only, bare and nested, runs the merge
+    fold as its one MapInPandas under both merge plans."""
+    import re
+    q = ("SELECT l_returnflag, approx_percentile_combine(st) AS c, "
+         "approx_percentile_estimate(approx_percentile_combine(st), 0.5) "
+         f"AS p FROM {combine_input} GROUP BY l_returnflag")
+    with merge_plan(plan):
+        df = dss.sql(spark, q)
+    assert len(re.findall(r"MapInPandas \(\d+\)", _plan(df))) == 1
+    ref = {r.l_returnflag: r.p for r in spark.sql(q).collect()}
+    assert {r.l_returnflag: r.p for r in df.collect()} == ref
+
+
+@pytest.mark.parametrize("plan", ["exchange", "single_task"])
+def test_global_combine_folds_each_partition_first(spark, merge_plan,
+                                                   combine_input, plan):
+    """A combine with no GROUP BY: the exchange plan sends every state to
+    one task, so the fold also runs below it, once per input partition,
+    and the final fold merges those rows; the single-task plan folds
+    once."""
+    import re
+    q = ("SELECT approx_percentile_estimate(approx_percentile_combine(st),"
+         f" 0.5) AS p FROM {combine_input}")
+    with merge_plan(plan):
+        df = dss.sql(spark, q)
+    plan_text = _plan(df)
+    mp = [int(m) for m in re.findall(r"MapInPandas \((\d+)\)", plan_text)]
+    ex = [int(m) for m in re.findall(r"Exchange \((\d+)\)", plan_text)]
+    if plan == "exchange":
+        assert len(mp) == 2 and len(ex) == 1 and min(mp) < ex[0] < max(mp)
+    else:
+        assert len(mp) == 1 and not ex, plan_text
+    assert df.collect()[0].p == spark.sql(q).collect()[0].p
+
+
+def test_accumulate_mixed_with_combine_matches_fallback(spark,
+                                                        combine_input):
+    """One block with a raw-column accumulate and a state-column combine:
+    the partial rows and the state rows meet in one fold, and every
+    group's states decode to what spark.sql's registered UDFs give."""
+    import warnings as w
+    from datasketches_spark_spark.sketches import deserialize_any
+    from datasketches_spark_spark.sql import SketchSqlFallbackWarning
+    q = ("SELECT l_returnflag, approx_percentile_accumulate(v) AS a, "
+         "approx_percentile_combine(st) AS c "
+         f"FROM {combine_input} GROUP BY l_returnflag "
+         "ORDER BY l_returnflag")
+    with w.catch_warnings():
+        w.simplefilter("error", SketchSqlFallbackWarning)
+        got = dss.sql(spark, q).collect()
+    ref = spark.sql(q).collect()
+
+    def decoded(blob):
+        if blob is None:
+            return None
+        sk = deserialize_any(bytes(blob))
+        return sk.n, sk.quantiles([i / 10 for i in range(11)])
+
+    def rows(rs):
+        return [(r.l_returnflag, decoded(r.a), decoded(r.c))
+                for r in rs]
+
+    assert rows(got) == rows(ref)
+    assert all(r.a is not None and r.c is not None for r in got)
+
+
+def test_mixed_block_reads_its_base_twice(spark, combine_input):
+    """Pins a known cost of the mixed path: the raw measures' partial
+    rows and the state rows are two subplans of the block's base, so the
+    base is scanned twice (a block of one kind scans it once). A change
+    that reads the base once should update this test."""
+    import re
+
+    def scans(q):
+        return len(re.findall(r"^\(\d+\) Scan parquet", _plan(
+            dss.sql(spark, q)), re.M))
+
+    base = f"FROM {combine_input} GROUP BY l_returnflag"
+    assert scans("SELECT l_returnflag, approx_percentile_accumulate(v) "
+                 f"AS a, approx_percentile_combine(st) AS c {base}") == 2
+    assert scans("SELECT l_returnflag, approx_percentile_combine(st) "
+                 f"AS c {base}") == 1
+    assert scans("SELECT l_returnflag, approx_percentile_accumulate(v) "
+                 f"AS a {base}") == 1
 
 
 def test_hll_name_runs_native_jvm(spark):

@@ -708,11 +708,11 @@ class TestSingleMeasureStreamParity:
          (2, 0.5, 4.0)],
     ]
 
-    @pytest.mark.parametrize("family,col", [
-        ("quantile", "v"), ("theta", "v"), ("tuple", ("v", "x"))],
-        ids=["quantile", "theta", "tuple"])
-    def test_single_multi_and_batch_states_match(self, spark, tmp_path,
-                                                 family, col):
+    def _final_states(self, spark, tmp_path, files, family, col):
+        """Streams ``files`` (one per trigger) through the single and the
+        one-measure multi stream and reads them in one batch
+        ``sketch_accumulate``: ({g: (n, state)}, {g: (n, state)},
+        {g: state}), each stream's last row per group."""
         from datasketches_spark_spark.operators import sketch_accumulate
         from datasketches_spark_spark.operators.sketch_agg import (
             state_measure)
@@ -724,14 +724,17 @@ class TestSingleMeasureStreamParity:
         schema = "i int, g int, v double, x double"
         src = str(tmp_path / "src")
         i = 0
-        for rows in self.FILES:
+        for rows in files:
             (spark.createDataFrame([(i + j, *r) for j, r in enumerate(rows)],
                                    schema)
              .coalesce(1).write.mode("append").parquet(src))
             i += len(rows)
 
+        def blob(b):
+            return None if b is None else bytes(b)
+
         def final(out, state_col, tag):
-            name = f"parity_{family}_{tag}"
+            name = f"parity_{family}_{tag}_{tmp_path.name}"
             q = (out.writeStream.format("memory").queryName(name)
                  .outputMode("update")
                  .option("checkpointLocation", str(tmp_path / tag))
@@ -740,7 +743,7 @@ class TestSingleMeasureStreamParity:
             last = {}
             for r in spark.table(name).collect():
                 if r.g not in last or r.n >= last[r.g][0]:
-                    last[r.g] = (r.n, bytes(r[state_col]))
+                    last[r.g] = (r.n, blob(r[state_col]))
             return last
 
         def stream():
@@ -754,9 +757,17 @@ class TestSingleMeasureStreamParity:
             "m__state", "multi")
         ordered = (spark.read.schema(schema).parquet(src)
                    .repartition(1).sortWithinPartitions("i"))
-        batch = {r.g: bytes(r.state) for r in sketch_accumulate(
+        batch = {r.g: blob(r.state) for r in sketch_accumulate(
             ordered, ["g"], col, family).collect()}
+        return single, multi, batch
 
+    @pytest.mark.parametrize("family,col", [
+        ("quantile", "v"), ("theta", "v"), ("tuple", ("v", "x"))],
+        ids=["quantile", "theta", "tuple"])
+    def test_single_multi_and_batch_states_match(self, spark, tmp_path,
+                                                 family, col):
+        single, multi, batch = self._final_states(
+            spark, tmp_path, self.FILES, family, col)
         assert {g: s for g, (_, s) in single.items()} == batch
         assert {g: s for g, (_, s) in multi.items()} == batch
         rows = [r for f in self.FILES for r in f]
@@ -765,3 +776,21 @@ class TestSingleMeasureStreamParity:
                    and not math.isnan(r[1])) for g in batch}
         assert {g: n for g, (n, _) in multi.items()} == {
             g: sum(1 for r in rows if r[0] == g) for g in batch}
+
+    @pytest.mark.parametrize("family,col", [
+        ("theta", "v"), ("freq", "v"), ("hll", "v"), ("quantile", "v"),
+        ("tuple", ("v", "x"))])
+    def test_all_null_group_state_is_null(self, spark, tmp_path, family,
+                                          col):
+        """Group 3's ``v`` is null or NaN on every trigger: both streams
+        store and emit a null state for it, as batch accumulate does, and
+        the other groups' states still match batch byte for byte."""
+        files = [f + [(3, None, 1.0), (3, float("nan"), 2.0)]
+                 for f in self.FILES]
+        single, multi, batch = self._final_states(
+            spark, tmp_path, files, family, col)
+        assert batch[3] is None and batch[0] is not None
+        assert single[3] == (0, None)
+        assert multi[3] == (6, None)
+        assert {g: s for g, (_, s) in single.items()} == batch
+        assert {g: s for g, (_, s) in multi.items()} == batch
