@@ -12,6 +12,7 @@ Engine quantile rank rule == DuckDB ``quantile_disc``: value at rank
 
 from __future__ import annotations
 
+import contextlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,7 +26,8 @@ from datasketches_spark_spark.operators import (
     sketch_accumulate,
     sketch_grouped_agg,
 )
-from datasketches_spark_spark.sources import arrow_local_df, read_table
+from datasketches_spark_spark.sources import (
+    arrow_local_df, read_table, run_concurrently, session_conf)
 
 # Sketch sizes chosen so sf0.01 (and sf0.1 for the pipeline queries on
 # `events`) stays in the exact regime; see module docstring.
@@ -54,6 +56,20 @@ def _rotate_persisted(owner, attr: str, new_df):
             pass
     setattr(owner, attr, new_df)
     return new_df
+
+
+@contextlib.contextmanager
+def _installed_conf(spark: SparkSession, conf: dict[str, str]):
+    """:func:`session_conf` for a query whose SQL functions read ``conf``
+    when they are registered: ``dss.install`` runs under ``conf`` inside
+    the block, and again after the restore, also on an exception."""
+    import datasketches_spark_spark as dss
+    try:
+        with session_conf(spark, conf):
+            dss.install(spark)
+            yield
+    finally:
+        dss.install(spark)
 
 
 # --------------------------------------------------------------------- queries
@@ -246,10 +262,8 @@ def _q13_percentile_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan), state-only shuffle, merge. Exact regime via a conf-tuned k.
     The conf is saved and restored so nothing leaks into later queries."""
     import datasketches_spark_spark as dss
-    key = "spark.sql.dataSketches.quantiles.req.k"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "65536")
-    try:
+    with session_conf(spark,
+                      {"spark.sql.dataSketches.quantiles.req.k": "65536"}):
         read_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
         # conf is read eagerly while building the two-phase plan
         return dss.sql(spark, """
@@ -258,11 +272,6 @@ def _q13_percentile_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
                    approx_percentile_req(l_quantity, 0.95) AS p95_qty
             FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
         """)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 # ----------------------------------------------------- LLM-pipeline queries
@@ -388,7 +397,6 @@ def _q16_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build -> persist -> prune -> score path against the same oracle.
     import shutil
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
     from datasketches_spark_spark.operators import (build_text_index,
                                                     query_text_index)
 
@@ -417,15 +425,12 @@ def _q16_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r18 optimization (guide §2.6, overlap independent jobs): the
     # index build+probe chain is a sequence of blocking driver calls
     # (two partitioned writes, a stats read, the probe checkpoint)
-    # whose stages leave most cores idle; run it in a driver thread
-    # while the gram and direct-bm25 legs materialize on this one —
+    # whose stages leave most cores idle; run it in one driver thread
+    # while the gram and direct-bm25 legs materialize in another —
     # each leg's rows are computed exactly as before, just not
     # serialized behind one another.
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(_bmx_leg)
-        gram_ck = gram.localCheckpoint()
-        bm25_ck = bm25.localCheckpoint()
-        bmx = fut.result()
+    bmx, (gram_ck, bm25_ck) = run_concurrently(
+        _bmx_leg, lambda: (gram.localCheckpoint(), bm25.localCheckpoint()))
     return gram_ck.unionByName(bm25_ck).unionByName(bmx) \
         .orderBy("leg", "qid", "rk")
 
@@ -702,16 +707,14 @@ def _q24_streaming_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # State partitions sized to the state cardinality (a handful of event
     # types), not the batch shuffle default: each state partition
     # checkpoints its own store per micro-batch (see q36's note).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        await_or_fail(q, 300)
+        with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            q = (out.writeStream.format("memory").queryName(name)
+                 .outputMode("update")
+                 .option("checkpointLocation", ckpt)
+                 .trigger(availableNow=True).start())
+            await_or_fail(q, 300)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         # memory sink rows live in the session; the replay source and
         # checkpoint dirs are dead once the stream drains — remove them
         # so repeated runs leave /tmp clean
@@ -744,9 +747,11 @@ def _q36_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path). Extension beyond the reference (no streaming there); the
     training-pipeline shape: suppress re-crawled documents as they
     arrive instead of re-deduping the corpus in batch."""
+    import glob
     import shutil
     import tempfile
     import uuid
+    import pyarrow.parquet as pq
     from datasketches_spark_spark.streaming import (
         await_or_fail, streaming_dedup)
     docs = read_table(spark, sf_dir, "documents").select(
@@ -769,28 +774,34 @@ def _q36_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # result is the per-lang distinct-fp count either way.
     n_files = 4
     docs = docs.repartition(n_files).localCheckpoint()
-    docs.write.mode("overwrite").parquet(src)
-    docs.write.mode("append").parquet(src)  # duplicate all
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", n_files).parquet(src))
-    deduped = streaming_dedup(stream, ["fp"], event_time="ts",
-                              delay="1 day")
     name = f"q36_dedup_sink_{uuid.uuid4().hex[:8]}"
-    # State partitions sized to the within-watermark fingerprint volume at
-    # THIS SF (tens of thousands of keys -> 8 stores is plenty; each state
-    # partition checkpoints per micro-batch, so over-partitioning is pure
-    # overhead). At 100 TB the within-watermark key volume is what should
-    # set this — the cluster default, or higher.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (deduped.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        await_or_fail(q, 300)
+        # Each corpus copy must be exactly n_files non-empty part files:
+        # with fewer, one trigger would take files of both copies.
+        for copy, mode in enumerate(("overwrite", "append"), 1):
+            docs.write.mode(mode).parquet(src)  # the append duplicates all
+            n = sum(1 for f in glob.glob(f"{src}/part-*")
+                    if pq.read_metadata(f).num_rows) - (copy - 1) * n_files
+            if n != n_files:
+                raise RuntimeError(f"q36: corpus copy {copy} wrote {n} "
+                                   f"non-empty part files, not {n_files}")
+        stream = (spark.readStream.schema(docs.schema)
+                  .option("maxFilesPerTrigger", n_files).parquet(src))
+        deduped = streaming_dedup(stream, ["fp"], event_time="ts",
+                                  delay="1 day")
+        # State partitions sized to the within-watermark fingerprint
+        # volume at THIS SF (tens of thousands of keys -> 8 stores is
+        # plenty; each state partition checkpoints per micro-batch, so
+        # over-partitioning is pure overhead). At 100 TB the
+        # within-watermark key volume is what should set this — the
+        # cluster default, or higher.
+        with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            q = (deduped.writeStream.format("memory").queryName(name)
+                 .outputMode("append")
+                 .option("checkpointLocation", ckpt)
+                 .trigger(availableNow=True).start())
+            await_or_fail(q, 300)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.sql(f"""
@@ -1582,44 +1593,8 @@ def _q26_fingerprint_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(":", "piece_start", "piece_end", "seq_offset")
         .alias("h"),
         (F.col("piece_end") - F.col("piece_start")).alias("n"))
-    _q26_audit(spark, sf_dir, pk)
     return fp.unionByName(ch).unionByName(pk) \
         .orderBy("leg", "doc_id", "idx")
-
-
-def _q26_audit(spark: SparkSession, sf_dir: str, pk: DataFrame) -> None:
-    """Self-audit for the q26 'pack' leg (round-10 verdict item #1): the
-    driver's correctness record stores only match booleans, so when its
-    gate disagrees with every local replay, nothing localizes the delta.
-    This dumps what the CURRENT session actually computed — the pack
-    leg's order-insensitive md5 and the layout-relevant confs — to a
-    repo-root JSON the next round can diff against the local run.
-    Best-effort and cheap (one ~600-row job); never fails the query."""
-    try:
-        import hashlib
-        import json
-        import os
-        import time
-        rows = sorted((r.doc_id, r.idx, r.h, r.n) for r in pk.collect())
-        md5 = hashlib.md5(repr(rows).encode()).hexdigest()
-        confs = {}
-        for k in ("spark.sql.shuffle.partitions",
-                  "spark.sql.adaptive.enabled",
-                  "spark.sql.execution.rangeExchange.sampleSizePerPartition",
-                  "spark.default.parallelism",
-                  "spark.master"):
-            try:
-                confs[k] = spark.conf.get(k)
-            except Exception:
-                confs[k] = None
-        rec = {"ts": time.strftime("%Y-%m-%dT%H:%M:%S"), "sf_dir": sf_dir,
-               "pack_rows": len(rows), "pack_md5": md5, "confs": confs}
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "Q26_AUDIT.json")
-        with open(path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
-    except Exception:
-        pass
 
 
 def _q27_winnow_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1692,10 +1667,8 @@ def _q29_mixed_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     group key (datasketches_spark_spark/sql.py). MERGEABLE (float64)
     because o_totalprice carries cents beyond float32's mantissa."""
     import datasketches_spark_spark as dss
-    key = "spark.sql.dataSketches.quantiles.mergeable.k"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "65536")
-    try:
+    with session_conf(
+            spark, {"spark.sql.dataSketches.quantiles.mergeable.k": "65536"}):
         read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
         return dss.sql(spark, """
             SELECT o_orderpriority,
@@ -1706,11 +1679,6 @@ def _q29_mixed_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
                    approx_percentile_mergeable(o_totalprice, 0.9) AS p90_price
             FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
         """)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def _q30_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1767,11 +1735,7 @@ def _q32_sampling_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     states rather than re-running the accumulate."""
     import datasketches_spark_spark as dss
     from datasketches_spark_spark import conf as dconf
-    key = dconf.SAMPLE_RESERVOIR_K_KEY
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "65536")
-    dss.install(spark)
-    try:
+    with _installed_conf(spark, {dconf.SAMPLE_RESERVOIR_K_KEY: "65536"}):
         read_table(spark, sf_dir, "documents") \
             .createOrReplaceTempView("documents")
         states = dss.sql(spark, """
@@ -1783,9 +1747,6 @@ def _q32_sampling_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
                             ELSE CAST(n_chars AS DOUBLE) END) AS wst
             FROM documents GROUP BY lang, source
         """).persist()
-        # NB: _rotate_persisted keeps its own local names — an early
-        # revision reused `prev` here and clobbered the saved conf
-        # value the finally block restores (r16 review finding)
         _rotate_persisted(_q32_sampling_sql, "_states", states)
         states.createOrReplaceTempView("_q32_states")
         # doc_ids flattened to csv: the driver's canonicalizer hashes
@@ -1808,12 +1769,58 @@ def _q32_sampling_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM _q32_states GROUP BY lang
             ORDER BY leg, lang
         """)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-        dss.install(spark)
+
+
+def _q34_per_state_legs(tuples: dict, blooms: dict, cpcs: dict,
+                        sources: dict) -> tuple[list, list, list]:
+    """q34's per-lang legs over its collected ``{lang: state}`` maps:
+    tuple rows ``(lang, tup_rows, tup_sum)``, bloom rows ``(lang,
+    bm_self, bm_absent)`` probing each lang's ``sources``, and CPC rows
+    ``(lang, ndv_src)``. Each decode and estimate follows the estimate
+    error rule (``functions.udfs._NullOnError``): a missing state gives
+    nulls, and corrupt states give nulls and one warning per leg, naming
+    its estimate."""
+    import pandas as pd
+    from datasketches_spark_spark.functions.udfs import (
+        _bloom_kinds, _bloom_probe, _NullOnError, _tuple_kinds)
+    from datasketches_spark_spark.sketches import CpcUnionSketch
+
+    def membership(sk, srcs):
+        srcs = pd.Series(srcs, dtype=object)
+        hit = _bloom_probe(sk, srcs, None)
+        fp = _bloom_probe(sk, srcs.map(lambda s: s + "#none"), None)
+        return (int(min(bool(h) for h in hit)),
+                int(max(bool(x) for x in fp)))
+
+    def leg(name, kinds, fn, states, width, extra=lambda lang: ()):
+        guard = _NullOnError(name, kinds, fn)
+        out = []
+        for lang in sorted(states):
+            blob = states[lang]
+            res = None if blob is None else guard([blob], extra(lang))
+            out.append((lang, *(res or (None,) * width)))
+        guard.flush()
+        return out
+
+    return (leg("approx_tuple_estimate", _tuple_kinds(),
+                lambda sk: (int(sk.rows_estimate()),
+                            float(sk.sum_estimate())), tuples, 2),
+            leg("approx_membership_contains", _bloom_kinds(), membership,
+                {lang: blooms.get(lang) for lang in sources}, 2,
+                lambda lang: (sources[lang],)),
+            leg("approx_count_distinct_estimate", CpcUnionSketch,
+                lambda sk: (int(sk.estimate()),), cpcs, 1))
+
+
+def _merged_state(blobs):
+    """The merge of the states ``blobs``; a corrupt state raises, as
+    ``*_combine`` does."""
+    from datasketches_spark_spark.sketches import deserialize_any
+    merged = None
+    for blob in blobs:
+        sk = deserialize_any(bytes(blob))
+        merged = sk if merged is None else merged.merge(sk)
+    return merged
 
 
 def _q34_wire_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1861,15 +1868,10 @@ def _q34_wire_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
     resulting <=10-row state tables run in the driver with the same
     kernels the UDFs use (r19, guide §4.4 — each was a separate
     Python-UDF stage whose fixed overhead dwarfed the sketch math)."""
-    import datasketches_spark_spark as dss
     from datasketches_spark_spark import conf as dconf
     from pyspark.sql import functions as F
-    prev_impl = spark.conf.get(dconf.QUANTILE_IMPL_KEY, None)
-    prev_k = spark.conf.get(dconf.QUANTILE_MERGEABLE_K_KEY, None)
-    spark.conf.set(dconf.QUANTILE_IMPL_KEY, "MERGEABLE")
-    spark.conf.set(dconf.QUANTILE_MERGEABLE_K_KEY, "65536")
-    dss.install(spark)
-    try:
+    with _installed_conf(spark, {dconf.QUANTILE_IMPL_KEY: "MERGEABLE",
+                                 dconf.QUANTILE_MERGEABLE_K_KEY: "65536"}):
         docs = read_table(spark, sf_dir, "documents")
         docs.createOrReplaceTempView("documents")
         # foreign-system simulation: reference-style CPC states per lang
@@ -1973,52 +1975,33 @@ def _q34_wire_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # schemas, so values and dtypes are unchanged. The corpus-sized
         # aggregates (percentile leg, eng/bloom accumulates) stay
         # distributed.
-        from concurrent.futures import ThreadPoolExecutor
         from datasketches_spark_spark.operators import sketch_accumulate
         kll_lazy = sketch_accumulate(
             docs.select(F.col("n_chars").cast("double").alias("v")),
             [], "v", family="kll", k=16, state_col="st")
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_st = pool.submit(states_lazy.collect)
-            f_bs = pool.submit(bstates_lazy.collect)
-            f_kll = pool.submit(kll_lazy.collect)
-            state_rows, bstate_rows = f_st.result(), f_bs.result()
-            (kst,) = f_kll.result()
+        state_rows, bstate_rows, (kst,) = run_concurrently(
+            states_lazy.collect, bstates_lazy.collect, kll_lazy.collect)
         from datasketches_spark_spark.functions.udfs import (
             _bloom_probe, _bloom_state)
         from datasketches_spark_spark.sketches import deserialize_any
         import pandas as pd
-        # per-lang tuple estimates + global union (tuple_est_udf /
-        # combine_udf kernels over the collected states)
-        pl_rows, tmerged = [], None
-        for r in sorted(state_rows, key=lambda r: r.lang):
-            sk = deserialize_any(bytes(r.st))
-            pl_rows.append((r.lang, int(sk.rows_estimate()),
-                            float(sk.sum_estimate())))
-            tmerged = sk if tmerged is None else tmerged.merge(sk)
+        # per-lang tuple, bloom and CPC estimates under the estimate
+        # error rule; the global unions below raise on a corrupt state,
+        # as *_combine does
+        pl_rows, bm_rows, cpc_rows = _q34_per_state_legs(
+            {r.lang: r.st for r in state_rows},
+            {r.lang: r.bs for r in bstate_rows}, dict(states), by_lang)
         per_lang = arrow_local_df(
             spark, pl_rows, "lang string, tup_rows bigint, tup_sum double")
+        tmerged = _merged_state(r.st for r in state_rows)
         glob = arrow_local_df(
             spark, [(int(tmerged.estimate()), int(tmerged.rows_estimate()),
                      float(tmerged.sum_estimate()))],
             "tup_ndv_all bigint, tup_rows_all bigint, tup_sum_all double")
-        # bloom membership legs (membership_contains/combine kernels)
-        blooms = {r.lang: _bloom_state(bytes(r.bs)) for r in bstate_rows}
-        bm_rows = []
-        for lang in sorted(by_lang):
-            srcs = pd.Series(by_lang[lang], dtype=object)
-            hit = _bloom_probe(blooms[lang], srcs, None)
-            fp = _bloom_probe(
-                blooms[lang], srcs.map(lambda s: s + "#none"), None)
-            bm_rows.append((lang, int(min(bool(h) for h in hit)),
-                            int(max(bool(x) for x in fp))))
         bm_per_lang = arrow_local_df(
             spark, bm_rows, "lang string, bm_self bigint, bm_absent bigint")
-        bmerged = None
-        for r in bstate_rows:
-            sk = deserialize_any(bytes(r.bs))
-            bmerged = sk if bmerged is None else bmerged.merge(sk)
-        ub = _bloom_state(bmerged.serialize())
+        ub = _bloom_state(
+            _merged_state(r.bs for r in bstate_rows).serialize())
         uhits = _bloom_probe(
             ub, pd.Series([r.source for r in pairs], dtype=object), None)
         bm_union = arrow_local_df(
@@ -2039,7 +2022,6 @@ def _q34_wire_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # driver work: one state, one py4j heapify.
         from datasketches_spark_spark.compat.datasketches import (
             to_datasketches_state, to_engine_sketch)
-        from datasketches_spark_spark.sketches import deserialize_any
         eng = deserialize_any(bytes(kst.st))
         exported = to_datasketches_state(bytes(kst.st))
         jkll = spark._jvm.org.apache.datasketches.kll.KllFloatsSketch \
@@ -2066,11 +2048,7 @@ def _q34_wire_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # export_datasketches_state execute) in the driver over the
         # bounded states; the per-lang percentile aggregate stays the
         # distributed pass it was.
-        cpc_rows, cmerged = [], None
-        for lang, blob in states:
-            sk = deserialize_any(blob)
-            cpc_rows.append((lang, int(sk.estimate())))
-            cmerged = sk if cmerged is None else cmerged.merge(sk)
+        cmerged = _merged_state(blob for _, blob in states)
         ndv_all = int(cmerged.estimate())
         ndv_rt = int(deserialize_any(
             to_datasketches_state(cmerged.serialize())).estimate())
@@ -2097,14 +2075,6 @@ def _q34_wire_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn("kllx_roundtrip",
                             F.lit(kllx_roundtrip).cast("long"))
                 .orderBy("lang"))
-    finally:
-        for key, prev in ((dconf.QUANTILE_IMPL_KEY, prev_impl),
-                          (dconf.QUANTILE_MERGEABLE_K_KEY, prev_k)):
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        dss.install(spark)
 
 
 def _q35_rank_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2112,14 +2082,9 @@ def _q35_rank_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's quantile+pmf estimate surface). Exact regime: rank =
     exact-weight fraction with value <= x, so DuckDB reproduces it as
     avg(CASE ...) — the same integer count divided by the same n."""
-    import datasketches_spark_spark as dss
     from datasketches_spark_spark import conf as dconf
-    prev_impl = spark.conf.get(dconf.QUANTILE_IMPL_KEY, None)
-    prev_k = spark.conf.get(dconf.QUANTILE_MERGEABLE_K_KEY, None)
-    spark.conf.set(dconf.QUANTILE_IMPL_KEY, "MERGEABLE")
-    spark.conf.set(dconf.QUANTILE_MERGEABLE_K_KEY, "262144")
-    dss.install(spark)
-    try:
+    with _installed_conf(spark, {dconf.QUANTILE_IMPL_KEY: "MERGEABLE",
+                                 dconf.QUANTILE_MERGEABLE_K_KEY: "262144"}):
         from datasketches_spark_spark.functions import (
             approx_percentile_accumulate_weighted)
         li = read_table(spark, sf_dir, "lineitem")
@@ -2158,14 +2123,6 @@ def _q35_rank_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
               FROM _q35_states
             ) ORDER BY l_returnflag
         """)
-    finally:
-        for key, prev in ((dconf.QUANTILE_IMPL_KEY, prev_impl),
-                          (dconf.QUANTILE_MERGEABLE_K_KEY, prev_k)):
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        dss.install(spark)
 
 
 def _q49_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2380,16 +2337,15 @@ def _q52_rollup_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r18 (guide §2.6): the window-leg rollup write and the managed
     # build->refresh chain are independent blocking driver calls; run
-    # the write in a driver thread while build+refresh (which must stay
-    # ordered: overwrite, then append) proceed on this one. Same jobs,
-    # same rows — only the submission overlaps.
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(
-            lambda: qt.write.mode("overwrite").parquet(path))
+    # the write and build+refresh (which must stay ordered: overwrite,
+    # then append) in two driver threads. Same jobs, same rows — only
+    # the submission overlaps.
+    def build_then_refresh():
         mgr.build(ev2.where(F.col("day") < "2024-01-15"))
         mgr.refresh(ev2.where(F.col("day") >= "2024-01-15"))
-        fut.result()
+
+    run_concurrently(lambda: qt.write.mode("overwrite").parquet(path),
+                     build_then_refresh)
     roll = spark.read.parquet(path)
     win = ((F.col("day") >= "2024-01-08") & (F.col("day") < "2024-01-22"))
     refresh = (mgr.estimate(spark, where=win, group_by=["event_type"])
@@ -2597,16 +2553,14 @@ def _q58_streaming_windowed_evict(spark: SparkSession,
                                    k=_QK, evict_after="2 days")
     name = f"q58_sink_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="dss_q58_ckpt_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        await_or_fail(q, 300)
+        with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            q = (out.writeStream.format("memory").queryName(name)
+                 .outputMode("update")
+                 .option("checkpointLocation", ckpt)
+                 .trigger(availableNow=True).start())
+            await_or_fail(q, 300)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     final = spark.sql(f"""
@@ -2707,7 +2661,6 @@ def _q62_error_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged: every state family here is update-order-independent in
     what the legs surface (see each leg's comment), and the two-phase
     machinery is the same one ``sketch_accumulate`` used."""
-    from concurrent.futures import ThreadPoolExecutor
     from datasketches_spark_spark.operators.sketch_agg import (
         sketch_accumulate_multi, state_measure)
     li = read_table(spark, sf_dir, "lineitem")
@@ -2747,12 +2700,9 @@ def _q62_error_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stages leave most cores idle when run back to back — compute them
     # concurrently. Each frame's rows are computed exactly as before;
     # only the job submission overlaps.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_li = pool.submit(li_states_lazy.localCheckpoint)
-        f_ev = pool.submit(ev_states_lazy.localCheckpoint)
-        f_ex = pool.submit(exact_lazy.localCheckpoint)
-        li_states, ev_states, exact = (f_li.result(), f_ev.result(),
-                                       f_ex.result())
+    li_states, ev_states, exact = run_concurrently(
+        li_states_lazy.localCheckpoint, ev_states_lazy.localCheckpoint,
+        exact_lazy.localCheckpoint)
     summ = li_states.select("l_returnflag", "state")
     b = dsf.approx_percentile_bounds("state", 0.95, eps=0.02)
     b0 = dsf.approx_percentile_bounds("state", 0.95)
@@ -2996,16 +2946,14 @@ def _q66_streaming_summary_sink(spark: SparkSession,
     # accumulate exchange ran at the full batch shuffle-partition count
     # (32 near-empty tasks per trigger for a states-per-group result);
     # size it to the group cardinality like q24/q36/q58 already do.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        await_or_fail(writer.trigger(availableNow=True).start(), 300)
-        # localCheckpoint materializes the (tiny, state-per-group)
-        # summary so the sink/source/checkpoint dirs can be removed
-        # before the lazy result is evaluated — no /tmp leak per run
-        summary = spark.read.parquet(sink).localCheckpoint()
+        with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            await_or_fail(writer.trigger(availableNow=True).start(), 300)
+            # localCheckpoint materializes the (tiny, state-per-group)
+            # summary so the sink/source/checkpoint dirs can be removed
+            # before the lazy result is evaluated — no /tmp leak per run
+            summary = spark.read.parquet(sink).localCheckpoint()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(sink, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -13,8 +13,10 @@ division would lose microsecond precision: nanos-since-epoch exceeds
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +61,37 @@ def session_builder(master: str = "local[*]", app: str = "datasketches_spark_spa
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
          .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
     return b
+
+
+@contextlib.contextmanager
+def session_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set the session config ``conf`` for the ``with`` block. On exit,
+    also on an exception, each key gets back its previous value, or is
+    unset if it was unset before the block."""
+    before = spark.conf.getAll
+    prev = {}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+            prev[k] = before.get(k)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def run_concurrently(*fns):
+    """Call each of ``fns`` in its own driver thread and return their
+    results in argument order. Independent blocking driver calls
+    (writes, checkpoints, collects) overlap, so their stages back-fill
+    each other's idle cores. A callable's exception is re-raised once
+    every callable has finished."""
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(fn) for fn in fns]
+        return [f.result() for f in futures]
 
 
 def arrow_local_df(spark: SparkSession, rows, schema: str) -> DataFrame:

@@ -9,8 +9,9 @@ That conversion is dtype-sensitive in ways ``fetchall()`` is not:
   so ``.df()`` renders the column **float64** — ``89`` becomes ``89.0``
   and the value hash diverges from Spark's int64 even when every value
   is numerically identical.  This was the sole cause of the q26 red row
-  in rounds 9-11 and the q21 red row in round 11 (Q26_AUDIT.json proved
-  the Spark bytes were correct at the driver's own gate run).
+  in rounds 9-11 and the q21 red row in round 11 (a q26 self-audit,
+  since removed, proved the Spark bytes were correct at the driver's
+  own gate run).
 * A nullable integer column becomes float64-with-NaN on BOTH sides
   (Spark toPandas does the same), so nullability is only a problem when
   it is one-sided.

@@ -48,6 +48,11 @@ decoding tables are constructed.
 Reference parity note: the reference engine (maropu/datasketches-spark)
 serializes its default distinct-count accumulate states as CPC bytes via
 this exact library (distinctCntSketches.scala:57-66).
+
+Generated, not hand-edited: ``devtools/cpc_extract2.py`` reads the tables
+out of datasketches-java (through ``devtools/cpc_jvm.py``) into
+``cpc_tables_raw.json``, and ``devtools/gen_tables_module.py`` writes
+this module from that JSON. Run both from ``devtools/``.
 """
 
 '''
@@ -97,7 +102,10 @@ COLUMN_PERMUTATIONS_FOR_DECODING = tuple(
     _invert_permutation(p) for p in COLUMN_PERMUTATIONS_FOR_ENCODING)
 '''
 parts.append(deriv)
-with open("/root/repo/datasketches_spark_spark/compat/_cpc_tables.py", "w") as f:
+import os
+repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+with open(os.path.join(repo, "datasketches_spark_spark", "compat",
+                       "_cpc_tables.py"), "w") as f:
     f.write("\n\n".join(parts))
 import subprocess
-print(subprocess.run(["python", "-c", "from datasketches_spark_spark.compat import _cpc_tables as t; print(len(t.LENGTH_LIMITED_UNARY_DECODING_65), len(t.DECODING_TABLES_FOR_HIGH_ENTROPY_BYTE), len(t.ICON_POLYNOMIAL_COEFFICIENTS))"], capture_output=True, text=True, cwd="/root/repo").stdout)
+print(subprocess.run(["python", "-c", "from datasketches_spark_spark.compat import _cpc_tables as t; print(len(t.LENGTH_LIMITED_UNARY_DECODING_65), len(t.DECODING_TABLES_FOR_HIGH_ENTROPY_BYTE), len(t.ICON_POLYNOMIAL_COEFFICIENTS))"], capture_output=True, text=True, cwd=repo).stdout)

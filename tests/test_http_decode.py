@@ -266,8 +266,9 @@ class TestChainPlanPin:
     def test_crawl_chain_zero_exchange(self, spark, tmp_path):
         """read_warc -> http_decode_body -> html_to_text is one
         scan-stage pipeline: binaryFile -> MapInPandas -> Arrow decode
-        -> JVM regexp chain, no Exchange anywhere (the scaleproof_r14
-        plan pin, kept enforceable per-commit here)."""
+        -> JVM regexp chain, no Exchange anywhere (the plan pin of
+        ``devtools/scaleproof.py warc_http_html_chain``, kept
+        enforceable per-commit here)."""
         import os
         from datasketches_spark_spark.functions import (
             html_to_text, http_decode_body)

@@ -6,6 +6,9 @@ Runs every ``__spark_entry__.queries()`` entry on Spark and the matching
 row count, column names, and order-insensitive values (columns sorted by
 name, rows sorted by string repr — approximating the driver's value-hash).
 
+A query that leaves session config changed after its collect fails
+too, naming the keys (compared with ``spark.conf.getAll`` snapshots).
+
 Usage: python verify_local.py [sf_dir] [query_name ...]
        python verify_local.py --repeat [sf_dir] [query_name ...]
 
@@ -48,6 +51,15 @@ def _normalize(cols, rows):
     cols_sorted = [cols[i] for i in order]
     data = sorted(tuple(_norm_cell(r[i]) for i in order) for r in rows)
     return cols_sorted, data
+
+
+def _conf_diff(before, after):
+    """The session config keys whose value differs between two
+    ``spark.conf.getAll`` snapshots, as ``key: before -> after`` (None
+    for unset)."""
+    return [f"{k}: {before.get(k)} -> {after.get(k)}"
+            for k in sorted(before.keys() | after.keys())
+            if before.get(k) != after.get(k)]
 
 
 def _repeat_audit(sf_dir, only):
@@ -121,6 +133,10 @@ def main():
     argv = [a for a in argv if a != "--repeat"]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
+    unknown = sorted(only - set(entrymod.queries()))
+    if unknown:
+        sys.exit(f"unknown query name(s) {unknown}: give full names, "
+                 "such as q16_ngram_topk")
     if repeat:
         _repeat_audit(sf_dir, only)
         return
@@ -140,12 +156,18 @@ def main():
     for name, fn in queries.items():
         if only and name not in only:
             continue
+        conf_before = spark.conf.getAll
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
             scols = sdf.columns
         except Exception as e:
             print(f"FAIL {name}: spark error: {str(e)[:200]}")
+            n_fail += 1
+            continue
+        leaked = _conf_diff(conf_before, spark.conf.getAll)
+        if leaked:
+            print(f"FAIL {name}: session config left changed: {leaked}")
             n_fail += 1
             continue
         sql = oracles.get(name)
