@@ -19,14 +19,13 @@ from .datasketches import (
 )
 
 
-def import_datasketches_state(col, item_type: str = "auto"):
-    """Column fn: DataSketches bytes -> engine state bytes (null -> null).
-
-    Raises on undecodable input (like ``*_combine``): a migration that
-    silently nulls states would corrupt downstream merges.
-    """
+def import_state_udf(item_type: str = "auto"):
+    """Scalar pandas UDF: DataSketches bytes -> engine state bytes (null
+    -> null). Raises on undecodable input (like ``*_combine``): a
+    migration that silently nulls states would corrupt downstream
+    merges."""
     import pandas as pd
-    from pyspark.sql.functions import col as _c, pandas_udf
+    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BinaryType
 
     @pandas_udf(BinaryType())
@@ -36,18 +35,18 @@ def import_datasketches_state(col, item_type: str = "auto"):
                for blob in states]
         return pd.Series(out, dtype=object)
 
-    return conv(_c(col) if isinstance(col, str) else col)
+    return conv
 
 
-def export_datasketches_state(col):
-    """Column fn: engine state bytes -> Apache DataSketches wire bytes
-    (null -> null). Quantile and frequent-items states (exact regime,
-    plus estimation-mode KLL/REQ) and CPC-union states (re-encoded as
-    merged CPC images, byte-identical to ``CpcUnion.getResult()``);
-    raises on non-exportable families so an export job never silently
-    drops states."""
+def export_state_udf():
+    """Scalar pandas UDF: engine state bytes -> Apache DataSketches wire
+    bytes (null -> null). Quantile and frequent-items states (exact
+    regime, plus estimation-mode KLL/REQ) and CPC-union states
+    (re-encoded as merged CPC images, byte-identical to
+    ``CpcUnion.getResult()``); raises on non-exportable families so an
+    export job never silently drops states."""
     import pandas as pd
-    from pyspark.sql.functions import col as _c, pandas_udf
+    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BinaryType
 
     @pandas_udf(BinaryType())
@@ -56,7 +55,24 @@ def export_datasketches_state(col):
                else to_datasketches_state(bytes(blob)) for blob in states]
         return pd.Series(out, dtype=object)
 
-    return conv(_c(col) if isinstance(col, str) else col)
+    return conv
+
+
+def _column(col):
+    from pyspark.sql.functions import col as _c
+    return _c(col) if isinstance(col, str) else col
+
+
+def import_datasketches_state(col, item_type: str = "auto"):
+    """Column fn: DataSketches bytes -> engine state bytes
+    (:func:`import_state_udf`)."""
+    return import_state_udf(item_type)(_column(col))
+
+
+def export_datasketches_state(col):
+    """Column fn: engine state bytes -> Apache DataSketches wire bytes
+    (:func:`export_state_udf`)."""
+    return export_state_udf()(_column(col))
 
 
 __all__ = [

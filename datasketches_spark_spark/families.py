@@ -9,12 +9,16 @@ own. Every consumer builds on this table:
   (``streaming/sketch_stream.py``) fold per-group slices of each batch;
 * the GROUPED_AGG accumulate and direct UDFs (``functions/udfs.py``:
   ``accumulate_udf`` / ``direct_udf``) fold one whole group;
-* ``register.install`` and ``dss.sql`` map the SQL accumulate names to
-  families through ``_ACC_FAMILY``.
+* the SQL function table (``register.SQL_FUNCTIONS``) names a family and
+  its fixed parameters for every SQL accumulate and direct aggregate, and
+  :func:`_resolve_family` fills in the rest from the session's conf, so
+  ``install`` and ``dss.sql`` build identical states.
 
-Adding a family is one constructor here (plus a ``_build_family`` branch) and
-one ``_ACC_FAMILY`` row. This module is a leaf: it imports nothing from
-``functions/`` or ``operators/``.
+Adding a family is one constructor here (plus a ``_build_family`` branch and,
+when it reads conf, a :func:`_resolve_family` branch). Adding an SQL function
+is one ``register.SQL_FUNCTIONS`` row (an accumulate row for a new family)
+and one ``funcdocs.FUNCTION_DOCS`` entry. This module is a leaf: it imports
+nothing from ``functions/`` or ``operators/``.
 """
 
 from __future__ import annotations
@@ -520,58 +524,24 @@ def _build_family(name: str, get) -> _Family:
     raise ValueError(f"unknown sketch family {name!r}")
 
 
-# ------------------------------------------------------- SQL accumulate names
+# ------------------------------------------------------- plan-time parameters
 
-# Every SQL ``*_accumulate*`` name -> (family, params). ``register.install``
-# registers one GROUPED_AGG per row and ``dss.sql`` re-plans the same rows
-# onto the two-phase operator, so both surfaces build identical states.
-_ACC_FAMILY = {
-    "approx_percentile_accumulate": ("quantile", {}),
-    "approx_freqitems_accumulate": ("freq", {}),
-    # conf-dependent: follows distinctCnt.sketchImpl (_resolve_acc_family)
-    "approx_count_distinct_accumulate": (None, {}),
-    "approx_count_distinct_accumulate_theta": ("theta", {}),
-    "approx_count_distinct_accumulate_cpc": ("cpcwire", {}),
-    "approx_count_distinct_accumulate_cpc_long":
-        ("cpcwire", {"item_type": ITEM_LONG}),
-    "approx_count_distinct_accumulate_theta_wire": ("thetawire", {}),
-    "approx_count_distinct_accumulate_theta_wire_long":
-        ("thetawire", {"item_type": ITEM_LONG}),
-    "approx_sample_accumulate": ("reservoir", {"item_type": ITEM_DOUBLE}),
-    "approx_sample_accumulate_long": ("reservoir", {"item_type": ITEM_LONG}),
-    "approx_sample_accumulate_string": ("reservoir", {"item_type": ITEM_STR}),
-    # (value, weight) pair aggregates — two measure input columns
-    "approx_sample_weighted_accumulate":
-        ("wreservoir", {"item_type": ITEM_DOUBLE}),
-    "approx_sample_weighted_accumulate_long":
-        ("wreservoir", {"item_type": ITEM_LONG}),
-    "approx_sample_weighted_accumulate_string":
-        ("wreservoir", {"item_type": ITEM_STR}),
-    # (key, value) per-key-summary aggregates — two measure input columns
-    "approx_tuple_accumulate": ("tuple", {}),
-    "approx_tuple_accumulate_wire": ("aodwire", {}),
-    "approx_tuple_accumulate_wire_long": ("aodwire", {"item_type": ITEM_LONG}),
-    "approx_membership_accumulate": ("bloom", {}),
-    "approx_membership_accumulate_wire": ("bloomwire", {}),
-    "approx_membership_accumulate_wire_long":
-        ("bloomwire", {"item_type": ITEM_LONG}),
-}
-
-
-def _resolve_acc_family(fname: str, spark=None):
-    """(family, params) for an accumulate name, with every conf-dependent
-    parameter read from ``spark``'s conf at plan time."""
-    family, params = _ACC_FAMILY[fname]
-    if family is None:  # distinct accumulate follows the conf impl
-        impl = conf.distinct_impl(spark)
+def _resolve_family(family: str | None, params: dict, spark=None):
+    """(family, params) with every conf-dependent parameter read from
+    ``spark``'s conf at plan time: the form the SQL function table
+    (``register.SQL_FUNCTIONS``) declares a family in. Family None is the
+    distinct count of ``params["impl"]`` (CPC, THETA or HLL), or of the
+    conf's ``distinctCnt.sketchImpl`` when no impl is given."""
+    if family is None:
+        impl = params.get("impl") or conf.distinct_impl(spark)
         if impl == "THETA":
-            family = "theta"
+            family, params = "theta", {}
         else:  # HLL, and the CPC name served by the engine HLL
             family = "hll"
             params = {"lgk": conf.distinct_hll_lgk(spark) if impl == "HLL"
                       else conf.distinct_cpc_lgk(spark)}
     if family == "quantile":
-        impl = conf.quantile_impl(spark)
+        impl = params.get("impl") or conf.quantile_impl(spark)
         params = {"impl": impl, "k": conf.quantile_k(impl, spark)}
     elif family == "freq":
         params = dict(params, max_map_size=conf.freq_max_map_size(spark))

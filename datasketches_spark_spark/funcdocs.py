@@ -1,12 +1,13 @@
 """``DESCRIBE FUNCTION`` metadata for the engine's SQL functions.
 
 The reference registers an ``ExpressionInfo`` usage string with every
-function so SQL users can self-serve docs
-(``/root/reference/src/main/scala/.../shims.scala:38-56``);
+function so SQL users can self-serve docs (``shims.scala:38-56``);
 ``spark.udf.register`` surfaces nothing. This module closes that DX gap
-from Python: after registration, each function's builder is looked up in
-the session's ``FunctionRegistry`` and re-registered UNCHANGED together
-with an enriched ``ExpressionInfo`` — pure py4j, no new execution path.
+from Python: :data:`FUNCTION_DOCS` holds the docs of every row of the SQL
+function table (``register.SQL_FUNCTIONS``), keyed by its name, and after
+registration each function's builder is looked up in the session's
+``FunctionRegistry`` and re-registered UNCHANGED together with an
+enriched ``ExpressionInfo`` — pure py4j, no new execution path.
 The registry is internal API, so the whole pass is best-effort: any
 failure leaves the functions registered and usable, just undocumented
 (a debug log notes why).
@@ -64,8 +65,9 @@ FUNCTION_DOCS: dict[str, tuple[str, str]] = {
         "> SELECT _FUNC_(approx_percentile_accumulate(col), 0.5) "
         "FROM VALUES (0), (1), (2) AS tab(col);\n   1.0"),
     "approx_pmf_estimate": (
-        "_FUNC_(state, numSplits) - Equal-width histogram mass from a "
-        "quantile sketch state: `numSplits` bins over [min, max].",
+        "_FUNC_(state[, numSplits]) - Equal-width histogram mass from a "
+        "quantile sketch state: `numSplits` (default 9) bins over "
+        "[min, max].",
         "> SELECT _FUNC_(approx_percentile_accumulate(col), 2) "
         "FROM VALUES (0), (1), (2), (3) AS tab(col);\n   [0.5,0.5]"),
     "approx_freqitems": (
@@ -154,7 +156,7 @@ FUNCTION_DOCS: dict[str, tuple[str, str]] = {
         "_FUNC_(state[, numStdDev]) - [lower, upper] NDV confidence "
         "bounds from a Theta sketch state.",
         "> SELECT _FUNC_(approx_count_distinct_accumulate(col)) FROM "
-        "VALUES (1), (2) AS tab(col);\n   [2.0, 2.0]"),
+        "VALUES (1), (2) AS tab(col);\n   [2, 2]"),
     "approx_freqitems_maxerr": (
         "_FUNC_(state) - The frequent-items sketch's maximum estimation "
         "error (0 = exact regime).",
@@ -257,13 +259,14 @@ FUNCTION_DOCS: dict[str, tuple[str, str]] = {
         "> SELECT _FUNC_(approx_tuple_accumulate(k, v)).value_sum FROM "
         "VALUES (1, 1.5), (2, 2.5) AS tab(k, v);\n   4.0"),
     "approx_tuple_segment_estimate": (
-        "_FUNC_(state, minCount) - struct(keys, value_sum) for the "
-        "segment of distinct keys with per-key row count >= minCount — "
+        "_FUNC_(state[, minCount]) - struct(keys, value_sum) for the "
+        "segment of distinct keys with per-key row count >= minCount "
+        "(default 1) — "
         "per-key-predicate analytics from the state alone.",
         "> SELECT _FUNC_(approx_tuple_accumulate(k, v), 2).keys FROM "
         "VALUES (1, 1.0), (1, 2.0), (2, 5.0) AS tab(k, v);\n   1"),
     "approx_tuple_bounds": (
-        "_FUNC_(state, numStd) - [lower, upper] distinct-key confidence "
+        "_FUNC_(state[, numStd]) - [lower, upper] distinct-key confidence "
         "bounds from a tuple state (collapses to the exact count while "
         "the state is exact; KMV 1/sqrt(k-2) envelope at saturation).",
         "> SELECT _FUNC_(approx_tuple_accumulate(k, v), 2.0) FROM "
@@ -277,6 +280,126 @@ FUNCTION_DOCS: dict[str, tuple[str, str]] = {
         "like Java's update(long).",
         "> SELECT approx_tuple_estimate(_FUNC_(k, v)).ndv FROM VALUES "
         "('a', 1.0), ('b', 2.0) AS tab(k, v);\n   2"),
+    # --- scalar/array twins (one fixed return type per registered name)
+    "approx_percentile_ex_array": (
+        "_FUNC_(expr, percentages) - approx_percentile_ex at an array of "
+        "percentages; returns an array of percentiles.",
+        "> SELECT _FUNC_(col, array(0.25, 0.75)) FROM VALUES (0), (1), "
+        "(2), (3) AS tab(col);\n   [0.0, 2.0]"),
+    "approx_percentile_kll_array": (
+        "_FUNC_(expr, percentages) - approx_percentile_kll at an array "
+        "of percentages.",
+        "> SELECT _FUNC_(col, array(0.25, 0.75)) FROM VALUES (0), (1), "
+        "(2), (3) AS tab(col);\n   [0.0, 2.0]"),
+    "approx_percentile_req_array": (
+        "_FUNC_(expr, percentages) - approx_percentile_req at an array "
+        "of percentages.",
+        "> SELECT _FUNC_(col, array(0.5, 0.95)) FROM VALUES (0), (1), "
+        "(2), (3) AS tab(col);\n   [1.0, 3.0]"),
+    "approx_percentile_mergeable_array": (
+        "_FUNC_(expr, percentages) - approx_percentile_mergeable at an "
+        "array of percentages.",
+        "> SELECT _FUNC_(col, array(0.25, 0.75)) FROM VALUES (0), (1), "
+        "(2), (3) AS tab(col);\n   [0.0, 2.0]"),
+    "approx_percentile_estimate_array": (
+        "_FUNC_(state, percentages) - Reads the percentiles at an array "
+        "of percentages out of a quantile sketch state.",
+        "> SELECT _FUNC_(approx_percentile_accumulate(col), "
+        "array(0.25, 0.75)) FROM VALUES (0), (1), (2), (3) AS tab(col);"
+        "\n   [0.0, 2.0]"),
+    "approx_rank_estimate": (
+        "_FUNC_(state, value) - The normalized rank of `value` (the "
+        "fraction of the mass <= value) from a quantile sketch state; "
+        "the inverse of approx_percentile_estimate.",
+        "> SELECT _FUNC_(approx_percentile_accumulate(col), 1.0) FROM "
+        "VALUES (0), (1), (2), (3) AS tab(col);\n   0.5"),
+    "approx_cdf_estimate": (
+        "_FUNC_(state, splitPoints) - The cumulative mass at each split "
+        "point, plus a trailing 1.0, from a quantile sketch state.",
+        "> SELECT _FUNC_(approx_percentile_accumulate(col), array(1.0)) "
+        "FROM VALUES (0), (1), (2), (3) AS tab(col);\n   [0.5, 1.0]"),
+    "approx_freqitems_long": (
+        "_FUNC_(expr) - approx_freqitems over BIGINT items: the items "
+        "come back as longs.",
+        "> SELECT _FUNC_(col) FROM VALUES (7), (7), (9) AS tab(col);\n"
+        "   [{7, 2}, {9, 1}]"),
+    "approx_freqitems_estimate_long": (
+        "_FUNC_(state) - approx_freqitems_estimate for a state of BIGINT "
+        "items (one written with item_type='long' by the DataFrame API).",
+        "> SELECT _FUNC_(st) FROM long_item_states;\n   [{7, 2}, {9, 1}]"),
+    "approx_count_distinct_theta": (
+        "_FUNC_(expr) - Approximate distinct count via the Theta (KMV) "
+        "sketch family: exact below its k entries.",
+        "> SELECT _FUNC_(col) FROM VALUES (1), (2), (1) AS tab(col);\n"
+        "   2"),
+    "approx_count_distinct_accumulate_theta": (
+        "_FUNC_(expr) - Aggregates `expr` into a serialized Theta (KMV) "
+        "state, whatever distinctCnt.sketchImpl is; the state the set "
+        "functions (approx_set_*) read.",
+        "> SELECT approx_count_distinct_estimate(_FUNC_(col)) FROM "
+        "VALUES (1), (2), (1) AS tab(col);\n   2"),
+    "approx_count_distinct_accumulate_cpc": (
+        "_FUNC_(expr) - Aggregates `expr` into a GENUINE Apache "
+        "DataSketches CPC wire image (family 16), readable by "
+        "datasketches-java; items hash as UTF-8 strings.",
+        "> SELECT approx_count_distinct_estimate(_FUNC_(col)) FROM "
+        "VALUES ('a'), ('b'), ('a') AS tab(col);\n   2"),
+    "approx_count_distinct_accumulate_cpc_long": (
+        "_FUNC_(expr) - approx_count_distinct_accumulate_cpc hashing "
+        "integral keys as 8-byte longs, like Java's update(long).",
+        "> SELECT approx_count_distinct_estimate(_FUNC_(col)) FROM "
+        "VALUES (1), (2), (1) AS tab(col);\n   2"),
+    "approx_count_distinct_accumulate_theta_wire": (
+        "_FUNC_(expr) - Aggregates `expr` into a GENUINE Apache "
+        "DataSketches compact Theta wire image (family 3), readable by "
+        "datasketches-java; items hash as UTF-8 strings.",
+        "> SELECT approx_count_distinct_estimate(_FUNC_(col)) FROM "
+        "VALUES ('a'), ('b'), ('a') AS tab(col);\n   2"),
+    "approx_count_distinct_accumulate_theta_wire_long": (
+        "_FUNC_(expr) - approx_count_distinct_accumulate_theta_wire "
+        "hashing integral keys as 8-byte longs, like Java's "
+        "update(long).",
+        "> SELECT approx_count_distinct_estimate(_FUNC_(col)) FROM "
+        "VALUES (1), (2), (1) AS tab(col);\n   2"),
+    "approx_sample_accumulate_long": (
+        "_FUNC_(expr) - approx_sample_accumulate over BIGINT items.",
+        "> SELECT approx_sample_estimate_long(_FUNC_(col)) FROM VALUES "
+        "(2), (1) AS tab(col);\n   [1, 2]"),
+    "approx_sample_accumulate_string": (
+        "_FUNC_(expr) - approx_sample_accumulate over STRING items.",
+        "> SELECT approx_sample_estimate_string(_FUNC_(col)) FROM VALUES "
+        "('b'), ('a') AS tab(col);\n   [a, b]"),
+    "approx_sample_weighted_accumulate_long": (
+        "_FUNC_(expr, weight) - approx_sample_weighted_accumulate over "
+        "BIGINT items.",
+        "> SELECT approx_sample_estimate_long(_FUNC_(col, 1.0)) FROM "
+        "VALUES (2), (1) AS tab(col);\n   [1, 2]"),
+    "approx_sample_weighted_accumulate_string": (
+        "_FUNC_(expr, weight) - approx_sample_weighted_accumulate over "
+        "STRING items.",
+        "> SELECT approx_sample_estimate_string(_FUNC_(col, 1.0)) FROM "
+        "VALUES ('b'), ('a') AS tab(col);\n   [a, b]"),
+    "approx_sample_estimate_long": (
+        "_FUNC_(state) - Reads the sampled BIGINT items out of a "
+        "reservoir state.",
+        "> SELECT _FUNC_(approx_sample_accumulate_long(col)) FROM VALUES "
+        "(2), (1) AS tab(col);\n   [1, 2]"),
+    "approx_sample_estimate_string": (
+        "_FUNC_(state) - Reads the sampled STRING items out of a "
+        "reservoir state.",
+        "> SELECT _FUNC_(approx_sample_accumulate_string(col)) FROM "
+        "VALUES ('b'), ('a') AS tab(col);\n   [a, b]"),
+    "approx_tuple_accumulate_wire_long": (
+        "_FUNC_(key, value) - approx_tuple_accumulate_wire hashing "
+        "integral keys as 8-byte longs, like Java's update(long).",
+        "> SELECT approx_tuple_estimate(_FUNC_(k, v)).ndv FROM VALUES "
+        "(1, 1.0), (2, 2.0) AS tab(k, v);\n   2"),
+    "approx_membership_accumulate_wire_long": (
+        "_FUNC_(key) - approx_membership_accumulate_wire hashing integral "
+        "keys as 8-byte longs; probe it with "
+        "approx_membership_contains_long.",
+        "> SELECT approx_membership_contains_long(_FUNC_(k), 7) FROM "
+        "VALUES (7), (9) AS tab(k);\n   true"),
     "import_datasketches_state": (
         "_FUNC_(bytes) - Converts an Apache DataSketches wire state "
         "(KLL/REQ/Doubles/frequent-items/HLL/CPC/Theta) into the "
@@ -293,8 +416,10 @@ FUNCTION_DOCS: dict[str, tuple[str, str]] = {
 
 
 def install_function_docs(spark) -> None:
-    """Attach ``ExpressionInfo`` docs to every documented function that
-    is currently registered. Best-effort over internal API."""
+    """Attach ``ExpressionInfo`` docs to every function of the SQL
+    function table that is currently registered. Best-effort over
+    internal API."""
+    from .register import SQL_FUNCTIONS
     try:
         jvm = spark._jvm
         reg = spark._jsparkSession.sessionState().functionRegistry()
@@ -304,8 +429,9 @@ def install_function_docs(spark) -> None:
     except Exception as e:  # pragma: no cover - depends on Spark internals
         log.debug("DESCRIBE FUNCTION docs unavailable: %s", e)
         return
-    for name, (usage, example) in FUNCTION_DOCS.items():
+    for name in SQL_FUNCTIONS:
         try:
+            usage, example = FUNCTION_DOCS[name]
             ident = mk_ident(name)
             opt = reg.lookupFunctionBuilder(ident)
             if opt.isEmpty():

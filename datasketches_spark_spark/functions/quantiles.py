@@ -176,7 +176,8 @@ def approx_percentile_combine(col) -> Column:
 
 def _percentile_finisher(percentage) -> Finisher:
     ps, multi = validate_percentage(percentage)
-    return Finisher(lambda: quantile_est_udf(conf.quantile_rank_rule(), multi),
+    name = "approx_percentile_estimate" + ("_array" if multi else "")
+    return Finisher(lambda: quantile_est_udf(conf.quantile_rank_rule(), name),
                     ps if multi else ps[0])
 
 

@@ -209,6 +209,19 @@ def _struct_nulls(out: list, return_type) -> list:
     return [null if r is None else r for r in out]
 
 
+class StateSpec(NamedTuple):
+    """The definition of a :func:`state_udf`, which the UDF carries as
+    ``spec``: :class:`Finisher` runs it inside the merge fold, and the
+    SQL surfaces (``register``, ``dss.sql``) validate literal arguments
+    with its ``args``."""
+    name: str
+    return_type: DataType
+    kinds: tuple
+    fn: object
+    args: object
+    states: int
+
+
 def state_udf(name: str, return_type, kinds, fn, states: int = 1, args=None):
     """Scalar: ``states`` binary state columns, then argument columns ->
     ``fn(*sketches, *row_args)`` per row.
@@ -216,10 +229,11 @@ def state_udf(name: str, return_type, kinds, fn, states: int = 1, args=None):
     A null state gives null. Each state decodes with ``deserialize_any``
     and must be one of ``kinds``. ``args(*row_args)``, when given, runs
     first and outside the error guard: it validates the row's arguments
-    (invalid ones raise, reference AnalysisException semantics) and
-    returns the values passed on to ``fn``, or None for a null row.
-    Errors follow :class:`_NullOnError`. The returned UDF carries its
-    definition as ``spec`` for :class:`Finisher`."""
+    (invalid ones raise, reference AnalysisException semantics), fills
+    in the defaults of optional trailing ones, and returns the values
+    passed on to ``fn``, or None for a null row. Errors follow
+    :class:`_NullOnError`. The returned UDF carries its
+    :class:`StateSpec` as ``spec``."""
     guard = _NullOnError(name, kinds, fn)
 
     @pandas_udf(return_type)
@@ -242,7 +256,7 @@ def state_udf(name: str, return_type, kinds, fn, states: int = 1, args=None):
             return pd.DataFrame(out, columns=return_type.names)
         return pd.Series(out, dtype=object)
 
-    est.spec = (name, return_type, kinds, fn, args)
+    est.spec = StateSpec(name, return_type, kinds, fn, args, states)
     return est
 
 
@@ -279,9 +293,10 @@ class Finisher:
     def bind(self) -> "_Bound":
         """This estimate as a finish entry of :func:`combine_fold`: the
         UDF's ``fn`` under its error guard, its arguments bound now."""
-        name, return_type, kinds, fn, args = self.udf().spec
-        bound = self.lits if args is None else args(*self.lits)
-        return _Bound(_NullOnError(name, kinds, fn), bound, return_type)
+        spec = self.udf().spec
+        bound = self.lits if spec.args is None else spec.args(*self.lits)
+        return _Bound(_NullOnError(spec.name, spec.kinds, spec.fn), bound,
+                      spec.return_type)
 
 
 class _Bound(NamedTuple):
@@ -327,9 +342,13 @@ def percentages_arg(name: str, p, multi: bool) -> list[float]:
     function ``name`` (``name_array`` takes the array form)."""
     if _is_null(p):
         raise ValueError(f"{name}: percentage value must not be null")
+    is_array = isinstance(p, (list, tuple, np.ndarray))
     if multi:
+        if not is_array:
+            raise ValueError(f"{name}: the percentage is a scalar — use "
+                             f"{name.removesuffix('_array')}")
         return _named(name, validate_percentage, list(p))[0]
-    if isinstance(p, (list, tuple, np.ndarray)):
+    if is_array:
         raise ValueError(
             f"{name}: the percentage is an array — use {name}_array "
             "(a Python UDF registration cannot overload the scalar and "
@@ -337,11 +356,13 @@ def percentages_arg(name: str, p, multi: bool) -> list[float]:
     return _named(name, validate_percentage, float(p))[0]
 
 
-def quantile_est_udf(rule: str, multi: bool):
-    """Scalar: (state, percentage) -> double, or (state, array of
-    percentages) -> array<double>. Always double-typed, matching the
-    reference (``quantileSketches.scala:601-605``)."""
-    name = "approx_percentile_estimate" + ("_array" if multi else "")
+def quantile_est_udf(rule: str, name: str = "approx_percentile_estimate"):
+    """Scalar: (state, percentage) -> double, or, for a ``name`` ending in
+    ``_array``, (state, array of percentages) -> array<double>. Always
+    double-typed, matching the reference
+    (``quantileSketches.scala:601-605``). ``name`` is the SQL function
+    that errors name."""
+    multi = name.endswith("_array")
     rt = ArrayType(DoubleType(), containsNull=False) if multi else DoubleType()
 
     def est(sk, ps):
@@ -373,7 +394,7 @@ def cdf_est_udf():
 def pmf_est_udf():
     """Scalar: (quantile state, num_splits) -> probability mass over
     ``num_splits`` equal-width bins of [min, max]."""
-    def split_args(n):
+    def split_args(n=9):
         return _named("approx_pmf_estimate", validate_num_splits,
                       None if _is_null(n) else int(n)),
 
@@ -403,8 +424,9 @@ def quantile_bounds_udf(rule: str):
     return state_udf(
         "approx_percentile_bounds", ArrayType(DoubleType(), containsNull=False),
         _QUANTILE, bounds,
-        args=lambda p, e: None if _is_null(p)
-        else (validate_percentage(float(p))[0][0], e))
+        args=lambda p, e=None: None if _is_null(p) else (_named(
+            "approx_percentile_bounds", validate_percentage,
+            float(p))[0][0], e))
 
 
 def ks_distance_udf():
@@ -603,7 +625,7 @@ def distinct_bounds_udf(name: str = "approx_count_distinct_bounds"):
     num_std=2 measured ~98% over 60 trials per family
     (`tests/test_accuracy_bounds.py`)."""
 
-    def std_args(ns):
+    def std_args(ns=2.0):
         ns = 2.0 if _is_null(ns) else float(ns)
         if ns <= 0:
             raise ValueError(f"{name}: num_std must be > 0")
@@ -683,7 +705,7 @@ def tuple_segment_udf():
     return state_udf(
         "approx_tuple_segment_estimate", TUPLE_SEGMENT_TYPE, _tuple_kinds(),
         lambda sk, mc: sk.segment_estimate(min_count=mc),
-        args=lambda mc: (1 if _is_null(mc) else int(mc),))
+        args=lambda mc=1: (1 if _is_null(mc) else int(mc),))
 
 
 def tuple_segment_sum_udf():

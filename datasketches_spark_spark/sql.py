@@ -21,7 +21,11 @@ exactly like ``spark.sql``:
   :func:`~datasketches_spark_spark.operators.sketch_agg.sketch_grouped_agg`
   (``mapInPandas`` partial sketches → state-only shuffle → merge →
   estimate; a ``*_combine``'s input states skip the partial pass and go
-  straight to the merge);
+  straight to the merge). Items are classified by their rows in the SQL
+  function table (``register.SQL_FUNCTIONS``): an accumulate or combine
+  call, a direct aggregate, or an estimate row wrapped around an
+  accumulate or combine call, whose estimate then runs inside the merge
+  fold;
 * select items built from native aggregates (``count``/``sum``/… — or
   ``approx_count_distinct_hll``, which maps to Spark's JVM
   ``hll_sketch_agg`` and already aggregates partially) run as one JVM
@@ -39,9 +43,11 @@ exactly like ``spark.sql``:
   unchanged (the registered pandas-UDF path: correct, raw-row shuffle).
 
 Eager validation (reference ``AnalysisException`` timing,
-``quantileSketches.scala:176-194``): literal percentage / numSplits
-arguments are validated inside ``dss.sql()`` itself, before any job runs,
-with the failing function named in the error.
+``quantileSketches.scala:176-194``): literal arguments (a number,
+``array(...)`` of numbers, or NULL) are validated inside ``dss.sql()``
+itself, before any job runs, by the registered UDF's own ``args``
+validator, with the failing function named in the error; a literal list
+outside the function's signature falls back.
 
 Direct-aggregate typing follows the reference (estimate cast back to the
 input column type, ``quantileSketches.scala:196-211``), which the
@@ -53,21 +59,15 @@ from __future__ import annotations
 import re
 import warnings
 from functools import reduce
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import conf
-from .families import _ACC_FAMILY, _family, _resolve_acc_family
-from .functions.udfs import validate_percentage
-from .operators.sketch_agg import (
-    Measure,
-    distinct_measure,
-    freqitems_measure,
-    percentile_measure,
-    sketch_grouped_agg,
-)
+from .families import _family, _resolve_family
+from .functions.udfs import Finisher
+from .operators.sketch_agg import Measure, sketch_grouped_agg
+from .register import SQL_FUNCTIONS, finish_udf
 from .sources.tables import _footer_schema
 
 
@@ -299,8 +299,10 @@ def _parse_literal_number(text: str) -> float:
     return float(t)
 
 
-def _parse_percentage_literal(text: str):
-    """A literal double or ``array(...)`` of literal doubles."""
+def _parse_literal(text: str):
+    """A literal argument: a number, ``array(...)`` of numbers, or NULL."""
+    if text.strip().upper() == "NULL":
+        return None
     call = _parse_call(text)
     if call and call[0] == "array":
         return [_parse_literal_number(a) for a in _split_top(call[1])]
@@ -309,48 +311,10 @@ def _parse_percentage_literal(text: str):
 
 # ------------------------------------------------------- sketch-agg registry
 
-_QUANTILE_DIRECT = {
-    "approx_percentile_ex": None,
-    "approx_percentile_kll": "KLL",
-    "approx_percentile_req": "REQ",
-    "approx_percentile_mergeable": "MERGEABLE",
-    "approx_percentile_ex_array": None,
-    "approx_percentile_kll_array": "KLL",
-    "approx_percentile_req_array": "REQ",
-    "approx_percentile_mergeable_array": "MERGEABLE",
-}
-_FREQ_DIRECT = {"approx_freqitems": "string", "approx_freqitems_long": "long"}
-_DISTINCT_DIRECT = ("approx_count_distinct_ex", "approx_count_distinct_cpc",
-                    "approx_count_distinct_theta")
-
-# *_combine functions: merge pre-serialized states (family-agnostic wire).
-# Re-planned as state measures (no family): the input states go straight
-# into the one merge fold, which decodes each of them once (the GROUPED_AGG
-# fallback calls Python once per group instead).
-_COMBINE_FNS = {
-    "approx_percentile_combine", "approx_freqitems_combine",
-    "approx_count_distinct_combine", "approx_sample_combine",
-    "approx_tuple_combine", "approx_membership_combine",
-}
-
-_SKETCH_FUNCS = (set(_QUANTILE_DIRECT) | set(_FREQ_DIRECT)
-                 | set(_DISTINCT_DIRECT) | set(_ACC_FAMILY) | _COMBINE_FNS
-                 | {"approx_count_distinct_hll"})
-
-# *_estimate scalar functions that may wrap an accumulate/combine aggregate
-# directly in a select item: estimate(accumulate(col)) IS the direct
-# aggregate shape (partial sketches -> state shuffle -> merge -> decode), so
-# dss.sql re-plans the nesting instead of warning it onto the raw-row path.
-_ESTIMATE_FNS = {
-    "approx_percentile_estimate", "approx_percentile_estimate_array",
-    "approx_pmf_estimate", "approx_rank_estimate", "approx_cdf_estimate",
-    "approx_freqitems_estimate", "approx_freqitems_estimate_long",
-    "approx_count_distinct_estimate",
-    "approx_sample_estimate", "approx_sample_estimate_long",
-    "approx_sample_estimate_string",
-    "approx_tuple_estimate", "approx_tuple_segment_estimate",
-    "approx_membership_estimate", "approx_membership_fpp",
-}
+# the aggregates dss.sql re-plans; an estimate row is re-planned only
+# around one of them
+_SKETCH_FUNCS = {name for name, fn in SQL_FUNCTIONS.items()
+                 if fn.kind in ("accumulate", "combine", "direct")}
 
 # native aggregates that may appear anywhere inside an exact select item
 _EXACT_AGGS = {
@@ -419,217 +383,102 @@ def _classify_item(item: _Item, spark: SparkSession, seq: int) -> None:
         return
 
     call = _parse_call(item.text)
-    if (call is not None and call[0] in _ESTIMATE_FNS
-            and _classify_nested_estimate(item, call, spark, seq)):
-        return
-    if call is None or call[0] not in _SKETCH_FUNCS:
+    fn = SQL_FUNCTIONS.get(call[0]) if call else None
+    if fn is None or fn.kind == "scalar":
         raise _Unsupported(
             f"sketch aggregate nested in a larger expression: {item.text!r}")
-    fname, args_text = call
-    args = _split_top(args_text)
-    if item.alias == item.text:
-        item.alias = f"__dss_{seq}"
-    name = item.alias
-
-    if fname in _QUANTILE_DIRECT:
-        if len(args) != 2:
-            raise _Unsupported(f"{fname} expects (col, percentage)")
-        pct = _parse_percentage_literal(args[1])
-        try:
-            validate_percentage(pct)
-        except ValueError as e:
-            raise ValueError(f"{fname}: {e}") from None
-        item.kind = "sketch"
-        item.measure = (args[0], lambda col: percentile_measure(
-            name, col, pct, impl=_QUANTILE_DIRECT[fname], preserve_type=True))
-        return
-    if fname in _FREQ_DIRECT:
-        if len(args) != 1:
-            raise _Unsupported(f"{fname} expects (col)")
-        item.kind = "sketch"
-        item.measure = (args[0], lambda col: freqitems_measure(
-            name, col, item_type=_FREQ_DIRECT[fname]))
-        return
-    if fname in _DISTINCT_DIRECT or fname == "approx_count_distinct_hll":
-        if len(args) != 1:
-            raise _Unsupported(f"{fname} expects (col)")
-        impl = ("THETA" if fname == "approx_count_distinct_theta"
-                else "HLL" if fname == "approx_count_distinct_hll"
-                else "CPC" if fname == "approx_count_distinct_cpc"
-                else conf.distinct_impl(spark))
-        if impl == "HLL":
-            # Spark's JVM hll_sketch_agg is a TypedImperativeAggregate —
-            # partial/final physics for free; route it with the exact aggs.
-            lgk = conf.distinct_hll_lgk(spark)
-            item.kind = "jvm_col"
-            item.jvm_col = lambda col: F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.expr(col), F.lit(lgk)))
-            item.measure = (args[0], None)
-            return
-        item.kind = "sketch"
-        if impl == "CPC":
-            clgk = conf.distinct_cpc_lgk(spark)
-            item.measure = (args[0], lambda col: distinct_measure(
-                name, col, impl="hll", lgk=clgk))
-        else:
-            item.measure = (args[0], lambda col: distinct_measure(
-                name, col, impl="theta"))
-        return
-    if fname in _ACC_FAMILY:
-        family, params = _resolve_acc_family(fname, spark)
-        want_args = _family(family, **params).ncols
-        if len(args) != want_args:
-            raise _Unsupported(
-                f"{fname} expects {'(col, weight)' if want_args == 2 else '(col)'}")
-        item.kind = "sketch"
-        arg_cols = tuple(args) if want_args == 2 else args[0]
-        item.measure = (arg_cols, lambda col: Measure(
-            name, col, family, lambda c: c, **params))
-        return
-    if fname in _COMBINE_FNS:
-        if len(args) != 1:
-            raise _Unsupported(f"{fname} expects (state)")
-        item.kind = "sketch"
-        item.measure = (args[0], lambda col: Measure(
-            name, col, None, lambda c: c))
-        return
-    raise _Unsupported(f"unhandled sketch function {fname}")
-
-
-def _nested_estimator(fname: str, extra: list[str]):
-    """The finisher of estimate function ``fname`` applied to a merged
-    state, with SQL-literal extra args: the merge fold emits its estimate
-    (``sketch_merge(finish=)``). Returns None when the arg shape is
-    outside the rewrite (the caller falls through to the ordinary
-    unsupported-nesting path). Invalid literals raise eagerly (ValueError),
-    matching direct-aggregate validation timing."""
-    from .functions import distinctcnt as _dc
-    from .functions import freqitems as _fi
-    from .functions import quantiles as _qt
-    from .functions import sampling as _sp
-    from .functions import tuplesketch as _tp
-    from .functions.udfs import (Finisher, bloom_estimate_udf, bloom_fpp_udf,
-                                 tuple_est_udf)
-
-    if fname in ("approx_percentile_estimate",
-                 "approx_percentile_estimate_array"):
-        if len(extra) != 1:
-            return None
-        pct = _parse_percentage_literal(extra[0])
-        # the SQL surface splits scalar vs array by name (register.py):
-        # mirror it, eagerly
-        if fname.endswith("_array"):
-            if not isinstance(pct, list):
-                raise ValueError(
-                    "approx_percentile_estimate_array: the percentage is a "
-                    "scalar — use approx_percentile_estimate")
-        elif isinstance(pct, list):
-            raise ValueError(
-                "approx_percentile_estimate: the percentage is an "
-                "array — use approx_percentile_estimate_array")
-        try:
-            validate_percentage(pct)
-        except ValueError as e:
-            raise ValueError(f"{fname}: {e}") from None
-        return _qt._percentile_finisher(pct)
-    if fname == "approx_pmf_estimate":
-        if len(extra) > 1:
-            return None
-        ns = int(_parse_literal_number(extra[0])) if extra else 9
-        try:
-            return _qt._pmf_finisher(ns)
-        except ValueError as e:
-            raise ValueError(f"{fname}: {e}") from None
-    if fname == "approx_rank_estimate":
-        if len(extra) != 1:
-            return None
-        return _qt._rank_finisher(_parse_literal_number(extra[0]))
-    if fname == "approx_cdf_estimate":
-        if len(extra) != 1:
-            return None
-        call = _parse_call(extra[0])
-        if not call or call[0] != "array":
-            return None
-        pts = [_parse_literal_number(a) for a in _split_top(call[1])]
-        return _qt._cdf_finisher(pts)
-    if fname in ("approx_freqitems_estimate", "approx_freqitems_estimate_long"):
-        if extra:
-            return None
-        it = "long" if fname.endswith("_long") else "string"
-        return _fi._freqitems_finisher(it)
-    if fname == "approx_count_distinct_estimate":
-        if extra:
-            return None
-        return _dc._count_distinct_finisher()
-    if fname in ("approx_sample_estimate", "approx_sample_estimate_long",
-                 "approx_sample_estimate_string"):
-        if extra:
-            return None
-        it = ("long" if fname.endswith("_long")
-              else "string" if fname.endswith("_string") else "double")
-        return _sp._sample_finisher(it)
-    if fname == "approx_tuple_estimate":
-        if extra:
-            return None
-        return Finisher(tuple_est_udf)
-    if fname == "approx_tuple_segment_estimate":
-        if len(extra) > 1:
-            return None
-        mc = int(_parse_literal_number(extra[0])) if extra else 1
-        return _tp._tuple_segment_finisher(mc)
-    if fname in ("approx_membership_estimate", "approx_membership_fpp"):
-        if extra:
-            return None
-        return Finisher(bloom_estimate_udf
-                        if fname == "approx_membership_estimate"
-                        else bloom_fpp_udf)
-    return None
-
-
-def _classify_nested_estimate(item: "_Item", call: tuple[str, str],
-                              spark: SparkSession, seq: int) -> bool:
-    """Re-plan ``*_estimate(*_accumulate(col), lits...)`` /
-    ``*_estimate(*_combine(state), lits...)`` select items onto the
-    measure machinery: the nesting IS the direct-aggregate pattern. An
-    accumulate runs map-side partial sketches -> state-only shuffle ->
-    merge and estimate in one fold; a combine is a state measure (no
-    family), whose input states go straight into that fold, so each is
-    decoded once. Returns False for shapes outside the rewrite; the
-    caller then raises the usual unsupported-nesting error and the query
-    falls back (correct, raw-shuffle)."""
-    fname, args_text = call
-    args = _split_top(args_text)
-    if not args:
-        return False
-    inner = _parse_call(args[0])
-    if inner is None:
-        return False
-    ifn, iargs_text = inner
-    if ifn in _COMBINE_FNS:
-        iargs = _split_top(iargs_text)
-        if len(iargs) != 1:
-            return False
-        family, params = None, {}
-        arg_cols = iargs[0]
-    elif ifn in _ACC_FAMILY:
-        family, params = _resolve_acc_family(ifn, spark)
-        want = _family(family, **params).ncols
-        iargs = _split_top(iargs_text)
-        if len(iargs) != want:
-            return False
-        arg_cols = tuple(iargs) if want == 2 else iargs[0]
+    fname, args = call[0], _split_top(call[1])
+    if fn.kind == "estimate":
+        # estimate(accumulate(col) | combine(state), literals...) IS the
+        # direct-aggregate shape: the merge fold estimates
+        inner = _parse_call(args[0])
+        if inner is None:
+            raise _Unsupported(f"{fname} over no sketch aggregate")
+        family, params, cols, _ = _aggregate_inputs(
+            inner[0], _split_top(inner[1]), spark, ("accumulate", "combine"))
+        lits = args[1:]
     else:
-        return False
-    est = _nested_estimator(fname, args[1:])
-    if est is None:
-        return False
+        family, params, cols, lits = _aggregate_inputs(
+            fname, args, spark, ("accumulate", "combine", "direct"))
     if item.alias == item.text:
         item.alias = f"__dss_{seq}"
     name = item.alias
+
+    if fn.kind == "direct" and _jvm_hll(fn, spark):
+        # Spark's JVM hll_sketch_agg is a TypedImperativeAggregate —
+        # partial/final physics for free; route it with the exact aggs.
+        if lits:
+            raise _Unsupported(f"{fname} expects (col)")
+        lgk = conf.distinct_hll_lgk(spark)
+        item.kind = "jvm_col"
+        item.jvm_col = lambda col: F.hll_sketch_estimate(
+            F.hll_sketch_agg(F.expr(col), F.lit(lgk)))
+        item.measure = (cols, None)
+        return
+    lits = [_parse_literal(t) for t in lits]
+    if (fn.kind == "direct" and lits and isinstance(lits[0], list)
+            and f"{fname}_array" in SQL_FUNCTIONS):
+        # the reference's direct percentile takes both forms under one
+        # name; the registered UDFs split them by return type
+        fname, fn = f"{fname}_array", SQL_FUNCTIONS[f"{fname}_array"]
+    finisher = None if fn.kind in ("accumulate", "combine") \
+        else _finisher(spark, fname, lits)
+    # a direct percentile is cast back to its input column's type
+    # (the reference's createOutputConvertFunc, quantileSketches.scala:196-211)
+    preserve = fn.kind == "direct" and family == "quantile"
+
+    def measure(col):
+        m = Measure(name, col, family, finisher or (lambda c: c), **params)
+        m.preserve_type, m.multi = preserve, fname.endswith("_array")
+        return m
+
     item.kind = "sketch"
-    item.measure = (arg_cols, lambda col: Measure(
-        name, col, family, est, **params))
-    return True
+    item.measure = (cols, measure)
+
+
+def _aggregate_inputs(fname: str, args: list[str], spark: SparkSession,
+                      kinds: tuple[str, ...]):
+    """(family, params, input column text(s), literal argument texts) of
+    the aggregate call ``fname(args...)``, whose row must be of one of
+    ``kinds``. A combine reads one state column with no family; a
+    two-column family's inputs are a pair of texts."""
+    fn = SQL_FUNCTIONS.get(fname)
+    if fn is None or fn.kind not in kinds:
+        raise _Unsupported(f"{fname} is not an aggregate dss.sql re-plans")
+    family, params, ncols = None, {}, 1
+    if fn.family is not None:
+        family, params = _resolve_family(*fn.family, spark)
+        ncols = _family(family, **params).ncols
+    if len(args) < ncols or (fn.kind != "direct" and len(args) > ncols):
+        raise _Unsupported(f"{fname} expects {ncols} input column(s)")
+    return (family, params, tuple(args[:2]) if ncols == 2 else args[0],
+            args[ncols:])
+
+
+def _jvm_hll(fn, spark: SparkSession) -> bool:
+    """A direct distinct count at impl HLL: ``approx_count_distinct_hll``,
+    and ``approx_count_distinct_ex`` under ``distinctCnt.sketchImpl=HLL``."""
+    family, params = fn.family
+    return family is None and \
+        (params.get("impl") or conf.distinct_impl(spark)) == "HLL"
+
+
+def _finisher(spark: SparkSession, fname: str, lits: list) -> Finisher:
+    """The estimate of the estimate or direct function ``fname`` with
+    literal arguments ``lits``, run inside the merge fold. Its ``args``
+    validator is the registered UDF's own, run here, before any job: an
+    invalid literal raises ValueError naming ``fname``, and a literal
+    list outside the function's signature falls back."""
+    udf = finish_udf(spark, fname)
+    args = udf.spec.args
+    if args is None and lits:
+        raise _Unsupported(f"{fname} takes no literal arguments")
+    try:
+        if args is not None:
+            args(*lits)
+    except TypeError as e:  # literals outside the function's signature
+        raise _Unsupported(str(e)) from None
+    return Finisher(lambda: udf, *lits)
 
 
 # ----------------------------------------------------------------- execution

@@ -1,5 +1,10 @@
-from cpc_jvm import gateway
 import json
+import os
+
+from cpc_jvm import gateway
+
+OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                   "cpc_tables_raw.json")
 gw = gateway()
 jvm = gw.jvm
 
@@ -25,7 +30,7 @@ out = dict(llu_enc=llu_enc,
            col_perm_enc=col_perm_enc,
            icon_deg=icon_deg, icon_num=icon_num, icon_tsz=icon_tsz,
            icon_coef=icon_coef)
-with open("cpc_tables_raw.json", "w") as f:
+with open(OUT, "w") as f:
     json.dump(out, f)
 print("llu", len(llu_enc), llu_enc[:10])
 print("enc_tables", len(enc_tables), "x", len(enc_tables[0]))

@@ -116,9 +116,11 @@ for lgk_a, lgk_b, na, nb in upairs:
     })
 
 import os
-os.makedirs("/root/repo/tests/data", exist_ok=True)
-with open("/root/repo/tests/data/cpc_fixtures.json", "w") as f:
+out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   "tests", "data", "cpc_fixtures.json")
+os.makedirs(os.path.dirname(out), exist_ok=True)
+with open(out, "w") as f:
     json.dump(fixtures, f)
 print("sketch fixtures:", len(fixtures["sketches"]))
 print("unions:", len(fixtures["unions"]))
-print("size:", os.path.getsize("/root/repo/tests/data/cpc_fixtures.json"))
+print("size:", os.path.getsize(out))

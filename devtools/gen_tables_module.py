@@ -1,5 +1,8 @@
 import json
-with open("cpc_tables_raw.json") as f:
+import os
+
+here = os.path.dirname(os.path.abspath(__file__))
+with open(os.path.join(here, "cpc_tables_raw.json")) as f:
     raw = json.load(f)
 
 def fmt_ints(name, vals, per_line=12):
@@ -52,7 +55,7 @@ this exact library (distinctCntSketches.scala:57-66).
 Generated, not hand-edited: ``devtools/cpc_extract2.py`` reads the tables
 out of datasketches-java (through ``devtools/cpc_jvm.py``) into
 ``cpc_tables_raw.json``, and ``devtools/gen_tables_module.py`` writes
-this module from that JSON. Run both from ``devtools/``.
+this module from that JSON, each from any working directory.
 """
 
 '''
@@ -102,8 +105,7 @@ COLUMN_PERMUTATIONS_FOR_DECODING = tuple(
     _invert_permutation(p) for p in COLUMN_PERMUTATIONS_FOR_ENCODING)
 '''
 parts.append(deriv)
-import os
-repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+repo = os.path.dirname(here)
 with open(os.path.join(repo, "datasketches_spark_spark", "compat",
                        "_cpc_tables.py"), "w") as f:
     f.write("\n\n".join(parts))

@@ -1,7 +1,8 @@
-"""Contract tests generated from the family table (``families.py``).
+"""Contract tests generated from the SQL function table
+(``register.SQL_FUNCTIONS``).
 
-Every SQL accumulate name in ``_ACC_FAMILY`` gets the same checks, so a
-new family row is covered with no new test code:
+Every accumulate row gets the same checks, so a new family row is covered
+with no new test code:
 
 * the registered GROUPED_AGG UDF, ``dss.sql``'s two-phase rewrite and
   ``sketch_accumulate`` build byte-identical states (one row path);
@@ -10,6 +11,10 @@ new family row is covered with no new test code:
   and every direct aggregate ``dss.sql`` re-plans gives the registered
   UDF's null for it;
 * ``install()`` registers no accumulate name outside the table.
+
+Every single-state estimate row re-plans in ``dss.sql`` around its
+accumulate, with and without its optional argument, and matches
+``spark.sql``.
 
 Plus the state-reader contract over everything ``install()`` registers:
 corrupt bytes make every estimate return null with one warning naming
@@ -22,19 +27,25 @@ import warnings
 
 import pandas as pd
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.udf import UDFRegistration
 
 import datasketches_spark_spark as dss
 from datasketches_spark_spark import functions as dsf
-from datasketches_spark_spark.families import (
-    _ACC_FAMILY, _family, _resolve_acc_family)
+from datasketches_spark_spark.families import _family, _resolve_family
 from datasketches_spark_spark.operators import (
     distinct_measure, freqitems_measure, percentile_measure, sketch_accumulate,
     sketch_grouped_agg, state_measure)
-from datasketches_spark_spark.sql import (
-    _COMBINE_FNS, _DISTINCT_DIRECT, _FREQ_DIRECT, _QUANTILE_DIRECT,
-    SketchSqlFallbackWarning)
+from datasketches_spark_spark.register import SQL_FUNCTIONS
+from datasketches_spark_spark.sql import SketchSqlFallbackWarning
+
+
+def _names(kind):
+    return sorted(n for n, f in SQL_FUNCTIONS.items() if f.kind == kind)
+
+
+_ACCUMULATE = _names("accumulate")
 
 # Small groups inside every family's exact regime; the null lands in the
 # same Arrow batch, so the bigint column reaches Python as float64.
@@ -69,7 +80,7 @@ def registered(spark):
 
 
 def _call(name, spark):
-    family, params = _resolve_acc_family(name, spark)
+    family, params = _resolve_family(*SQL_FUNCTIONS[name].family, spark)
     ncols = _family(family, **params).ncols
     return family, params, ("v", "w") if ncols == 2 else "v"
 
@@ -78,7 +89,7 @@ def _states(rows):
     return {r.g: None if r.state is None else bytes(r.state) for r in rows}
 
 
-@pytest.mark.parametrize("name", sorted(_ACC_FAMILY))
+@pytest.mark.parametrize("name", sorted(_ACCUMULATE))
 def test_accumulate_paths_build_identical_states(spark, installed, name):
     family, params, cols = _call(name, spark)
     args = ", ".join(cols) if isinstance(cols, tuple) else cols
@@ -94,7 +105,7 @@ def test_accumulate_paths_build_identical_states(spark, installed, name):
     assert via_rewrite == via_family, name
 
 
-@pytest.mark.parametrize("name", sorted(_ACC_FAMILY))
+@pytest.mark.parametrize("name", sorted(_ACCUMULATE))
 def test_all_null_group_accumulates_to_null(spark, installed, name):
     _, _, cols = _call(name, spark)
     args = ("CAST(NULL AS BIGINT), 1.0" if isinstance(cols, tuple)
@@ -113,7 +124,7 @@ def null_group(spark, installed):
     return df
 
 
-@pytest.mark.parametrize("name", sorted(_ACC_FAMILY))
+@pytest.mark.parametrize("name", sorted(_ACCUMULATE))
 def test_all_null_group_state_is_null_on_every_path(spark, null_group,
                                                     name):
     family, params, cols = _call(name, spark)
@@ -132,11 +143,16 @@ def test_all_null_group_state_is_null_on_every_path(spark, null_group,
         .collect()) == via_udf
 
 
+# the literal argument of each direct row, by the estimate it finishes with
+_DIRECT_ARGS = {"approx_percentile_estimate": ", 0.5",
+                "approx_percentile_estimate_array": ", array(0.25, 0.75)"}
+
+
 def _direct_calls():
-    for n in sorted(_QUANTILE_DIRECT):
-        yield f"{n}(v, {'array(0.25, 0.75)' if n.endswith('_array') else 0.5})"
-    for n in sorted(_FREQ_DIRECT) + sorted(_DISTINCT_DIRECT):
-        yield f"{n}(v)"
+    for n in _names("direct"):
+        # dss.sql runs it as the JVM hll_sketch_agg, which counts 0 here
+        if n != "approx_count_distinct_hll":
+            yield f"{n}(v{_DIRECT_ARGS.get(SQL_FUNCTIONS[n].finish, '')})"
 
 
 # the operator measure that each of these direct aggregates is
@@ -204,7 +220,7 @@ def test_states_is_not_a_family():
 
 def test_every_registered_accumulate_is_in_the_table(registered):
     acc = {n for n in registered if "_accumulate" in n}
-    assert acc == set(_ACC_FAMILY)
+    assert acc == set(_ACCUMULATE)
 
 
 def test_reservoir_string_renders_like_the_family(spark, installed):
@@ -246,17 +262,22 @@ _READER_ARGS = {
     "approx_tuple_bounds": (2.0,),
     "approx_tuple_segment_estimate": (1,),
 }
-_TWO_STATE_READERS = {"approx_ks_distance", "approx_join_size",
-                      "approx_set_jaccard", "approx_set_intersection",
-                      "approx_set_difference"}
-_READERS = sorted({
-    *_READER_ARGS, *_TWO_STATE_READERS,
-    "approx_freqitems_estimate", "approx_freqitems_estimate_long",
-    "approx_freqitems_maxerr", "approx_count_distinct_estimate",
-    "approx_sample_estimate", "approx_sample_estimate_long",
-    "approx_sample_estimate_string", "approx_sample_stream_size",
-    "approx_tuple_estimate", "approx_membership_estimate",
-    "approx_membership_fpp"})
+
+
+def _reader_states():
+    """name -> state count of every state reader: the table's estimate and
+    scalar rows whose UDF is a ``state_udf`` (it carries a ``spec``)."""
+    out = {}
+    for name, fn in SQL_FUNCTIONS.items():
+        if fn.kind in ("estimate", "scalar"):
+            spec = getattr(fn.build(None, name), "spec", None)
+            if spec is not None:
+                out[name] = spec.states
+    return out
+
+
+_READER_STATES = _reader_states()
+_READERS = sorted(_READER_STATES)
 
 
 def test_reader_list_covers_every_registered_estimate(registered):
@@ -267,7 +288,7 @@ def test_reader_list_covers_every_registered_estimate(registered):
 @pytest.mark.parametrize("name", _READERS)
 def test_corrupt_state_estimate_is_null_and_logged_once(registered, caplog,
                                                         name):
-    states = 2 if name in _TWO_STATE_READERS else 1
+    states = _READER_STATES[name]
     cols = [pd.Series([b"\x00junk-state"])] * states + \
         [pd.Series([a]) for a in _READER_ARGS.get(name, ())]
     with caplog.at_level(logging.WARNING,
@@ -281,7 +302,94 @@ def test_corrupt_state_estimate_is_null_and_logged_once(registered, caplog,
     assert warned[0].getMessage().startswith(f"{name}:"), name
 
 
-@pytest.mark.parametrize("name", sorted(_COMBINE_FNS))
+@pytest.mark.parametrize("name", _names("combine"))
 def test_corrupt_state_combine_raises(registered, name):
     with pytest.raises(Exception):
         registered[name].func(pd.Series([b"\x00junk-state"]))
+
+
+# The state each single-state estimate row reads in the query below, and
+# its literal-argument variants: without and with the optional argument,
+# for a function that has one.
+_ESTIMATE_CALLS = {
+    "approx_percentile_estimate": ("approx_percentile_accumulate(v)",
+                                   [", 0.5"]),
+    "approx_percentile_estimate_array": ("approx_percentile_accumulate(v)",
+                                         [", array(0.25, 0.75)"]),
+    "approx_pmf_estimate": ("approx_percentile_accumulate(v)", ["", ", 4"]),
+    "approx_rank_estimate": ("approx_percentile_accumulate(v)", [", 17"]),
+    "approx_cdf_estimate": ("approx_percentile_accumulate(v)",
+                            [", array(5.0, 20.0)"]),
+    "approx_percentile_bounds": ("approx_percentile_accumulate(v)",
+                                 [", 0.5", ", 0.5, 0.1"]),
+    "approx_freqitems_estimate": ("approx_freqitems_accumulate(v)", [""]),
+    # SQL has no long-item freq accumulate: combine DataFrame-API states
+    "approx_freqitems_estimate_long": ("approx_freqitems_combine(lst)", [""]),
+    "approx_freqitems_maxerr": ("approx_freqitems_accumulate(v)", [""]),
+    "approx_count_distinct_estimate": (
+        "approx_count_distinct_accumulate(v)", [""]),
+    "approx_count_distinct_bounds": ("approx_count_distinct_accumulate(v)",
+                                     ["", ", 3.0"]),
+    "approx_sample_estimate": ("approx_sample_accumulate(v)", [""]),
+    "approx_sample_estimate_long": ("approx_sample_accumulate_long(v)", [""]),
+    "approx_sample_estimate_string": ("approx_sample_accumulate_string(v)",
+                                      [""]),
+    "approx_sample_stream_size": ("approx_sample_accumulate(v)", [""]),
+    "approx_tuple_estimate": ("approx_tuple_accumulate(v, w)", [""]),
+    "approx_tuple_segment_estimate": ("approx_tuple_accumulate(v, w)",
+                                      ["", ", 2"]),
+    "approx_tuple_bounds": ("approx_tuple_accumulate(v, w)", ["", ", 3.0"]),
+    "approx_membership_estimate": ("approx_membership_accumulate(v)", [""]),
+    "approx_membership_fpp": ("approx_membership_accumulate(v)", [""]),
+}
+
+
+def _estimate_calls():
+    for name in _names("estimate"):
+        inner, variants = _ESTIMATE_CALLS[name]
+        for lits in variants:
+            yield f"{name}({inner}{lits})"
+
+
+@pytest.fixture(scope="module")
+def estimate_table(spark, installed):
+    """``t_family_table`` plus ``lst``: each row's state of long freq
+    items, written by the DataFrame API."""
+    installed.withColumn("lst", dsf.approx_freqitems_accumulate(
+        "v", item_type="long").over(Window.partitionBy("g", "v"))) \
+        .createOrReplaceTempView("t_family_estimates")
+
+
+@pytest.mark.parametrize("call", list(_estimate_calls()))
+def test_estimate_rows_replan_and_match_spark_sql(spark, estimate_table,
+                                                  call):
+    query = f"SELECT g, {call} AS e FROM t_family_estimates GROUP BY g"
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", SketchSqlFallbackWarning)
+        df = dss.sql(spark, query)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    assert "ArrowEvalPython" not in plan, call
+    want = {r.g: r.e for r in spark.sql(query).collect()}
+    assert {r.g: r.e for r in df.collect()} == want, call
+
+
+def test_spark_sql_fills_optional_arguments(spark, installed):
+    """``spark.sql`` gives a trailing optional argument its default, as
+    ``dss.sql`` does."""
+    (row,) = spark.sql(
+        "SELECT approx_pmf_estimate(approx_percentile_accumulate(v)) AS p, "
+        "approx_tuple_segment_estimate(approx_tuple_accumulate(v, w)) AS s "
+        "FROM t_family_table").collect()
+    assert len(row.p) == 9
+    assert row.s.keys == 4
+
+
+def test_array_estimate_rejects_a_scalar_percentage(spark, installed):
+    query = ("SELECT approx_percentile_estimate_array("
+             "approx_percentile_accumulate(v), 0.5) AS p FROM t_family_table")
+    match = "the percentage is a scalar — use approx_percentile_estimate"
+    with pytest.raises(Exception, match=match):
+        spark.sql(query).collect()
+    with pytest.raises(ValueError, match=match):
+        dss.sql(spark, query)

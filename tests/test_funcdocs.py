@@ -5,6 +5,7 @@ import pytest
 
 import datasketches_spark_spark as dss
 from datasketches_spark_spark.funcdocs import FUNCTION_DOCS
+from datasketches_spark_spark.register import SQL_FUNCTIONS
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -41,3 +42,13 @@ def test_all_docs_point_at_registered_functions(spark):
         if f"Usage: {name}(" not in text:
             missing.append(name)
     assert not missing, f"undocumented after install: {missing}"
+
+
+def test_every_table_row_is_documented(spark):
+    undocumented = []
+    for name in SQL_FUNCTIONS:
+        text = "\n".join(r[0] for r in spark.sql(
+            f"DESCRIBE FUNCTION EXTENDED {name}").collect())
+        if f"Usage: {name}(" not in text or "Extended Usage:" not in text:
+            undocumented.append(name)
+    assert not undocumented, f"no DESCRIBE FUNCTION docs: {undocumented}"
